@@ -55,25 +55,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry callables, each wrapped to apply the engine's runtime
-    session tuning first: the driver owns its own SparkSession, and an
-    untuned one (200 default shuffle partitions → 200 near-empty tasks
-    per Exchange at verification scale, 200 state stores per stateful
-    streaming query) multiplies every query's fixed cost — the round-4
-    correctness artifact ran out of budget at 50/79 queries largely on
-    that overhead.  tune() only sets runtime-mutable confs and changes
-    no results."""
+    """Registry callables; each already applies session.tune() to the
+    caller's session before it builds its plan (queries._tuned)."""
     from newscrawler_spark.queries import QUERIES
-    from newscrawler_spark.session import tune
 
-    def _tuned(fn: Callable[[SparkSession, str], DataFrame]):
-        def g(spark: SparkSession, sf_dir: str) -> DataFrame:
-            tune(spark)
-            return fn(spark, sf_dir)
-
-        return g
-
-    return {k: _tuned(v) for k, v in QUERIES.items()}
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

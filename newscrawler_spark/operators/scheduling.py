@@ -171,8 +171,8 @@ def budget_gate(
     # domain, partition-parallel) — re-sorting it twice costs well under
     # a second of executor time, while the checkpoint it replaced cost
     # 2-4 s of serial DRIVER plan-compile every round (toRdd runs the
-    # full Catalyst pipeline per checkpoint; measured via the
-    # SPARK_GRAFT_ROUND_TIMING plan marks).  The sharded `pre` frame
+    # full Catalyst pipeline per checkpoint; measured with per-step
+    # timers around the round's plan build).  The sharded `pre` frame
     # stays materialized: its stage-1 window runs over the whole
     # unbounded candidate set.
     eligible = ranked.filter(F.col("rank") <= F.col("__eff_cap")).drop(

@@ -6,7 +6,6 @@
     → bloom probe + exact anti-join (J4)  [prune, then confirm]
     → robots gate (broadcast)             [deny → quarantine, seen]
     → budget gate (A5/A6)                 [rank ≤ cap; rest deferred]
-    → salt + repartition (skew)           [fetch locality]
     → fetch (U3)                          [fixture join or mapInPandas]
     → extract (U1, pandas UDF)            [interleaved spans]
     → validate (F3)                       [empty/invalid → quarantine]
@@ -27,7 +26,6 @@ config) — discovered rows get seq = md5_64(url), so two cluster sizes
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -49,7 +47,6 @@ class RoundConfig:
     n_buckets: int = 64
     m_bits: int = 1 << 20
     n_partitions: int = 32
-    salt_factor: int = 8
     max_depth: int = 10
     # URL-seen sidecar kind: "bloom" (OR-mergeable bitsets) or "cuckoo"
     # (deletable fingerprint tables, operators/cuckoo.py).  Prune-only
@@ -78,6 +75,13 @@ class RoundConfig:
     # reproduces the uninterrupted run bit-identically
     adaptive_budgets: bool = False
     trap_min_urls: int = 100
+
+    def __post_init__(self) -> None:
+        # seen_filter doubles as the sidecar's catalog table name
+        if self.seen_filter not in ("bloom", "cuckoo"):
+            raise ValueError(
+                f"seen_filter must be 'bloom' or 'cuckoo', got {self.seen_filter!r}"
+            )
 
 
 @dataclass
@@ -143,26 +147,6 @@ def run_round(
 ) -> RoundResult:
     spark = frontier.sparkSession
 
-    # fine-grained driver-time attribution for the plan-construction
-    # phase (same env var as the scheduler's stage timing): plan build
-    # is the round's serial Amdahl term, so knowing WHICH sub-step
-    # grows is what makes it optimizable
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _timing = bool(_os.environ.get("SPARK_GRAFT_ROUND_TIMING"))
-    _marks: list = [_time.time()]
-
-    def _m(label: str) -> None:
-        if _timing:
-            now = _time.time()
-            print(
-                f"      [plan {round_no}] {label}: {now - _marks[0]:.2f}s",
-                file=_sys.stderr,
-            )
-            _marks[0] = now
-
     # The round's outputs (docs, seen, quarantine, order, next frontier)
     # all fan out of a few pivotal frames; without materialization each
     # delta write re-executes the whole chain (measured 5x fetch+extract
@@ -181,24 +165,9 @@ def run_round(
     # ContextCleaner once the round's references are dropped.
     persisted: list = []
     persisted_heavy: list = []
-    overlap = os.environ.get("SPARK_GRAFT_BG_MATERIALIZE", "1") != "0"
-    # Checkpoint block format: "ser" stores lz4-compressed serialized
-    # rows (python StorageLevel.MEMORY_AND_DISK has deserialized=False;
-    # spark.rdd.compress=true in session.py supplies the lz4), default
-    # the JVM-native deserialized InternalRows.  The ser hypothesis —
-    # trade decompress CPU for DRAM traffic on the round's text-heavy
-    # frames — was MEASURED NEGATIVE in this JVM: JavaSerializer churn
-    # put the checkpoint-materialization stage at 84% GC time (event-log
-    # audit, 32 threads) with steady throughput a wash vs deser in the
-    # same window.  Knob kept so the A/B is reproducible.
-    _ckpt_level = None
-    if os.environ.get("SPARK_GRAFT_CKPT_LEVEL", "deser") == "ser":
-        from pyspark import StorageLevel as _SL
-
-        _ckpt_level = _SL.MEMORY_AND_DISK
 
     def _p(df: DataFrame, heavy: bool = False) -> DataFrame:
-        df = df.localCheckpoint(eager=False, storageLevel=_ckpt_level)
+        df = df.localCheckpoint(eager=False)
         (persisted_heavy if heavy else persisted).append(df)
         # overlap materialization with downstream plan compiles: each
         # checkpoint's toRdd costs 2-4 s of serial DRIVER Catalyst time
@@ -211,10 +180,10 @@ def run_round(
         # compile time — determinism is untouched, and the crawl-swap
         # bit-identity tests assert it).  Errors are swallowed: the
         # same lineage re-raises in the foreground write if real.
-        # Gate: SPARK_GRAFT_BG_MATERIALIZE=0 disables the overlap (A/B
-        # benchmarking + safety valve on busy shared drivers).
-        if not overlap:
-            return df
+        # Measured at 4 cores (perfbench crawl_polite, 10 alternating
+        # pairs): without the thread, end-to-end throughput, steady
+        # throughput and round time were each worse in 9 of 10 pairs
+        # (medians -6.7 %, -2.9 %, +9.4 %).
         from pyspark import InheritableThread
 
         def _materialize(d: DataFrame = df) -> None:
@@ -243,7 +212,6 @@ def run_round(
             .select("domain")
         )
     cand = dedup_within_round(cand)
-    _m("identity+dedup")
 
     # 3. seen-set anti-join (bloom prune + exact) over ALL candidates —
     # one probe pass; the supported/unsupported split happens after
@@ -258,7 +226,6 @@ def run_round(
                 cand, url_seen, sidecar, conf.n_buckets, conf.m_bits
             )
     cand = _p(cand)
-    _m("seen probe + checkpoint")
 
     # unsupported-platform rows are terminal (extractor has no dialect —
     # mirrors detect_platform → None → error, extractor.py:56-73)
@@ -278,7 +245,6 @@ def run_round(
 
     # 5. budget gate → (eligible, deferred); ranked frame materialized
     eligible, deferred = budget_gate(allowed, budgets, persist_fn=_p)
-    _m("robots + budget gate")
 
     # 6. fetch + extract.  Partitioning for the fetch is the FETCHER's
     # concern: HttpFetcher salts by (domain, salt) for politeness
@@ -308,7 +274,6 @@ def run_round(
             eligible, platform_config_df(spark), boot_config
         )
     fetched = fetcher.fetch(eligible, size_hint_rows=fetch_size_hint)
-    _m("fetch plan")
 
     from ..functions.extract import extract_udf
 
@@ -328,7 +293,6 @@ def run_round(
         heavy=True,  # the docs write's input — released at commit, after
         # every lighter frame (see RoundResult.unpersist_light)
     )
-    _m("extract + checkpoint")
     # SLIM twin of the extracted checkpoint: everything the round_log
     # and next-frontier consumers need — which is NOT the span text.
     # localCheckpoint blocks are row-based InternalRows, so a consumer
@@ -348,7 +312,6 @@ def run_round(
             F.size("ex.spans").alias("n_spans"),
         )
     )
-    _m("slim checkpoint")
     ok = extracted.filter(F.col("status") == 200)
     valid = ok.filter(
         F.col("ex.error").isNull()
@@ -489,7 +452,6 @@ def run_round(
     frontier_next = deferred.select(*FRONTIER_COLS).unionByName(
         discovered.select(*FRONTIER_COLS)
     )
-    _m("log + frontier_next")
 
     return RoundResult(
         docs=docs,

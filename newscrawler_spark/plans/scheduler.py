@@ -15,6 +15,8 @@ latest sidecar instead of rescanning 10^10 seen rows.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.seen import build_bloom, merge_bloom
@@ -129,22 +131,6 @@ def crawl(
     # otherwise read GBs on one node)
     BUDGET_LOCAL_MAX_ROWS = 5_000_000
 
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _timing = bool(_os.environ.get("SPARK_GRAFT_ROUND_TIMING"))
-
-    def _t(round_no, label, fn):
-        t0 = _time.time()
-        out = fn()
-        if _timing:
-            print(
-                f"    [round {round_no}] {label}: {_time.time() - t0:.2f}s",
-                file=_sys.stderr,
-            )
-        return out
-
     # Deferred-commit pipeline: round N's docs write (its biggest delta,
     # needed by nothing round N+1 compiles against) runs on a background
     # thread UNDER round N+1's serial driver work (Catalyst analysis +
@@ -164,10 +150,10 @@ def crawl(
         if pending is None:
             return
         p, pending = pending, None
-        p["counters"]["docs"] = _t(p["round_no"], "join docs write", p["join"])
+        p["counters"]["docs"] = p["join"]()
         if final:
             # no later round overlapped the write tail — attribute it
-            p["counters"]["wall_sec"] = round(_time.time() - p["t_round"], 3)
+            p["counters"]["wall_sec"] = round(time.time() - p["t_round"], 3)
         catalog.write_metrics_row(p["round_no"], p["counters"])
         catalog.commit_round(p["round_no"], p["counters"])
         p["result"].unpersist()
@@ -175,7 +161,7 @@ def crawl(
 
     start = catalog.last_round + 1
     for round_no in range(start, max_rounds):
-        t_round = _time.time()
+        t_round = time.time()
         # committed counters already know if the frontier drained — no
         # isEmpty() job needed except for the un-counted seed round; an
         # uncommitted pending round's counters live in memory
@@ -200,13 +186,12 @@ def crawl(
         url_seen = catalog.read_table(spark, "url_seen", upto_round=round_no - 1)
         # seen-filter sidecar (bloom bitsets or cuckoo fingerprint
         # tables — same per-bucket delta lifecycle either way)
-        sidecar_table = "bloom" if conf.seen_filter == "bloom" else "cuckoo"
         sidecar_schema = (
             _schema.BLOOM if conf.seen_filter == "bloom" else _schema.CUCKOO
         )
         sidecar = (
             spark.read.schema(sidecar_schema).parquet(
-                catalog.delta_path(sidecar_table, round_no - 1)
+                catalog.delta_path(conf.seen_filter, round_no - 1)
             )
             if round_no > 0
             else None
@@ -235,10 +220,10 @@ def crawl(
         if robots_fetcher is not None:
             from ..sources.robots import fetch_robots
 
-            doms, new_rules = _t(round_no, "fetch robots", lambda: fetch_robots(
+            doms, new_rules = fetch_robots(
                 frontier, robots_fetcher, agent=robots_agent,
                 exclude=robots_done,
-            ))
+            )
             robots_done.update(doms)
             live_robots_rows.extend(new_rules)
             if live_robots_rows:
@@ -246,12 +231,12 @@ def crawl(
                     spark.createDataFrame(live_robots_rows, _schema.ROBOTS)
                 )
 
-        result: RoundResult = _t(round_no, "plan round", lambda: run_round(
+        result: RoundResult = run_round(
             frontier, url_seen, sidecar, budgets_round, robots_round, fetcher,
             round_no, conf,
             fetch_size_hint=(prev or {}).get("frontier_next"),
             boot_config=boot_cfg,
-        ))
+        )
 
         # the previous round's backgrounded docs write ran under this
         # round's plan compile; join + commit it before any write job
@@ -267,10 +252,8 @@ def crawl(
         # budget_state — 5, down from 8; the metrics row is written
         # driver-side (pyarrow), and per-table counts ride on the two
         # big writes as Observations.
-        log_counts = _t(round_no, "write round_log", lambda: catalog.write_round_log(result.round_log, round_no))
-        n_next = _t(round_no, "write frontier", lambda: catalog.write_delta(
-            result.frontier_next, "frontier", round_no + 1
-        ))
+        log_counts = catalog.write_round_log(result.round_log, round_no)
+        n_next = catalog.write_delta(result.frontier_next, "frontier", round_no + 1)
 
         from pyspark.sql import functions as F
 
@@ -283,11 +266,9 @@ def crawl(
         prev_round = round_no - 1 if round_no > 0 else None
         if conf.seen_filter == "cuckoo":
             if log_counts["seen"] <= BUDGET_LOCAL_MAX_ROWS:
-                _t(round_no, "write cuckoo (local)", lambda: (
-                    catalog.write_cuckoo_local(
-                        round_no, prev_round, conf.cuckoo_capacity
-                    )
-                ))
+                catalog.write_cuckoo_local(
+                    round_no, prev_round, conf.cuckoo_capacity
+                )
             else:
                 from ..operators.cuckoo import build_cuckoo, merge_cuckoo
 
@@ -299,15 +280,9 @@ def crawl(
                     if sidecar is None
                     else merge_cuckoo(sidecar, seen_round, conf.cuckoo_capacity)
                 )
-                _t(round_no, "write cuckoo", lambda: catalog.write_delta(
-                    new_side, "cuckoo", round_no
-                ))
+                catalog.write_delta(new_side, "cuckoo", round_no)
         elif log_counts["seen"] <= BUDGET_LOCAL_MAX_ROWS:
-            _t(round_no, "write bloom (local)", lambda: catalog.write_bloom_local(
-                round_no,
-                prev_round,
-                conf.m_bits,
-            ))
+            catalog.write_bloom_local(round_no, prev_round, conf.m_bits)
         else:
             seen_round = log_round.filter(F.col("kind") == "seen").select(
                 "url_hash", "bucket"
@@ -317,7 +292,7 @@ def crawl(
                 if sidecar is None
                 else merge_bloom(sidecar, seen_round, conf.n_buckets, conf.m_bits)
             )
-            _t(round_no, "write bloom", lambda: catalog.write_delta(new_bloom, "bloom", round_no))
+            catalog.write_delta(new_bloom, "bloom", round_no)
 
         # optional per-round incremental dedup: this round's docs delta
         # vs the accumulated corpus index (the 100 TB pipeline's
@@ -330,9 +305,7 @@ def crawl(
         n_docs = None
         n_neardup = None
         if conf.dedup_docs:
-            n_docs = _t(round_no, "write docs", lambda: catalog.write_delta(
-                result.docs, "docs", round_no
-            ))
+            n_docs = catalog.write_delta(result.docs, "docs", round_no)
         if conf.dedup_docs and n_docs > 0:
             from ..operators.dedup import doc_text, incremental_neardup
 
@@ -357,15 +330,9 @@ def crawl(
                 bucket_cap=conf.dedup_bucket_cap,
                 persist_fn=lambda df: df.localCheckpoint(eager=False),
             )
-            n_neardup = _t(round_no, "write neardup", lambda: catalog.write_delta(
-                dd["matches"], "neardup", round_no
-            ))
-            _t(round_no, "write dedup_index", lambda: catalog.write_delta(
-                dd["index_delta"], "dedup_index", round_no
-            ))
-            _t(round_no, "write dedup_sigs", lambda: catalog.write_delta(
-                dd["sigs_delta"], "dedup_sigs", round_no
-            ))
+            n_neardup = catalog.write_delta(dd["matches"], "neardup", round_no)
+            catalog.write_delta(dd["index_delta"], "dedup_index", round_no)
+            catalog.write_delta(dd["sigs_delta"], "dedup_sigs", round_no)
             for df in (dd["index_delta"], dd["sigs_delta"]):
                 df.unpersist()
 
@@ -375,7 +342,7 @@ def crawl(
             "new_seen": log_counts["seen"],
             "quarantined": log_counts["quarantine"],
             "frontier_next": n_next,
-            "wall_sec": round(_time.time() - t_round, 3),
+            "wall_sec": round(time.time() - t_round, 3),
         }
         if n_neardup is not None:
             counters["neardup_matches"] = n_neardup
@@ -386,16 +353,14 @@ def crawl(
         from ..operators.scheduling import budget_accounting
 
         if log_counts["order"] <= BUDGET_LOCAL_MAX_ROWS:
-            _t(round_no, "write budget_state (local)", lambda: (
-                catalog.write_budget_state_row_local(round_no, budget_rows)
-            ))
+            catalog.write_budget_state_row_local(round_no, budget_rows)
         else:
             scheduled = log_round.filter(F.col("kind") == "order").select("domain")
-            _t(round_no, "write budget_state", lambda: catalog.write_delta(
+            catalog.write_delta(
                 budget_accounting(budgets_round, scheduled, round_no),
                 "budget_state",
                 round_no,
-            ))
+            )
 
         if conf.adaptive_budgets:
             # AIMD update: this round's fetch outcomes → next round's
@@ -433,9 +398,7 @@ def crawl(
                 )
                 .select("domain", "capacity", "window_s", "reset_ts")
             )
-            _t(round_no, "write budgets (adaptive)", lambda: catalog.write_delta(
-                nxt, "budgets", round_no
-            ))
+            catalog.write_delta(nxt, "budgets", round_no)
             # read the delta back (truncates lineage — identical to what
             # a resume at round_no+1 would read) and re-collect the
             # KB-scale row cache
@@ -453,7 +416,7 @@ def crawl(
             # docs already on disk (dedup mode) — commit inline
             catalog.write_metrics_row(round_no, counters)
             catalog.commit_round(round_no, counters)
-            _t(round_no, "unpersist", result.unpersist)
+            result.unpersist()
             totals[round_no] = counters
         else:
             # spawn the docs write LAST (all foreground writes done) so

@@ -12,6 +12,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem(cores: int) -> str:
+    """3 GB per core, capped at 48 GB and at 40 % of MemAvailable: the
+    heap is pinned and pre-touched at JVM start (see get_spark), so it
+    must fit in the memory the machine has free."""
+    mb = min(3 * 1024 * cores, 48 * 1024)
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    mb = min(mb, int(line.split()[1]) * 4 // 10 // 1024)
+                    break
+    except OSError:
+        pass  # no /proc: the per-core rule alone
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = "newscrawler_spark",
     cores: int | None = None,
@@ -31,9 +47,7 @@ def get_spark(
         shuffle_partitions = max(8, 2 * cores)
     # resolved once so -Xms below always equals -Xmx, even when the
     # caller overrides the heap via SPARK_DRIVER_MEM or extra_conf
-    driver_mem = os.environ.get(
-        "SPARK_DRIVER_MEM", f"{min(48, max(16, 3 * cores))}g"
-    )
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(cores)
     if extra_conf and "spark.driver.memory" in extra_conf:
         driver_mem = extra_conf["spark.driver.memory"]
 
@@ -73,8 +87,7 @@ def get_spark(
         # threads — a real 8-core executor host gets 8.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_GC",
+            (
                 f"-XX:+UseParallelGC -XX:ParallelGCThreads={cores} "
                 # -Xms = -Xmx: never expand the heap at runtime (see the
                 # driver.memory note — expansion page-faults measured as
@@ -89,7 +102,7 @@ def get_spark(
                 # Alternatives measured WORSE on the same matrix:
                 # -Xmn8g 231 s (young too small at this alloc rate),
                 # G1+pretouch 192 s (pause-target GC taxes throughput).
-                "-XX:+AlwaysPreTouch",
+                "-XX:+AlwaysPreTouch"
             ),
         )
         .config("spark.ui.enabled", "false")
@@ -114,11 +127,12 @@ def get_spark(
         # keeps plans ~KB-sized with no semantic change (tune() below has
         # the measurements)
         .config("spark.sql.constraintPropagation.enabled", "false")
-        # lz4 serialized-RDD blocks: only consulted by _SER storage
-        # levels (the round-checkpoint knob below); shuffle/broadcast
-        # compression are separate confs and already default-on.  Text-
-        # heavy checkpoint rows compress ~5x, trading abundant CPU for
-        # the scarce resource at high thread counts — memory bandwidth
+        # lz4 serialized-RDD blocks: consulted only by serialized
+        # storage levels — FixtureFetcher persists its page corpus at
+        # Python's MEMORY_AND_DISK, which is serialized; shuffle and
+        # broadcast compression are separate confs, already default-on.
+        # Text-heavy rows compress ~5x, trading abundant CPU for the
+        # scarce resource at high thread counts — memory bandwidth
         .config("spark.rdd.compress", "true")
     )
     # benchmarking escape hatch: JSON dict of session confs applied

@@ -5,6 +5,5 @@ from newscrawler_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8,
-                  extra_conf={"spark.driver.memory": "16g"})
+    s = get_spark("tests", cores=8, shuffle_partitions=8)
     yield s

@@ -15,7 +15,7 @@ from newscrawler_spark.synth import synth_budgets, synth_frontier, synth_pages, 
 N_SEEDS = 120
 N_PAGES = 800
 MAX_ROUNDS = 4
-CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8, salt_factor=4)
+CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8)
 
 
 @pytest.fixture(scope="module")
@@ -172,8 +172,7 @@ def test_crawl_with_cuckoo_filter_identical(spark, world, engine_result,
     cat2 = Catalog(tmp_path_factory.mktemp("crawl_cuckoo"))
     seed_frontier(cat2, seeds)
     conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                       salt_factor=4, seen_filter="cuckoo",
-                       cuckoo_capacity=2048)
+                       seen_filter="cuckoo", cuckoo_capacity=2048)
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
           max_rounds=MAX_ROUNDS, conf=conf)
 
@@ -200,6 +199,13 @@ def test_crawl_with_cuckoo_filter_identical(spark, world, engine_result,
     )
 
 
+def test_unknown_seen_filter_rejected():
+    """A seen_filter outside {bloom, cuckoo} fails at construction, not
+    at round 1 on a missing sidecar path."""
+    with pytest.raises(ValueError, match="seen_filter"):
+        RoundConfig(seen_filter="cukoo")
+
+
 def test_per_round_incremental_dedup(spark, world, tmp_path_factory):
     """conf.dedup_docs=True: each round's docs are probed against the
     accumulated corpus LSH index; the union of the per-round neardup
@@ -211,7 +217,7 @@ def test_per_round_incremental_dedup(spark, world, tmp_path_factory):
     cat = Catalog(tmp_path_factory.mktemp("crawl_dedup"))
     seed_frontier(cat, seeds)
     conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                       salt_factor=4, dedup_docs=True, dedup_min_common=3)
+                       dedup_docs=True, dedup_min_common=3)
     totals = crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
                    max_rounds=MAX_ROUNDS, conf=conf)
     assert any("neardup_matches" in c for c in totals.values())

@@ -276,7 +276,7 @@ def test_live_robots_loop_end_to_end(spark, tmp_path, monkeypatch):
 
         cat = Catalog(tmp_path / "live_robots")
         seed_frontier(cat, seeds)
-        conf = RoundConfig(n_buckets=4, m_bits=1 << 12, n_partitions=2, salt_factor=2)
+        conf = RoundConfig(n_buckets=4, m_bits=1 << 12, n_partitions=2)
         fetcher = HttpFetcher(
             max_attempts=2, wait_s=0.02, timeout_s=2.0, n_partitions=2, salt_factor=2
         )
@@ -363,7 +363,7 @@ def test_live_crawl_discovers_frontier(spark, tmp_path, monkeypatch):
 
         cat = Catalog(tmp_path / "live_crawl")
         seed_frontier(cat, seeds)
-        conf = RoundConfig(n_buckets=4, m_bits=1 << 12, n_partitions=2, salt_factor=2)
+        conf = RoundConfig(n_buckets=4, m_bits=1 << 12, n_partitions=2)
         fetcher = HttpFetcher(
             max_attempts=2, wait_s=0.02, timeout_s=2.0, n_partitions=2, salt_factor=2
         )

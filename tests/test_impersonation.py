@@ -126,7 +126,7 @@ def test_round_plan_attaches_config_for_impersonating_fetcher(spark):
     )
     budgets = spark.createDataFrame([], schema.BUDGETS)
     robots = spark.createDataFrame([], schema.ROBOTS)
-    conf = RoundConfig(n_buckets=4, m_bits=1 << 12, n_partitions=2, salt_factor=2)
+    conf = RoundConfig(n_buckets=4, m_bits=1 << 12, n_partitions=2)
 
     imp = CurlCffiStyleFetcher()
     result = run_round(frontier, None, None, budgets, robots, imp, 0, conf)
