@@ -195,17 +195,30 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
 def _pages_fixture(spark, n_pages: int) -> str:
     """Materialize the deterministic synthetic web ONCE per page count
     and share it across every crawl/stream/extract measurement in the
-    bench run (it is a pure function of n_pages, identical at any core
-    count).  r4's bench re-synthesized and re-wrote the same 1.6M-page
-    fixture ~9 times — several hundred seconds of pure setup inside
-    the driver's budget."""
+    bench run (it is a pure function of n_pages and the synth code,
+    identical at any core count).  r4's bench re-synthesized and
+    re-wrote the same 1.6M-page fixture ~9 times — several hundred
+    seconds of pure setup inside the driver's budget.
+
+    The cache key includes a sha256 of synth.py, so an edited generator
+    never reuses stale pages; the fixture is written to a temp dir and
+    renamed into place, so a killed write never looks complete."""
+    import hashlib
+
     from newscrawler_spark import synth
 
+    with open(synth.__file__, "rb") as f:
+        code = hashlib.sha256(f.read()).hexdigest()[:16]
     path = os.path.join(
-        tempfile.gettempdir(), f"ncs_bench_pages_{n_pages}"
+        tempfile.gettempdir(), f"ncs_bench_pages_{n_pages}_{code}"
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        synth.synth_pages(spark, n_pages).write.mode("overwrite").parquet(path)
+    if not os.path.isdir(path):
+        tmp = f"{path}.tmp{os.getpid()}"
+        synth.synth_pages(spark, n_pages).write.mode("overwrite").parquet(tmp)
+        try:
+            os.replace(tmp, path)
+        except OSError:  # a concurrent run renamed its copy first
+            shutil.rmtree(tmp, ignore_errors=True)
     return path
 
 

@@ -1,11 +1,15 @@
 """J4 (variant) — partitioned cuckoo-filter URL-seen prune.
 
-The north star names a "bloom/cuckoo URL-seen filter"; ``seen.py`` is
-the bloom half, this is the cuckoo half.  Same contract: the filter is
-*prune-only* — a negative is definitive (no false negatives), a
-positive goes to the exact anti-join — so swapping it for the bloom
-sidecar cannot change any result, only the pruned fraction.  What the
-cuckoo variant adds over bloom:
+The north star names a "bloom/cuckoo URL-seen filter".  This module
+holds the cuckoo kind's per-bucket kernels — ``fold_bucket`` and
+``probe_bucket``, registered in ``seen.SEEN_KINDS`` — plus the
+cuckoo-only ``delete_cuckoo``; the probe plan and the two folds that
+run the kernels are shared with bloom (``seen.filter_unseen``,
+``seen.fold_sidecar``, ``Catalog.write_cuckoo_local``).  Same contract
+as bloom: the filter is *prune-only* — a negative is definitive (no
+false negatives), a positive goes to the exact anti-join — so swapping
+it for the bloom sidecar cannot change any result, only the pruned
+fraction.  What the cuckoo variant adds over bloom:
 
   * **deletion** — a fingerprint can be removed, so "un-seeing" a URL
     (forced re-crawl of a quarantined/stale page, the reference's
@@ -20,7 +24,7 @@ Layout (mirrors the bloom sidecar): one row per hash-partition bucket
 ``n_rows x CUCKOO_SLOTS`` array of 16-bit fingerprints (0 = empty
 slot) and ``stash`` is the exact overflow list.  Buckets partition by
 ``pmod(xxhash64(canonical_url), n_buckets)`` — identical to url_seen's
-layout, so build/merge/probe are all co-partitioned cogroups.
+layout, so fold, probe and delete are all co-partitioned cogroups.
 
 Insertion is BULK-VECTORIZED (no per-row Python): each round bin-sorts
 the pending fingerprints by target bucket-row, ranks them within equal
@@ -40,7 +44,7 @@ catalog tracks exact n_items per bucket); a saturated bucket is
 rebuilt from url_seen — the same maintenance a saturated bloom needs.
 
 Scale: at 10^10 URLs with n_buckets ~4k, each bucket holds ~2.4M keys
-→ a ~12 MB fingerprint table per bucket, built/merged/probed by one
+→ a ~12 MB fingerprint table per bucket, folded/probed by one
 vectorized numpy pass inside a cogroup — the same
 co-partitioned-sidecar shape as the bloom path, never a broadcast of
 the whole filter.
@@ -51,17 +55,14 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..schema import CUCKOO
 
 CUCKOO_SLOTS = 4           # fingerprint slots per table row
 TARGET_LOAD = 0.4          # sizing: slots_total * load >= capacity
 MAX_PLACE_ROUNDS = 8       # i1, i2, then re-tries; leftovers -> stash
 _FP_SEED = np.uint64(0x9E3779B97F4A7C15)  # splitmix64 increment
 _ALT_MULT = np.uint64(0x5BD1E995)         # MurmurHash2 multiplier
-
-CUCKOO_SCHEMA = (
-    "bucket int, table binary, n_rows int, stash array<long>, n_items bigint"
-)
 
 
 def _fingerprints(hashes: np.ndarray) -> np.ndarray:
@@ -205,91 +206,43 @@ def _delete_from_table(
     return removed
 
 
-def _emit(bucket: int, table: np.ndarray, stash: list, n_items: int) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "bucket": [bucket],
-            "table": [table.tobytes()],
-            "n_rows": [table.shape[0]],
-            "stash": [list(stash)],
-            "n_items": [n_items],
-        }
-    )
-
-
-def _load(row: pd.Series) -> tuple[np.ndarray, list]:
+def _load(row) -> tuple[np.ndarray, list]:
     table = (
         np.frombuffer(row["table"], dtype=np.uint16)
         .reshape(int(row["n_rows"]), CUCKOO_SLOTS)
         .copy()
     )
-    return table, list(row["stash"])
+    stash = row["stash"]
+    return table, [] if stash is None else [int(h) for h in stash]
 
 
-def build_cuckoo(
-    url_seen: DataFrame, n_buckets: int, capacity_per_bucket: int
-) -> DataFrame:
-    """Per-bucket cuckoo tables from a url_seen table (url_hash, bucket)."""
-
-    def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        # sorted: table layout becomes a pure function of the hash SET,
-        # so two cluster sizes (or local-vs-distributed folds) write
-        # byte-identical sidecars — same discipline as the bloom OR
-        hashes = np.sort(pdf["url_hash"].to_numpy())
-        table = np.zeros(
-            (_size_rows(max(capacity_per_bucket, len(hashes))), CUCKOO_SLOTS),
-            dtype=np.uint16,
-        )
-        overflow = _bulk_insert(table, hashes)
-        stash = [int(hashes[i]) for i in overflow]
-        return _emit(int(pdf["bucket"].iloc[0]), table, stash, len(pdf))
-
-    return (
-        url_seen.select("bucket", "url_hash")
-        .groupBy("bucket")
-        .applyInPandas(per_bucket, schema=CUCKOO_SCHEMA)
-    )
+def _payload(table: np.ndarray, stash: list, n_items: int) -> dict:
+    return {
+        "table": table.tobytes(),
+        "n_rows": table.shape[0],
+        "stash": stash,
+        "n_items": n_items,
+    }
 
 
-def merge_cuckoo(
-    cuckoo: DataFrame, new_seen: DataFrame, capacity_per_bucket: int = 0
-) -> DataFrame:
-    """Insert a round's new hashes into the existing per-bucket tables
-    (incremental URL-seen merge, cuckoo flavor) — a co-partitioned
-    cogroup; each bucket's table crosses the wire once."""
+def fold_bucket(prior, hashes: np.ndarray, capacity_per_bucket: int) -> dict:
+    """One bucket's sidecar row after inserting ``hashes`` (sorted) into
+    ``prior`` — or into a fresh table sized for the larger of the
+    capacity and the batch when the bucket has no prior row."""
+    if prior is None:
+        rows = _size_rows(max(capacity_per_bucket, len(hashes)))
+        table, stash = np.zeros((rows, CUCKOO_SLOTS), dtype=np.uint16), []
+        n_items = 0
+    else:
+        table, stash = _load(prior)
+        n_items = int(prior["n_items"])
+    stash.extend(int(hashes[i]) for i in _bulk_insert(table, hashes))
+    return _payload(table, stash, n_items + len(hashes))
 
-    def merge(ndf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
-        # sorted for byte-determinism (see build_cuckoo)
-        hashes = (
-            np.sort(ndf["url_hash"].to_numpy())
-            if len(ndf)
-            else np.empty(0, np.int64)
-        )
-        if len(cdf) == 0:
-            table = np.zeros(
-                (
-                    _size_rows(max(capacity_per_bucket, len(hashes))),
-                    CUCKOO_SLOTS,
-                ),
-                dtype=np.uint16,
-            )
-            prior = 0
-            stash: list = []
-            bucket = int(ndf["bucket"].iloc[0])
-        else:
-            table, stash = _load(cdf.iloc[0])
-            prior = int(cdf["n_items"].iloc[0])
-            bucket = int(cdf["bucket"].iloc[0])
-        overflow = _bulk_insert(table, hashes)
-        stash.extend(int(hashes[i]) for i in overflow)
-        return _emit(bucket, table, stash, prior + len(hashes))
 
-    return (
-        new_seen.select("bucket", "url_hash")
-        .groupBy("bucket")
-        .cogroup(cuckoo.groupBy("bucket"))
-        .applyInPandas(merge, schema=CUCKOO_SCHEMA)
-    )
+def probe_bucket(hashes: np.ndarray, row) -> np.ndarray:
+    table, stash = _load(row)
+    return _probe_table(hashes, table, np.asarray(stash, dtype=np.int64))
 
 
 def delete_cuckoo(cuckoo: DataFrame, removals: DataFrame) -> DataFrame:
@@ -301,60 +254,20 @@ def delete_cuckoo(cuckoo: DataFrame, removals: DataFrame) -> DataFrame:
 
     def drop(rdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
         if len(cdf) == 0:
-            return pd.DataFrame(
-                {c: [] for c in ["bucket", "table", "n_rows", "stash", "n_items"]}
-            )
-        table, stash = _load(cdf.iloc[0])
-        n_items = int(cdf["n_items"].iloc[0])
+            return pd.DataFrame({c: [] for c in CUCKOO.fieldNames()})
+        row = cdf.iloc[0]
+        table, stash = _load(row)
         removed = (
             _delete_from_table(table, stash, rdf["url_hash"].to_numpy())
             if len(rdf)
             else 0
         )
-        return _emit(
-            int(cdf["bucket"].iloc[0]), table, stash, n_items - removed
-        )
+        payload = _payload(table, stash, int(row["n_items"]) - removed)
+        return pd.DataFrame([{"bucket": int(row["bucket"]), **payload}])
 
     return (
         removals.select("bucket", "url_hash")
         .groupBy("bucket")
         .cogroup(cuckoo.groupBy("bucket"))
-        .applyInPandas(drop, schema=CUCKOO_SCHEMA)
+        .applyInPandas(drop, schema=CUCKOO)
     )
-
-
-def filter_unseen_cuckoo(
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    cuckoo: DataFrame,
-    n_buckets: int,
-) -> DataFrame:
-    """Drop-in for seen.filter_unseen with the cuckoo sidecar: slim
-    cogroup probe emits the maybe-seen minority, exact semi/anti joins
-    confirm — identical single-pass plan shape (see seen.py:123-139),
-    identical results by construction."""
-    cand = candidates.withColumn(
-        "url_hash", F.xxhash64("canonical_url")
-    ).withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int"))
-
-    def probe(cdf: pd.DataFrame, fdf: pd.DataFrame) -> pd.DataFrame:
-        if len(fdf) == 0:
-            return cdf.iloc[0:0][["bucket", "url_hash"]]
-        table, stash = _load(fdf.iloc[0])
-        hit = _probe_table(
-            cdf["url_hash"].to_numpy(), table, np.asarray(stash, dtype=np.int64)
-        )
-        return cdf[["bucket", "url_hash"]][hit]
-
-    slim = cand.select("bucket", "url_hash")
-    maybe = (
-        slim.groupBy("bucket")
-        .cogroup(cuckoo.select("bucket", "table", "n_rows", "stash").groupBy("bucket"))
-        .applyInPandas(probe, schema="bucket int, url_hash bigint")
-    )
-    confirmed_seen = maybe.join(
-        url_seen.select("bucket", "url_hash"), ["bucket", "url_hash"], "left_semi"
-    )
-    return cand.join(
-        confirmed_seen, ["bucket", "url_hash"], "left_anti"
-    ).drop("url_hash", "bucket")

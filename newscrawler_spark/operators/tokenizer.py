@@ -152,8 +152,9 @@ def train_bpe(
     pre-round count (for conflict-skipped orderings batched merge
     choice may diverge from classic — that is the documented trade).
 
-    ``stats`` (optional dict) receives {"rounds": r, "jobs": r} for
-    job-count accounting in tests/benchmarks.
+    ``stats`` (optional dict) receives {"rounds": r}, the number of
+    candidate-ranking rounds (one collect each), for job-count
+    accounting in tests/benchmarks.
     """
     spark = docs.sparkSession
     wc = word_counts(docs, text_col).withColumn("s", _initial_sentinel())

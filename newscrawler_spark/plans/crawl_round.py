@@ -3,7 +3,7 @@
   frontier_n
     → canonicalize (X1/F1/F2)            [staged JVM exprs]
     → within-round first-wins dedup       [window over canonical_url]
-    → bloom probe + exact anti-join (J4)  [prune, then confirm]
+    → seen probe + exact anti-join (J4)   [prune, then confirm]
     → robots gate (broadcast)             [deny → quarantine, seen]
     → budget gate (A5/A6)                 [rank ≤ cap; rest deferred]
     → fetch (U3)                          [fixture join or mapInPandas]
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..canonical import with_url_identity
 from ..operators.scheduling import apply_robots, budget_gate, dedup_within_round
-from ..operators.seen import filter_unseen
+from ..operators.seen import SEEN_KINDS, filter_unseen
 from ..xhash import md5_64
 
 FRONTIER_COLS = [
@@ -48,9 +48,10 @@ class RoundConfig:
     m_bits: int = 1 << 20
     n_partitions: int = 32
     max_depth: int = 10
-    # URL-seen sidecar kind: "bloom" (OR-mergeable bitsets) or "cuckoo"
-    # (deletable fingerprint tables, operators/cuckoo.py).  Prune-only
-    # either way — crawl results are identical by construction (tested).
+    # URL-seen sidecar kind, a key of operators.seen.SEEN_KINDS: "bloom"
+    # (OR-mergeable bitsets) or "cuckoo" (deletable fingerprint tables,
+    # operators/cuckoo.py).  Prune-only either way — crawl results are
+    # identical by construction (tested).
     seen_filter: str = "bloom"
     # cuckoo sizing: fingerprint slots reserved per hash bucket
     cuckoo_capacity: int = 1 << 16
@@ -78,9 +79,10 @@ class RoundConfig:
 
     def __post_init__(self) -> None:
         # seen_filter doubles as the sidecar's catalog table name
-        if self.seen_filter not in ("bloom", "cuckoo"):
+        if self.seen_filter not in SEEN_KINDS:
             raise ValueError(
-                f"seen_filter must be 'bloom' or 'cuckoo', got {self.seen_filter!r}"
+                f"seen_filter must be one of {sorted(SEEN_KINDS)}, "
+                f"got {self.seen_filter!r}"
             )
 
 
@@ -92,7 +94,6 @@ class RoundResult:
     # `round` is carried by the delta path, not a data column)
     round_log: DataFrame
     frontier_next: DataFrame
-    counters: dict  # filled by the scheduler after actions run
     persisted: list = None  # frames to unpersist after the round commits
     # the extracted frame — the round's heaviest blocks and the ONLY
     # checkpoint the (backgroundable) docs write still reads after the
@@ -213,18 +214,13 @@ def run_round(
         )
     cand = dedup_within_round(cand)
 
-    # 3. seen-set anti-join (bloom prune + exact) over ALL candidates —
+    # 3. seen-set anti-join (sidecar prune + exact) over ALL candidates —
     # one probe pass; the supported/unsupported split happens after
     # (splitting first would run the cogroup probe twice)
     if url_seen is not None:
-        if sidecar is not None and conf.seen_filter == "cuckoo":
-            from ..operators.cuckoo import filter_unseen_cuckoo
-
-            cand = filter_unseen_cuckoo(cand, url_seen, sidecar, conf.n_buckets)
-        else:
-            cand = filter_unseen(
-                cand, url_seen, sidecar, conf.n_buckets, conf.m_bits
-            )
+        cand = filter_unseen(
+            cand, url_seen, sidecar, conf.n_buckets, conf.seen_filter
+        )
     cand = _p(cand)
 
     # unsupported-platform rows are terminal (extractor has no dialect —
@@ -457,7 +453,6 @@ def run_round(
         docs=docs,
         round_log=round_log,
         frontier_next=frontier_next,
-        counters={},
         persisted=persisted,
         persisted_heavy=persisted_heavy,
     )

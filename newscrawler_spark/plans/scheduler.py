@@ -8,9 +8,10 @@ last committed manifest and, because every derived value is a pure
 function of (url, round, config), reproduces the uninterrupted run
 bit-identically (tested in tests/test_crawl.py).
 
-Bloom lifecycle: the sidecar is rebuilt incrementally per round
-(merge_bloom) and persisted as its own delta, so a resume reads the
-latest sidecar instead of rescanning 10^10 seen rows.
+Seen-filter lifecycle: each round folds its new seen rows into the
+previous round's sidecar (bloom or cuckoo, per conf.seen_filter — one
+operators.seen.SEEN_KINDS entry) and persists it as its own delta, so a
+resume reads the latest sidecar instead of rescanning 10^10 seen rows.
 """
 
 from __future__ import annotations
@@ -19,9 +20,14 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.seen import build_bloom, merge_bloom
+from ..operators.seen import SEEN_KINDS, fold_sidecar
 from ..sources.catalog import Catalog
 from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, run_round
+
+# Above this many rows a round's seen-sidecar and budget-state folds go
+# back to distributed jobs (driver-side DuckDB over the round_log
+# partition would otherwise read GBs on one node).
+LOCAL_FOLD_MAX_ROWS = 5_000_000
 
 
 def bootstrap_hosts_for_round(
@@ -126,10 +132,7 @@ def crawl(
         if _os_ab.path.isdir(bpath):
             budgets_round = spark.read.schema(_schema_ab.BUDGETS).parquet(bpath)
     budget_rows = budgets_round.select("domain", "capacity", "window_s").collect()
-    # above this many scheduled rows the per-domain fold goes back to a
-    # distributed job (driver-side DuckDB over the order partition would
-    # otherwise read GBs on one node)
-    BUDGET_LOCAL_MAX_ROWS = 5_000_000
+    seen_kind = SEEN_KINDS[conf.seen_filter]
 
     # Deferred-commit pipeline: round N's docs write (its biggest delta,
     # needed by nothing round N+1 compiles against) runs on a background
@@ -186,11 +189,8 @@ def crawl(
         url_seen = catalog.read_table(spark, "url_seen", upto_round=round_no - 1)
         # seen-filter sidecar (bloom bitsets or cuckoo fingerprint
         # tables — same per-bucket delta lifecycle either way)
-        sidecar_schema = (
-            _schema.BLOOM if conf.seen_filter == "bloom" else _schema.CUCKOO
-        )
         sidecar = (
-            spark.read.schema(sidecar_schema).parquet(
+            spark.read.schema(seen_kind.schema).parquet(
                 catalog.delta_path(conf.seen_filter, round_no - 1)
             )
             if round_no > 0
@@ -248,7 +248,7 @@ def crawl(
         # exception is the docs write, which is spawned LAST and overlaps
         # exclusively with the next round's driver compile).
         # Per-round Spark jobs: docs, round_log (seen ∪ order ∪
-        # quarantine in ONE partitioned write), frontier, bloom,
+        # quarantine in ONE partitioned write), frontier, sidecar,
         # budget_state — 5, down from 8; the metrics row is written
         # driver-side (pyarrow), and per-table counts ride on the two
         # big writes as Observations.
@@ -257,42 +257,25 @@ def crawl(
 
         from pyspark.sql import functions as F
 
-        # bloom + budget accounting both re-read the just-written (small)
-        # round_log delta — partition-pruned by kind, column-pruned —
-        # instead of re-executing the round lineage.  Small rounds fold
-        # both on the DRIVER (DuckDB + numpy/pyarrow, bit-identical
-        # kernels, zero Spark jobs); big rounds use the distributed path.
+        # sidecar + budget accounting both re-read the just-written
+        # (small) round_log delta — partition-pruned by kind,
+        # column-pruned — instead of re-executing the round lineage.
+        # Small rounds fold both on the DRIVER (DuckDB + numpy/pyarrow,
+        # the same per-bucket kernels, zero Spark jobs); big rounds use
+        # the distributed path.
         log_round = catalog.read_round_log_delta(spark, round_no)
-        prev_round = round_no - 1 if round_no > 0 else None
-        if conf.seen_filter == "cuckoo":
-            if log_counts["seen"] <= BUDGET_LOCAL_MAX_ROWS:
-                catalog.write_cuckoo_local(
-                    round_no, prev_round, conf.cuckoo_capacity
-                )
-            else:
-                from ..operators.cuckoo import build_cuckoo, merge_cuckoo
-
-                seen_round = log_round.filter(F.col("kind") == "seen").select(
-                    "url_hash", "bucket"
-                )
-                new_side = (
-                    build_cuckoo(seen_round, conf.n_buckets, conf.cuckoo_capacity)
-                    if sidecar is None
-                    else merge_cuckoo(sidecar, seen_round, conf.cuckoo_capacity)
-                )
-                catalog.write_delta(new_side, "cuckoo", round_no)
-        elif log_counts["seen"] <= BUDGET_LOCAL_MAX_ROWS:
-            catalog.write_bloom_local(round_no, prev_round, conf.m_bits)
+        size = getattr(conf, seen_kind.size_field)
+        if log_counts["seen"] <= LOCAL_FOLD_MAX_ROWS:
+            getattr(catalog, seen_kind.local_fold)(
+                round_no, round_no - 1 if round_no > 0 else None, size
+            )
         else:
-            seen_round = log_round.filter(F.col("kind") == "seen").select(
-                "url_hash", "bucket"
+            seen_round = log_round.filter(F.col("kind") == "seen")
+            catalog.write_delta(
+                fold_sidecar(seen_round, sidecar, conf.seen_filter, size),
+                conf.seen_filter,
+                round_no,
             )
-            new_bloom = (
-                build_bloom(seen_round, conf.n_buckets, conf.m_bits)
-                if sidecar is None
-                else merge_bloom(sidecar, seen_round, conf.n_buckets, conf.m_bits)
-            )
-            catalog.write_delta(new_bloom, "bloom", round_no)
 
         # optional per-round incremental dedup: this round's docs delta
         # vs the accumulated corpus index (the 100 TB pipeline's
@@ -352,7 +335,7 @@ def crawl(
         # written at commit time (it needs the docs count)
         from ..operators.scheduling import budget_accounting
 
-        if log_counts["order"] <= BUDGET_LOCAL_MAX_ROWS:
+        if log_counts["order"] <= LOCAL_FOLD_MAX_ROWS:
             catalog.write_budget_state_row_local(round_no, budget_rows)
         else:
             scheduled = log_round.filter(F.col("kind") == "order").select("domain")

@@ -46,7 +46,7 @@ from .operators import tokenizer as BPE
 from .operators import webgraph as WG
 from .operators.multimodal import decode_media
 from .operators.scheduling import apply_robots, budget_gate, dedup_within_round
-from .operators.seen import build_bloom, filter_unseen
+from .operators.seen import filter_unseen, fold_sidecar
 from .synth import URL_SHAPES
 from .xhash import md5_64, md5_64_sql
 
@@ -253,8 +253,8 @@ def q_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_buckets, m_bits = 16, 1 << 16
     cand = dedup_within_round(_identity_frontier(spark, sf_dir))
     seen = _seen_table(spark, sf_dir, n_buckets)
-    bloom = build_bloom(seen, n_buckets, m_bits)
-    out = filter_unseen(cand, seen, bloom, n_buckets, m_bits)
+    bloom = fold_sidecar(seen, None, "bloom", m_bits)
+    out = filter_unseen(cand, seen, bloom, n_buckets)
     return out.select("canonical_url", "domain", "seq")
 
 
@@ -266,7 +266,7 @@ def q_seen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain relational anti-join against the same
     post-deletion seen set — the filter must prune without changing
     the result."""
-    from .operators.cuckoo import build_cuckoo, delete_cuckoo, filter_unseen_cuckoo
+    from .operators.cuckoo import delete_cuckoo
 
     n_buckets = 16
     fr = _identity_frontier(spark, sf_dir)
@@ -285,13 +285,11 @@ def q_seen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bucket"),
         )
     )
-    filt = delete_cuckoo(
-        build_cuckoo(seen, n_buckets, capacity_per_bucket=1024), removals
-    )
+    filt = delete_cuckoo(fold_sidecar(seen, None, "cuckoo", 1024), removals)
     remaining_seen = seen.join(
         removals.select("url_hash", "bucket"), ["url_hash", "bucket"], "left_anti"
     )
-    out = filter_unseen_cuckoo(cand, remaining_seen, filt, n_buckets)
+    out = filter_unseen(cand, remaining_seen, filt, n_buckets, "cuckoo")
     return out.select("canonical_url", "domain", "seq")
 
 
@@ -342,8 +340,8 @@ def _scheduled(spark: SparkSession, sf_dir: str):
     n_buckets, m_bits = 16, 1 << 16
     cand = dedup_within_round(_identity_frontier(spark, sf_dir))
     seen = _seen_table(spark, sf_dir, n_buckets)
-    bloom = build_bloom(seen, n_buckets, m_bits)
-    unseen = filter_unseen(cand, seen, bloom, n_buckets, m_bits)
+    bloom = fold_sidecar(seen, None, "bloom", m_bits)
+    unseen = filter_unseen(cand, seen, bloom, n_buckets)
     budgets, robots = _budget_tables(spark)
     allowed, _denied = apply_robots(unseen, robots)
     return budget_gate(allowed, budgets)

@@ -219,65 +219,9 @@ class Catalog:
         prev_round: int | None,
         m_bits: int,
     ) -> None:
-        """Bloom sidecar build/merge on the DRIVER for small rounds —
-        zero Spark jobs: the round's (bucket, url_hash) seen rows are
-        read with in-process DuckDB, OR-ed into the previous round's
-        bitsets with the SAME numpy kernels the distributed path uses
-        (operators.seen._build_bitset — bit-for-bit identical sidecars
-        either way), and written back with pyarrow.  Total sidecar size
-        is n_buckets × m_bits/8 (tens of MB at sandbox scale); rounds
-        past the scheduler's threshold use the distributed
-        build_bloom/merge_bloom instead."""
-        import glob as _glob
-
-        import duckdb
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from ..operators.seen import _build_bitset
-
-        seen_glob = f"{self.delta_path('round_log', round_no)}/kind=seen/*.parquet"
-        by_bucket: dict[int, "np.ndarray"] = {}
-        counts: dict[int, int] = {}
-        if _glob.glob(seen_glob):
-            rel = duckdb.sql(
-                f"SELECT bucket, list(url_hash), count(*) "
-                f"FROM '{seen_glob}' GROUP BY bucket"
-            )
-            for bucket, hashes, n in rel.fetchall():
-                bits = _build_bitset(np.array(hashes, dtype=np.int64), m_bits)
-                by_bucket[int(bucket)] = np.frombuffer(bits, dtype=np.uint8).copy()
-                counts[int(bucket)] = int(n)
-
-        if prev_round is not None:
-            prev_glob = f"{self.delta_path('bloom', prev_round)}/*.parquet"
-            for bucket, bits, n in duckdb.sql(
-                f"SELECT bucket, bitset, n_items FROM '{prev_glob}'"
-            ).fetchall():
-                bucket = int(bucket)
-                arr = np.frombuffer(bits, dtype=np.uint8)
-                if bucket in by_bucket:
-                    by_bucket[bucket] |= arr
-                else:
-                    by_bucket[bucket] = arr.copy()
-                counts[bucket] = counts.get(bucket, 0) + int(n)
-
-        buckets = sorted(by_bucket)
-        table = pa.table(
-            {
-                "bucket": pa.array(buckets, type=pa.int32()),
-                "bitset": pa.array(
-                    [by_bucket[b].tobytes() for b in buckets], type=pa.binary()
-                ),
-                "n_items": pa.array(
-                    [counts.get(b, 0) for b in buckets], type=pa.int64()
-                ),
-            }
-        )
-        path = Path(self.delta_path("bloom", round_no))
-        path.mkdir(parents=True, exist_ok=True)
-        pq.write_table(table, path / "part-00000.parquet")
+        """Bloom sidecar fold on the DRIVER for small rounds: a new
+        bucket gets an ``m_bits`` bitset (see _write_sidecar_local)."""
+        self._write_sidecar_local("bloom", round_no, prev_round, m_bits)
 
     def write_cuckoo_local(
         self,
@@ -285,86 +229,70 @@ class Catalog:
         prev_round: int | None,
         capacity_per_bucket: int,
     ) -> None:
-        """Cuckoo sidecar build/merge on the DRIVER for small rounds —
-        the write_bloom_local twin for conf.seen_filter='cuckoo'.  Uses
-        the SAME numpy kernels as the distributed cogroup
-        (operators.cuckoo._bulk_insert on sorted hashes), so the folded
-        sidecar is byte-identical per bucket either way (tested)."""
+        """Cuckoo sidecar fold on the DRIVER for small rounds: a new
+        bucket's table is sized for ``capacity_per_bucket`` fingerprints
+        (see _write_sidecar_local)."""
+        self._write_sidecar_local(
+            "cuckoo", round_no, prev_round, capacity_per_bucket
+        )
+
+    def _write_sidecar_local(
+        self, kind: str, round_no: int, prev_round: int | None, size: int
+    ) -> None:
+        """Fold round ``round_no``'s seen rows into the ``prev_round``
+        sidecar of ``kind`` with zero Spark jobs: the round's (bucket,
+        url_hash) rows and the prior sidecar are read with in-process
+        DuckDB, every bucket goes through the kind's per-bucket fold
+        kernel on sorted hashes — the kernel the distributed
+        operators.seen.fold_sidecar runs, so the sidecar is
+        byte-identical per bucket either way (tested) — and the result
+        is written with pyarrow.  The sidecar is one row per bucket (8 MB
+        for the default 64 bloom buckets of 1 Mbit); rounds past the
+        scheduler's LOCAL_FOLD_MAX_ROWS use the distributed fold
+        instead."""
         import glob as _glob
 
         import duckdb
         import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        from ..operators.cuckoo import (
-            CUCKOO_SLOTS,
-            _bulk_insert,
-            _size_rows,
-        )
+        from ..operators.seen import SEEN_KINDS
 
-        tables: dict[int, "np.ndarray"] = {}
-        stashes: dict[int, list] = {}
-        counts: dict[int, int] = {}
+        spec = SEEN_KINDS[kind]
+        prior: dict[int, dict] = {}
         if prev_round is not None:
-            prev_glob = f"{self.delta_path('cuckoo', prev_round)}/*.parquet"
-            for bucket, blob, n_rows, stash, n in duckdb.sql(
-                f"SELECT bucket, \"table\", n_rows, stash, n_items "
-                f"FROM '{prev_glob}'"
-            ).fetchall():
-                bucket = int(bucket)
-                tables[bucket] = (
-                    np.frombuffer(blob, dtype=np.uint16)
-                    .reshape(int(n_rows), CUCKOO_SLOTS)
-                    .copy()
-                )
-                stashes[bucket] = list(stash or [])
-                counts[bucket] = int(n)
+            prev_glob = f"{self.delta_path(kind, prev_round)}/*.parquet"
+            rel = duckdb.sql(f"SELECT * FROM '{prev_glob}'")
+            for values in rel.fetchall():
+                row = dict(zip(rel.columns, values))
+                prior[int(row["bucket"])] = row
 
+        new: dict[int, np.ndarray] = {}
         seen_glob = f"{self.delta_path('round_log', round_no)}/kind=seen/*.parquet"
         if _glob.glob(seen_glob):
-            rel = duckdb.sql(
+            for bucket, hashes in duckdb.sql(
                 f"SELECT bucket, list(url_hash ORDER BY url_hash) "
                 f"FROM '{seen_glob}' GROUP BY bucket"
-            )
-            for bucket, hashes in rel.fetchall():
-                bucket = int(bucket)
-                arr = np.array(hashes, dtype=np.int64)
-                if bucket not in tables:
-                    tables[bucket] = np.zeros(
-                        (
-                            _size_rows(max(capacity_per_bucket, len(arr))),
-                            CUCKOO_SLOTS,
-                        ),
-                        dtype=np.uint16,
-                    )
-                    stashes[bucket] = []
-                    counts[bucket] = 0
-                overflow = _bulk_insert(tables[bucket], arr)
-                stashes[bucket].extend(int(arr[i]) for i in overflow)
-                counts[bucket] += len(arr)
+            ).fetchall():
+                new[int(bucket)] = np.array(hashes, dtype=np.int64)
 
-        buckets = sorted(tables)
-        out = pa.table(
-            {
-                "bucket": pa.array(buckets, type=pa.int32()),
-                "table": pa.array(
-                    [tables[b].tobytes() for b in buckets], type=pa.binary()
-                ),
-                "n_rows": pa.array(
-                    [tables[b].shape[0] for b in buckets], type=pa.int32()
-                ),
-                "stash": pa.array(
-                    [stashes[b] for b in buckets], type=pa.list_(pa.int64())
-                ),
-                "n_items": pa.array(
-                    [counts[b] for b in buckets], type=pa.int64()
-                ),
-            }
+        no_hashes = np.empty(0, dtype=np.int64)
+        rows = [
+            {"bucket": b, **spec.fold(prior.get(b), new.get(b, no_hashes), size)}
+            for b in sorted(prior.keys() | new.keys())
+        ]
+        # column by column: Table.from_pylist is several times slower
+        # on large binary values such as the bloom bitsets
+        schema = to_arrow_schema(spec.schema)
+        table = pa.table(
+            {f.name: pa.array([r[f.name] for r in rows], f.type) for f in schema},
+            schema=schema,
         )
-        path = Path(self.delta_path("cuckoo", round_no))
+        path = Path(self.delta_path(kind, round_no))
         path.mkdir(parents=True, exist_ok=True)
-        pq.write_table(out, path / "part-00000.parquet")
+        pq.write_table(table, path / "part-00000.parquet")
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots) ---------
 

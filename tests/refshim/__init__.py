@@ -18,6 +18,7 @@ verbatim.
 
 from __future__ import annotations
 
+import importlib.util
 import sys
 
 
@@ -45,3 +46,11 @@ def install() -> None:
 
     if "/root/reference" not in sys.path:
         sys.path.insert(0, "/root/reference")
+
+
+def reference_available() -> bool:
+    """Whether the reference crawler checkout is importable (``install``
+    puts it on ``sys.path``).  The tests that run the reference parsers
+    or read its fixtures skip when it is not."""
+    install()
+    return importlib.util.find_spec("news_crawler") is not None

@@ -6,6 +6,8 @@ from pyspark.sql import functions as F
 
 from newscrawler_spark import schema
 from newscrawler_spark.oracle.simulator import simulate_crawl
+from newscrawler_spark.operators.seen import SEEN_KINDS
+from newscrawler_spark.plans import scheduler
 from newscrawler_spark.plans.crawl_round import RoundConfig
 from newscrawler_spark.plans.scheduler import crawl, seed_frontier
 from newscrawler_spark.sources.catalog import Catalog
@@ -16,6 +18,8 @@ N_SEEDS = 120
 N_PAGES = 800
 MAX_ROUNDS = 4
 CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8)
+CUCKOO_CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
+                          seen_filter="cuckoo", cuckoo_capacity=2048)
 
 
 @pytest.fixture(scope="module")
@@ -54,6 +58,31 @@ def engine_result(spark, world, tmp_path_factory):
     crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
           max_rounds=MAX_ROUNDS, conf=CONF)
     return cat
+
+
+@pytest.fixture(scope="module")
+def cuckoo_result(spark, world, tmp_path_factory):
+    seeds, pages, budgets, robots = world
+    cat = Catalog(tmp_path_factory.mktemp("crawl_cuckoo"))
+    seed_frontier(cat, seeds)
+    crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
+          max_rounds=MAX_ROUNDS, conf=CUCKOO_CONF)
+    return cat
+
+
+def _assert_same_crawl(spark, a_cat, b_cat):
+    """Fetch order, seen set, quarantine and docs (incl. spans) equal."""
+    for table, key in [
+        ("fetch_order", ["round", "domain", "rank", "canonical_url", "url"]),
+        ("url_seen", ["canonical_url", "round_seen"]),
+        ("quarantine", ["url", "round", "error", "attempt"]),
+    ]:
+        a = a_cat.read_table(spark, table).select(*key)
+        b = b_cat.read_table(spark, table).select(*key)
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
+    a = a_cat.read_table(spark, "docs")
+    b = b_cat.read_table(spark, "docs")
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
 
 def test_fetch_order_matches_simulator(spark, engine_result, sim_result):
@@ -110,18 +139,7 @@ def test_kill_and_resume_bit_identical(spark, world, engine_result, tmp_path_fac
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
           max_rounds=MAX_ROUNDS, conf=CONF)
 
-    for table, key in [
-        ("fetch_order", ["round", "domain", "rank", "canonical_url", "url"]),
-        ("url_seen", ["canonical_url", "round_seen"]),
-        ("quarantine", ["url", "round", "error", "attempt"]),
-    ]:
-        a = engine_result.read_table(spark, table).select(*key)
-        b = cat2.read_table(spark, table).select(*key)
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
-    # docs incl. spans
-    a = engine_result.read_table(spark, "docs")
-    b = cat2.read_table(spark, "docs")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    _assert_same_crawl(spark, engine_result, cat2)
 
 
 def test_crash_with_uncommitted_deltas_redoes_round(spark, world, engine_result,
@@ -149,54 +167,65 @@ def test_crash_with_uncommitted_deltas_redoes_round(spark, world, engine_result,
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
           max_rounds=MAX_ROUNDS, conf=CONF)
 
-    for table, key in [
-        ("fetch_order", ["round", "domain", "rank", "canonical_url", "url"]),
-        ("url_seen", ["canonical_url", "round_seen"]),
-        ("quarantine", ["url", "round", "error", "attempt"]),
-    ]:
-        a = engine_result.read_table(spark, table).select(*key)
-        b = cat2.read_table(spark, table).select(*key)
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
-    a = engine_result.read_table(spark, "docs")
-    b = cat2.read_table(spark, "docs")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    _assert_same_crawl(spark, engine_result, cat2)
 
 
-def test_crawl_with_cuckoo_filter_identical(spark, world, engine_result,
-                                            tmp_path_factory):
+def test_crawl_with_cuckoo_filter_identical(spark, engine_result, cuckoo_result):
     """Swapping the bloom sidecar for the cuckoo filter
     (conf.seen_filter='cuckoo') must leave every crawl output
     bit-identical — both filters are prune-only; the exact anti-join
     decides."""
-    seeds, pages, budgets, robots = world
-    cat2 = Catalog(tmp_path_factory.mktemp("crawl_cuckoo"))
-    seed_frontier(cat2, seeds)
-    conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                       seen_filter="cuckoo", cuckoo_capacity=2048)
-    crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=conf)
-
-    for table, key in [
-        ("fetch_order", ["round", "domain", "rank", "canonical_url", "url"]),
-        ("url_seen", ["canonical_url", "round_seen"]),
-        ("quarantine", ["url", "round", "error", "attempt"]),
-    ]:
-        a = engine_result.read_table(spark, table).select(*key)
-        b = cat2.read_table(spark, table).select(*key)
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
-    a = engine_result.read_table(spark, "docs")
-    b = cat2.read_table(spark, "docs")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    _assert_same_crawl(spark, engine_result, cuckoo_result)
     # the cuckoo sidecar accounted for every seen row
-    import pyspark.sql.functions as _F
-
     side = spark.read.schema(schema.CUCKOO).parquet(
-        cat2.delta_path("cuckoo", cat2.last_round)
+        cuckoo_result.delta_path("cuckoo", cuckoo_result.last_round)
     )
     assert (
-        side.agg(_F.sum("n_items")).first()[0]
-        == cat2.read_table(spark, "url_seen").count()
+        side.agg(F.sum("n_items")).first()[0]
+        == cuckoo_result.read_table(spark, "url_seen").count()
     )
+
+
+@pytest.mark.parametrize("kind", sorted(SEEN_KINDS))
+def test_distributed_folds_match_local(spark, world, engine_result, cuckoo_result,
+                                       kind, monkeypatch, tmp_path_factory):
+    """With the local-fold gate at 0, every round with seen rows folds its
+    sidecar and its budget_state delta as distributed Spark jobs.  The
+    crawl's outputs must not change — and because the sidecar only
+    prunes, those checks cannot see a wrong one, so the last round's
+    sidecar rows must also equal, per bucket, the local-fold run's, and
+    so must every budget_state delta."""
+    seeds, pages, budgets, robots = world
+    local, conf = {
+        "bloom": (engine_result, CONF),
+        "cuckoo": (cuckoo_result, CUCKOO_CONF),
+    }[kind]
+    monkeypatch.setattr(scheduler, "LOCAL_FOLD_MAX_ROWS", 0)
+    cat = Catalog(tmp_path_factory.mktemp(f"crawl_distributed_{kind}"))
+    seed_frontier(cat, seeds)
+    crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
+          max_rounds=MAX_ROUNDS, conf=conf)
+
+    _assert_same_crawl(spark, engine_result, cat)
+    assert cat.last_round == local.last_round
+
+    def sidecar_rows(c):
+        rows = spark.read.schema(SEEN_KINDS[kind].schema).parquet(
+            c.delta_path(kind, c.last_round)
+        ).collect()
+        return {r["bucket"]: r for r in rows}
+
+    got, want = sidecar_rows(cat), sidecar_rows(local)
+    assert got.keys() == want.keys() and got
+    for bucket, row in want.items():
+        assert got[bucket] == row, f"{kind} sidecar differs for bucket {bucket}"
+
+    def budget_state(c, round_no):
+        rows = spark.read.parquet(c.delta_path("budget_state", round_no)).collect()
+        return sorted((r.asDict() for r in rows), key=lambda d: d["domain"])
+
+    for round_no in range(cat.last_round + 1):
+        assert budget_state(cat, round_no) == budget_state(local, round_no), round_no
 
 
 def test_unknown_seen_filter_rejected():

@@ -3,7 +3,7 @@ delete, probe — and equivalence with the bloom path's exact results.
 
 The contract under test is the prune-only invariant: whatever the
 filter's internal state (fresh build, incremental merge, post-delete),
-``filter_unseen_cuckoo`` must return exactly the rows a plain anti-join
+``filter_unseen(..., "cuckoo")`` must return exactly the rows a plain anti-join
 against url_seen returns — the filter only shrinks the probe set.
 """
 
@@ -17,12 +17,9 @@ from newscrawler_spark.operators.cuckoo import (
     _delete_from_table,
     _probe_table,
     _size_rows,
-    build_cuckoo,
     delete_cuckoo,
-    filter_unseen_cuckoo,
-    merge_cuckoo,
 )
-from newscrawler_spark.operators.seen import build_bloom, filter_unseen
+from newscrawler_spark.operators.seen import filter_unseen, fold_sidecar
 
 N_BUCKETS = 8
 
@@ -49,8 +46,8 @@ def corpus(spark):
 def test_no_false_negatives_and_exact_result(spark, corpus):
     seen = _hash_bucket(corpus.filter(F.col("priority") < 3))
     cand = corpus.select("canonical_url", "priority")
-    filt = build_cuckoo(seen, N_BUCKETS, capacity_per_bucket=64)
-    got = filter_unseen_cuckoo(cand, seen, filt, N_BUCKETS)
+    filt = fold_sidecar(seen, None, "cuckoo", 64)
+    got = filter_unseen(cand, seen, filt, N_BUCKETS, "cuckoo")
     want = cand.join(
         seen.select("canonical_url"), "canonical_url", "left_anti"
     )
@@ -61,11 +58,11 @@ def test_no_false_negatives_and_exact_result(spark, corpus):
 def test_matches_bloom_path(spark, corpus):
     seen = _hash_bucket(corpus.filter(F.col("priority") % 2 == 0))
     cand = corpus.select("canonical_url", "priority")
-    ck = filter_unseen_cuckoo(
-        cand, seen, build_cuckoo(seen, N_BUCKETS, 64), N_BUCKETS
+    ck = filter_unseen(
+        cand, seen, fold_sidecar(seen, None, "cuckoo", 64), N_BUCKETS, "cuckoo"
     )
     bl = filter_unseen(
-        cand, seen, build_bloom(seen, N_BUCKETS, 1 << 14), N_BUCKETS, 1 << 14
+        cand, seen, fold_sidecar(seen, None, "bloom", 1 << 14), N_BUCKETS
     )
     assert ck.exceptAll(bl).count() == 0
     assert bl.exceptAll(ck).count() == 0
@@ -80,10 +77,10 @@ def test_incremental_merge_equals_fresh_build(spark, corpus):
     )
     both = a.unionByName(b)
     cand = corpus.select("canonical_url", "priority")
-    merged = merge_cuckoo(build_cuckoo(a, N_BUCKETS, 64), b)
-    out_merged = filter_unseen_cuckoo(cand, both, merged, N_BUCKETS)
-    out_fresh = filter_unseen_cuckoo(
-        cand, both, build_cuckoo(both, N_BUCKETS, 64), N_BUCKETS
+    merged = fold_sidecar(b, fold_sidecar(a, None, "cuckoo", 64), "cuckoo", 0)
+    out_merged = filter_unseen(cand, both, merged, N_BUCKETS, "cuckoo")
+    out_fresh = filter_unseen(
+        cand, both, fold_sidecar(both, None, "cuckoo", 64), N_BUCKETS, "cuckoo"
     )
     assert out_merged.exceptAll(out_fresh).count() == 0
     assert out_fresh.exceptAll(out_merged).count() == 0
@@ -97,12 +94,12 @@ def test_delete_unsees_for_recrawl(spark, corpus):
     removal, previously-seen URLs flow through the prune again."""
     seen = _hash_bucket(corpus.filter(F.col("priority") < 3))
     removals = _hash_bucket(corpus.filter(F.col("priority") == 0))
-    filt = delete_cuckoo(build_cuckoo(seen, N_BUCKETS, 64), removals)
+    filt = delete_cuckoo(fold_sidecar(seen, None, "cuckoo", 64), removals)
     remaining = seen.join(
         removals.select("url_hash", "bucket"), ["url_hash", "bucket"], "left_anti"
     )
     cand = corpus.select("canonical_url", "priority")
-    got = filter_unseen_cuckoo(cand, remaining, filt, N_BUCKETS)
+    got = filter_unseen(cand, remaining, filt, N_BUCKETS, "cuckoo")
     # everything un-seen (priority 0) or never seen (>= 3) comes back
     want = cand.filter((F.col("priority") == 0) | (F.col("priority") >= 3))
     assert got.exceptAll(want).count() == 0
@@ -178,8 +175,8 @@ def test_local_cuckoo_fold_matches_distributed(spark, tmp_path):
         for r in spark.read.parquet(cat.delta_path("cuckoo", 1)).collect()
     }
 
-    c0 = build_cuckoo(seen_df(0, 300), 8, cap)
-    c1 = merge_cuckoo(c0, seen_df(300, 700), cap)
+    c0 = fold_sidecar(seen_df(0, 300), None, "cuckoo", cap)
+    c1 = fold_sidecar(seen_df(300, 700), c0, "cuckoo", cap)
     dist = {
         r.bucket: (bytes(r.table), list(r.stash), r.n_items)
         for r in c1.collect()
@@ -206,7 +203,7 @@ def test_stash_tiny_under_power_of_two_buckets():
     for bucket in (0, 17, 63):
         member = pool[pool % n_buckets == bucket][:25_000]
         assert len(member) == 25_000
-        # size for ~0.4 load exactly as build_cuckoo does
+        # size for ~0.4 load exactly as fold_bucket does
         table = np.zeros((_size_rows(len(member)), CUCKOO_SLOTS), dtype=np.uint16)
         overflow = _bulk_insert(table, np.sort(member))
         assert len(overflow) < len(member) * 0.005, (

@@ -2,6 +2,9 @@
 hand-built fixtures whose expected spans are derived from the reference
 parsers' semantics (cited in each dialect's docstring)."""
 
+import pytest
+from refshim import reference_available
+
 from newscrawler_spark.functions import platforms as P
 from newscrawler_spark.functions.extract import extract_one
 from newscrawler_spark.functions.wechat import parse_wechat
@@ -231,6 +234,9 @@ def test_quora_double_encoded_json():
     assert out["spans"] == [("text", "Answer body here.", "")]
 
 
+@pytest.mark.skipif(
+    not reference_available(), reason="reference crawler checkout not present"
+)
 def test_quora_reference_golden_fixture():
     """The reference's only committed fixture (an 85 KB live-captured
     page, /root/reference/news_crawler/quora/test/response.html with the

@@ -156,7 +156,7 @@ def test_seen_probe_is_single_pass_and_slim(spark):
     filter-union shape executed it per branch) and must cogroup only the
     slim (bucket, url_hash) projection — full-width candidate rows never
     cross the Arrow boundary."""
-    from newscrawler_spark.operators.seen import build_bloom, filter_unseen
+    from newscrawler_spark.operators.seen import filter_unseen, fold_sidecar
 
     cand = synth.synth_frontier(spark, 200).withColumn(
         "canonical_url", F.col("url")
@@ -165,8 +165,8 @@ def test_seen_probe_is_single_pass_and_slim(spark):
         F.xxhash64("canonical_url").alias("url_hash"),
         F.pmod(F.xxhash64("canonical_url"), F.lit(8)).cast("int").alias("bucket"),
     )
-    bloom = build_bloom(seen, 8, 1 << 16)
-    out = filter_unseen(cand, seen, bloom, 8, 1 << 16)
+    bloom = fold_sidecar(seen, None, "bloom", 1 << 16)
+    out = filter_unseen(cand, seen, bloom, 8)
     plan = _plan(out)
     assert plan.count("FlatMapCoGroupsInPandas") == 1, plan[:2000]
     import re
@@ -253,7 +253,7 @@ def test_local_bloom_bitsets_match_distributed(spark, tmp_path):
     byte-identical bitsets to the distributed build/merge path — the
     sidecar is prune-only, so the crawl correctness tests would NOT
     catch a divergence here."""
-    from newscrawler_spark.operators.seen import build_bloom, merge_bloom
+    from newscrawler_spark.operators.seen import fold_sidecar
     from newscrawler_spark.sources.catalog import Catalog
 
     m_bits = 1 << 16
@@ -292,8 +292,8 @@ def test_local_bloom_bitsets_match_distributed(spark, tmp_path):
     }
 
     # distributed build + merge over the same deltas
-    b0 = build_bloom(seen_df(0, 300), 8, m_bits)
-    b1 = merge_bloom(b0, seen_df(250, 600), 8, m_bits)
+    b0 = fold_sidecar(seen_df(0, 300), None, "bloom", m_bits)
+    b1 = fold_sidecar(seen_df(250, 600), b0, "bloom", m_bits)
     dist = {
         r.bucket: (bytes(r.bitset), r.n_items) for r in b1.collect()
     }

@@ -20,10 +20,18 @@ function of HTML — core/base.py:88):
   cnn      cnn_news.py:174       detik   detik_news.py:166
   lenny    lennysnewsletter.py:317  naver naver_news.py:218
   quora    quora_answer.py:158
+
+Those tests need the reference checkout and skip without it.
+``test_engine_matches_golden_digests`` always runs: it pins the engine's
+outcomes on the same parity and mutation corpus to committed sha256
+digests (goldens/reference_parity.json), so a dialect regression fails
+even where the reference is absent.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import sys
 from pathlib import Path
 
@@ -31,9 +39,11 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).parent))
-from refshim import install  # noqa: E402
+from refshim import reference_available  # noqa: E402
 
-install()
+needs_reference = pytest.mark.skipif(
+    not reference_available(), reason="reference crawler checkout not present"
+)
 
 from newscrawler_spark.functions.extract import extract_one  # noqa: E402
 from newscrawler_spark.sources.fetch import iframe_target_py  # noqa: E402
@@ -58,6 +68,10 @@ CRAWLERS = {
 
 @pytest.fixture(scope="module")
 def corpus(spark):
+    return build_corpus(spark)
+
+
+def build_corpus(spark):
     """{platform: [(url, html)]} from the shared synthetic web; naver
     holder pages are resolved to their iframe-target html exactly like
     the fetch stage does (both parsers receive the CONTENT page — the
@@ -111,6 +125,7 @@ def _eng_spans(result) -> list[tuple[str, str | None, str | None]]:
     ]
 
 
+@needs_reference
 @pytest.mark.parametrize("platform", sorted(CRAWLERS))
 def test_reference_parser_parity(platform, corpus, monkeypatch):
     import importlib
@@ -210,6 +225,7 @@ def _ref_parse(crawler_cls, url: str, html: str):
         return None, f"{type(exc).__name__}: {exc}"
 
 
+@needs_reference
 @pytest.mark.parametrize("mutation", sorted(MUTATIONS))
 @pytest.mark.parametrize("platform", sorted(CRAWLERS))
 def test_reference_parity_under_mutation(platform, mutation, corpus, monkeypatch):
@@ -254,6 +270,7 @@ def test_reference_parity_under_mutation(platform, mutation, corpus, monkeypatch
         pytest.skip(f"mutation {mutation} not applicable to any {platform} page")
 
 
+@needs_reference
 def test_quora_reference_fixture_parity():
     """The reference's own committed live-response fixture (the one real
     captured page in its test suite — news_crawler/quora/test/)."""
@@ -270,3 +287,53 @@ def test_quora_reference_fixture_parity():
     assert eng["error"] is None
     assert _eng_spans(eng) == _ref_spans(ref_item)
     assert (eng["title"] or None) == (ref_item.title or None)
+
+
+# ---------------------------------------------------------------------------
+# Golden digests — the same corpus without the reference
+# ---------------------------------------------------------------------------
+
+GOLDENS = Path(__file__).parent / "goldens" / "reference_parity.json"
+
+
+def _outcomes(pages, platform: str) -> str:
+    """sha256 over the engine's (url, error is None, spans, title) for
+    each page."""
+    out = []
+    for url, html in pages:
+        eng = extract_one(html, url, platform)
+        spans = [
+            [s["kind"], s["text"], s["media_ref"], s["offset"]]
+            for s in eng["spans"] or []
+        ]
+        out.append([url, eng["error"] is None, spans, eng["title"]])
+    return hashlib.sha256(json.dumps(out).encode()).hexdigest()
+
+
+def engine_digests(corpus) -> dict[str, str]:
+    """One digest per dialect over its parity sample and one per
+    (dialect, mutation) over the pages the mutation applies to."""
+    out = {}
+    for platform in sorted(CRAWLERS):
+        pages = corpus.get(platform, [])
+        out[f"parity/{platform}"] = _outcomes(pages, platform)
+        for name, mutate in sorted(MUTATIONS.items()):
+            mutated = [
+                (url, mutate(html))
+                for url, html in pages[:MUT_PAGES_PER_PLATFORM]
+            ]
+            out[f"mutation/{platform}/{name}"] = _outcomes(
+                [(url, m) for url, m in mutated if m is not None], platform
+            )
+    return out
+
+
+def test_engine_matches_golden_digests(corpus):
+    """A changed digest is a changed dialect outcome.  Update the file
+    (the failure message lists the new digests) only after the
+    reference parity tests above pass with the change."""
+    want = json.loads(GOLDENS.read_text())
+    got = engine_digests(corpus)
+    changed = {k: got.get(k) for k in sorted(want.keys() | got.keys())
+               if want.get(k) != got.get(k)}
+    assert not changed, f"engine outcomes changed: {changed}"
