@@ -25,10 +25,10 @@ Two defenses:
     the remaining budget is under its observed-cost estimate, so the
     run finishes inside the driver's window by construction.
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-BENCH_BUDGET_SEC (default 2900), BENCH_CRAWL_URLS (default 400000),
-BENCH_CRAWL_REPS (default 3), BENCH_SKIP_SCALING=1 to skip the
-small-core crawl runs, BENCH_SKIP_LINEAR_PAIR=1 to skip the extra
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the CPUs this
+process may run on), BENCH_BUDGET_SEC (default 2900), BENCH_CRAWL_URLS
+(default 400000), BENCH_CRAWL_REPS (default 3), BENCH_SKIP_SCALING=1 to
+skip the small-core crawl runs, BENCH_SKIP_LINEAR_PAIR=1 to skip the extra
 linear-bandwidth-region pair (cpus/16 -> cpus/4 cores),
 BENCH_SKIP_EXTRAS=1 to skip the dedup/streaming/AIMD crawl probes.
 """
@@ -470,7 +470,9 @@ def main() -> None:
         _worker(sys.argv[2], int(sys.argv[3]), int(sys.argv[4]))
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from newscrawler_spark.session import default_cores
+
+    cpus = default_cores()
     # 400k URLs ≈ 1.5M scheduled over 5 rounds: large enough that the
     # ~7 s/round local-mode fixed cost (driver plan compile — per
     # ROUND, not per URL, and amortizing to nothing on a 10^10-URL

@@ -92,6 +92,10 @@ def crawl(
 ) -> dict:
     """Run crawl rounds until the frontier drains or max_rounds.
 
+    `budgets` and `robots` are materialized once per call (an eager
+    localCheckpoint, released when crawl() returns or raises), so
+    callers need not cache them: every round reads the checkpoint
+    instead of re-running their lineage in each of its gates.
     `stop_after_round` simulates a kill for resumability tests: the run
     stops *after committing* that round, and a later crawl() call picks
     up from the manifest.
@@ -107,21 +111,67 @@ def crawl(
     gate's longest-prefix match sees the union.
     Returns the final metrics dict (also persisted per round).
     """
-    conf = conf or RoundConfig()
+    held: list[DataFrame] = []
+    try:
+        return _crawl_rounds(
+            spark, catalog, fetcher, _hold(budgets, held), _hold(robots, held),
+            held, max_rounds, conf or RoundConfig(), stop_after_round,
+            header_bootstrap, robots_fetcher, robots_agent,
+        )
+    finally:
+        RoundResult._release(held)
+
+
+def _hold(df: DataFrame, held: list[DataFrame]) -> DataFrame:
+    """Materialize a round-invariant input once (eager localCheckpoint:
+    truncates its lineage, as run_round's checkpoints do) and record it
+    in `held` for release when the crawl ends."""
+    df = df.localCheckpoint(eager=True)
+    held.append(df)
+    return df
+
+
+def _budget_rows(budgets: DataFrame) -> list | None:
+    """The budget table's rows for the driver-local budget_state fold,
+    or None when the table has more than LOCAL_FOLD_MAX_ROWS rows (the
+    collect is bounded by a limit; bigger tables fold distributed)."""
+    rows = (
+        budgets.select("domain", "capacity", "window_s")
+        .limit(LOCAL_FOLD_MAX_ROWS + 1)
+        .collect()
+    )
+    return rows if len(rows) <= LOCAL_FOLD_MAX_ROWS else None
+
+
+def _crawl_rounds(
+    spark: SparkSession,
+    catalog: Catalog,
+    fetcher,
+    budgets: DataFrame,
+    robots: DataFrame,
+    held: list[DataFrame],
+    max_rounds: int,
+    conf: RoundConfig,
+    stop_after_round: int | None,
+    header_bootstrap,
+    robots_fetcher,
+    robots_agent: str,
+) -> dict:
     totals: dict = {}
     robots_done: set[str] = set()
-    live_robots_rows: list[tuple] = []
 
     boot_hosts = (
         [r.domain for r in budgets.select("domain").distinct().collect()]
         if header_bootstrap is not None
         else None
     )
-    # budget table rows, collected ONCE (KB-scale): lets small rounds
-    # fold budget accounting driver-side with zero Spark jobs.  In
-    # adaptive mode the table is per-round STATE instead: re-read from
-    # the last committed `budgets` delta on resume and re-collected
-    # after each AIMD update.
+    # budget table rows for the driver-local budget_state fold (zero
+    # Spark jobs), collected only while the table has at most
+    # LOCAL_FOLD_MAX_ROWS rows — the collect is bounded, and a bigger
+    # table folds distributed every round.  In adaptive mode the table
+    # is per-round STATE instead: re-read from the last committed
+    # `budgets` delta on resume and re-collected (same bound) after
+    # each AIMD update.
     budgets_round = budgets
     if conf.adaptive_budgets and catalog.last_round >= 0:
         import os as _os_ab
@@ -131,7 +181,7 @@ def crawl(
         bpath = catalog.delta_path("budgets", catalog.last_round)
         if _os_ab.path.isdir(bpath):
             budgets_round = spark.read.schema(_schema_ab.BUDGETS).parquet(bpath)
-    budget_rows = budgets_round.select("domain", "capacity", "window_s").collect()
+    budget_rows = _budget_rows(budgets_round)
     seen_kind = SEEN_KINDS[conf.seen_filter]
 
     # Deferred-commit pipeline: round N's docs write (its biggest delta,
@@ -216,7 +266,6 @@ def crawl(
             )
             boot_cfg = header_bootstrap.config_df(spark)
 
-        robots_round = robots
         if robots_fetcher is not None:
             from ..sources.robots import fetch_robots
 
@@ -225,14 +274,22 @@ def crawl(
                 exclude=robots_done,
             )
             robots_done.update(doms)
-            live_robots_rows.extend(new_rules)
-            if live_robots_rows:
-                robots_round = robots.unionByName(
-                    spark.createDataFrame(live_robots_rows, _schema.ROBOTS)
+            if new_rules:
+                # re-materialize the rules only when they changed, and
+                # release the table this replaces: nothing reads it
+                # once the previous round's foreground writes are done
+                # (its backgrounded docs write reads a checkpoint)
+                prior, robots = robots, _hold(
+                    robots.unionByName(
+                        spark.createDataFrame(new_rules, _schema.ROBOTS)
+                    ),
+                    held,
                 )
+                held.remove(prior)
+                RoundResult._release([prior])
 
         result: RoundResult = run_round(
-            frontier, url_seen, sidecar, budgets_round, robots_round, fetcher,
+            frontier, url_seen, sidecar, budgets_round, robots, fetcher,
             round_no, conf,
             fetch_size_hint=(prev or {}).get("frontier_next"),
             boot_config=boot_cfg,
@@ -335,7 +392,7 @@ def crawl(
         # written at commit time (it needs the docs count)
         from ..operators.scheduling import budget_accounting
 
-        if log_counts["order"] <= LOCAL_FOLD_MAX_ROWS:
+        if budget_rows is not None and log_counts["order"] <= LOCAL_FOLD_MAX_ROWS:
             catalog.write_budget_state_row_local(round_no, budget_rows)
         else:
             scheduled = log_round.filter(F.col("kind") == "order").select("domain")
@@ -384,15 +441,13 @@ def crawl(
             catalog.write_delta(nxt, "budgets", round_no)
             # read the delta back (truncates lineage — identical to what
             # a resume at round_no+1 would read) and re-collect the
-            # KB-scale row cache
+            # bounded row cache
             budgets_round = spark.read.schema(_schema.BUDGETS).parquet(
                 catalog.delta_path("budgets", round_no)
             )
-            budget_rows = budgets_round.select(
-                "domain", "capacity", "window_s"
-            ).collect()
+            budget_rows = _budget_rows(budgets_round)
             counters["capacity_total"] = int(
-                sum(r.capacity for r in budget_rows)
+                budgets_round.agg(F.sum("capacity")).first()[0] or 0
             )
 
         if n_docs is not None:

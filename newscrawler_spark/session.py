@@ -12,10 +12,40 @@ import os
 from pyspark.sql import SparkSession
 
 
+# cgroup memory-limit files, v2 then v1; the first that exists decides.
+# v2 reads "max" and v1 a value >= 2^60 when no limit is set.
+CGROUP_MEMORY_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def default_cores() -> int:
+    """$SPARK_GRAFT_CPUS (driver contract), else the CPUs this process
+    may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def _cgroup_memory_limit() -> int | None:
+    """The cgroup memory limit in bytes, or None when none is set."""
+    for path in CGROUP_MEMORY_LIMIT_FILES:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw == "max" or int(raw) >= 2**60:
+            return None
+        return int(raw)
+    return None
+
+
 def _default_driver_mem(cores: int) -> str:
-    """3 GB per core, capped at 48 GB and at 40 % of MemAvailable: the
-    heap is pinned and pre-touched at JVM start (see get_spark), so it
-    must fit in the memory the machine has free."""
+    """3 GB per core, capped at 48 GB, at 40 % of MemAvailable and at
+    40 % of the cgroup memory limit when one is set: the heap is pinned
+    and pre-touched at JVM start (see get_spark), so it must fit in the
+    memory the machine — and the container — has free."""
     mb = min(3 * 1024 * cores, 48 * 1024)
     try:
         with open("/proc/meminfo") as f:
@@ -25,6 +55,9 @@ def _default_driver_mem(cores: int) -> str:
                     break
     except OSError:
         pass  # no /proc: the per-core rule alone
+    limit = _cgroup_memory_limit()
+    if limit is not None:
+        mb = min(mb, limit * 4 // 10 // (1 << 20))
     return f"{mb}m"
 
 
@@ -36,13 +69,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS (driver contract) else 32.
+    ``cores`` defaults to default_cores().
     ``shuffle_partitions`` defaults to 2x cores — small enough to avoid
     tiny-task overhead at sandbox scale, and AQE coalesces further; on a
     real cluster this would be sized to total cores.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(8, 2 * cores)
     # resolved once so -Xms below always equals -Xmx, even when the

@@ -18,7 +18,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    cores = int(sys.argv[1]) if len(sys.argv) > 1 else 32
+    from newscrawler_spark.session import default_cores
+
+    cores = int(sys.argv[1]) if len(sys.argv) > 1 else default_cores()
     n_urls = int(sys.argv[2]) if len(sys.argv) > 2 else 400_000
     label = sys.argv[3] if len(sys.argv) > 3 else "baseline"
     import bench

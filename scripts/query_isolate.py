@@ -48,11 +48,13 @@ def main() -> None:
     if len(sys.argv) >= 2 and sys.argv[1] == "--worker":
         print(json.dumps({"wall": _one(sys.argv[2], sys.argv[3], int(sys.argv[4]))}))
         return
+    from newscrawler_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cores())
     ap.add_argument("--shared", action="store_true")
     args = ap.parse_args()
 

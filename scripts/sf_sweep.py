@@ -38,13 +38,13 @@ def main() -> None:
         "/tmp/sfscale/sf1",
     ]
     from newscrawler_spark.queries import QUERIES
-    from newscrawler_spark.session import get_spark
+    from newscrawler_spark.session import default_cores, get_spark
 
     # the FULL query surface (all 39 driver-checked entries), not just
     # the bench subset: a super-linear surprise in an un-benched query
     # is exactly what the sweep exists to catch
     names = [n for n in QUERIES if only is None or n in only]
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cores()
     spark = get_spark("sf-sweep", cores=cpus, shuffle_partitions=2 * cpus)
     sweep: dict[str, dict[str, float]] = {}
     rows: dict[str, int] = {}

@@ -1,6 +1,8 @@
 """Engine-vs-simulator equivalence (crawl ordering + URL-seen set, the
 north_rule correctness criteria) and kill/resume bit-identity."""
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -20,6 +22,7 @@ MAX_ROUNDS = 4
 CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8)
 CUCKOO_CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
                           seen_filter="cuckoo", cuckoo_capacity=2048)
+AIMD_CONF = dataclasses.replace(CONF, adaptive_budgets=True)
 
 
 @pytest.fixture(scope="module")
@@ -396,34 +399,49 @@ def test_robots_longest_prefix_wins(spark):
     assert {r.seq for r in denied.collect()} == {2}
 
 
-def test_adaptive_budgets_are_resumable_state(spark, world, tmp_path_factory):
+@pytest.fixture(scope="module")
+def aimd_result(spark, world, tmp_path_factory):
+    """An uninterrupted AIMD-mode crawl at the default local-fold gate:
+    (catalog, per-round counters)."""
+    seeds, pages, budgets, robots = world
+    cat = Catalog(tmp_path_factory.mktemp("aimd_full"))
+    seed_frontier(cat, seeds)
+    totals = crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
+                   max_rounds=MAX_ROUNDS, conf=AIMD_CONF)
+    return cat, totals
+
+
+@pytest.mark.parametrize("gate", [None, 0], ids=["default_gate", "gate_0"])
+def test_adaptive_budgets_are_resumable_state(spark, world, aimd_result, gate,
+                                              monkeypatch, tmp_path_factory):
     """AIMD mode (round-4 verdict task 7): budgets evolve per round from
     fetch outcomes, are persisted as per-round `budgets` deltas, and a
     kill/resume reproduces the uninterrupted run bit-identically —
-    including the budget-table state itself."""
-    import dataclasses
-
+    including the budget-table state itself.  With the local-fold gate
+    at 0 the budget table is not collected whole and budget_state folds
+    distributed, and the capacity totals and every budget delta must
+    still equal the default-gate run's."""
     seeds, pages, budgets, robots = world
-    conf = dataclasses.replace(CONF, adaptive_budgets=True)
-
-    cat_a = Catalog(tmp_path_factory.mktemp("aimd_full"))
-    seed_frontier(cat_a, seeds)
-    tot_a = crawl(spark, cat_a, FixtureFetcher(pages), budgets, robots,
-                  max_rounds=MAX_ROUNDS, conf=conf)
+    cat_a, tot_a = aimd_result
 
     # capacities actually evolved and were recorded per round
     caps = [tot_a[r]["capacity_total"] for r in sorted(tot_a)]
     assert len(caps) >= 2
     assert len(set(caps)) > 1, f"capacity never changed: {caps}"
 
+    if gate is not None:
+        monkeypatch.setattr(scheduler, "LOCAL_FOLD_MAX_ROWS", gate)
     cat_b = Catalog(tmp_path_factory.mktemp("aimd_resume"))
     seed_frontier(cat_b, seeds)
-    crawl(spark, cat_b, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=conf, stop_after_round=1)
+    tot_b = crawl(spark, cat_b, FixtureFetcher(pages), budgets, robots,
+                  max_rounds=MAX_ROUNDS, conf=AIMD_CONF, stop_after_round=1)
     assert cat_b.last_round == 1
-    crawl(spark, cat_b, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=conf)
+    tot_b.update(crawl(spark, cat_b, FixtureFetcher(pages), budgets, robots,
+                       max_rounds=MAX_ROUNDS, conf=AIMD_CONF))
 
+    assert {r: c["capacity_total"] for r, c in tot_b.items()} == {
+        r: c["capacity_total"] for r, c in tot_a.items()
+    }
     for table, key in [
         ("fetch_order", ["round", "domain", "rank", "canonical_url", "url"]),
         ("url_seen", ["canonical_url", "round_seen"]),
@@ -433,7 +451,44 @@ def test_adaptive_budgets_are_resumable_state(spark, world, tmp_path_factory):
         assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), table
     # the budget STATE deltas themselves are bit-identical
     for r in sorted(tot_a):
-        pa, pb = cat_a.delta_path("budgets", r), cat_b.delta_path("budgets", r)
-        da = spark.read.schema(schema.BUDGETS).parquet(pa)
-        db = spark.read.schema(schema.BUDGETS).parquet(pb)
-        assert da.exceptAll(db).isEmpty() and db.exceptAll(da).isEmpty(), r
+        for table, table_schema in [("budgets", schema.BUDGETS),
+                                    ("budget_state", None)]:
+            pa, pb = cat_a.delta_path(table, r), cat_b.delta_path(table, r)
+            reader = spark.read.schema(table_schema) if table_schema else spark.read
+            da, db = reader.parquet(pa), reader.parquet(pb)
+            assert da.exceptAll(db).isEmpty() and db.exceptAll(da).isEmpty(), (table, r)
+
+
+def test_round_invariant_inputs_evaluated_once(spark, world, engine_result,
+                                               tmp_path_factory):
+    """crawl() materializes budgets and robots once per call, so callers
+    need not cache them: an uncached input's lineage runs as often in a
+    1-round crawl as in a MAX_ROUNDS one."""
+    seeds, pages, _, _ = world
+    sc = spark.sparkContext
+
+    def counted(df):
+        """df's rows as an uncached frame whose every evaluation adds
+        its row count to the returned accumulator."""
+        acc = sc.accumulator(0)
+
+        def tick(row):
+            acc.add(1)
+            return row
+
+        rows = sc.parallelize(df.collect()).map(tick)
+        return spark.createDataFrame(rows, df.schema), acc
+
+    evaluations = []
+    for max_rounds in (1, MAX_ROUNDS):
+        budgets, n_budgets = counted(synth_budgets(spark, capacity_default=12))
+        robots, n_robots = counted(synth_robots(spark))
+        cat = Catalog(tmp_path_factory.mktemp(f"crawl_inputs_{max_rounds}"))
+        seed_frontier(cat, seeds)
+        crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
+              max_rounds=max_rounds, conf=CONF)
+        evaluations.append((n_budgets.value, n_robots.value))
+
+    assert all(evaluations[0]), evaluations
+    assert evaluations[0] == evaluations[1], evaluations
+    _assert_same_crawl(spark, engine_result, cat)

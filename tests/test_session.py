@@ -1,0 +1,38 @@
+"""Session sizing: the default core count and the default driver heap."""
+
+import os
+
+import pytest
+
+from newscrawler_spark import session
+
+
+def test_default_cores_follows_env_else_affinity(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cores() == 3
+
+
+@pytest.mark.parametrize(
+    "v2, v1, want_mb",
+    [
+        ("268435456\n", None, 256 * 4 // 10),  # cgroup v2 limit: 256 MiB
+        (None, "536870912\n", 512 * 4 // 10),  # cgroup v1 limit: 512 MiB
+        ("max\n", "536870912\n", None),  # v2 unlimited decides
+        (None, "9223372036854771712\n", None),  # v1 unlimited
+    ],
+    ids=["v2_limited", "v1_limited", "v2_unlimited", "v1_unlimited"],
+)
+def test_default_heap_capped_by_cgroup_limit(monkeypatch, tmp_path, v2, v1, want_mb):
+    """40 % of the cgroup memory limit caps the heap when a limit is
+    set; an unlimited cgroup leaves the MemAvailable/per-core rule."""
+    paths = (tmp_path / "memory.max", tmp_path / "memory.limit_in_bytes")
+    monkeypatch.setattr(session, "CGROUP_MEMORY_LIMIT_FILES", tuple(map(str, paths)))
+    uncapped = session._default_driver_mem(1)
+    assert int(uncapped[:-1]) > 512 * 4 // 10  # the caps below bite
+    for path, text in zip(paths, (v2, v1)):
+        if text is not None:
+            path.write_text(text)
+    want = uncapped if want_mb is None else f"{want_mb}m"
+    assert session._default_driver_mem(1) == want
