@@ -21,7 +21,7 @@ counts) as Spark-native stages:
      merges it everywhere with a single JVM literal ``replace``.  The
      driver round-trip per merge is ONE row (the argmax), same
      discipline as ``dedup.dup_clusters``; lineage is cut with
-     ``localCheckpoint`` every few rounds.
+     ``localCheckpoint`` every few merges.
   3. **Encoding** — applying the trained tokenizer to documents is an
      equi-join from exploded words to the final word→symbols table
      (the per-word merge result IS the encoding), i.e. the natural
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 # (the sentinel).  Same predicate in the DuckDB oracles.
 WORD_RE = "^[!-~]+$"
 N_MERGES = 8          # merge count used by the registry queries
-CHECKPOINT_EVERY = 4  # cut iterative lineage this often
+CHECKPOINT_EVERY = 4  # cut iterative lineage after this many merges
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -163,7 +163,7 @@ def train_bpe(
     wc = wc.localCheckpoint()
 
     merges: list[Row] = []
-    rounds = 0
+    rounds = since_checkpoint = 0
     while len(merges) < n_merges:
         # batch_size=1 keeps the exact classic limit(1) plan; batched
         # rounds over-fetch 4M candidates so conflict skips still leave
@@ -191,8 +191,12 @@ def train_bpe(
                 s, F.lit(f"|{lhs}||{rhs}|"), F.lit(f"|{lhs}{rhs}|")
             )
         wc = wc.withColumn("s", s)
-        if rounds % CHECKPOINT_EVERY == 0:
+        # one nested replace per merge: count merges, not rounds, so a
+        # batched round cannot stack batch_size x CHECKPOINT_EVERY of them
+        since_checkpoint += len(batch)
+        if since_checkpoint >= CHECKPOINT_EVERY:
             wc = wc.localCheckpoint()
+            since_checkpoint = 0
     if stats is not None:
         stats["rounds"] = rounds
     return merges, wc

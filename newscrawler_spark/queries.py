@@ -3242,6 +3242,35 @@ def _tuned(fn: Callable[[SparkSession, str], DataFrame]):
 
 
 _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "anchor_stats": q_anchor_stats,
+    "trap_detect": q_trap_detect,
+    "recrawl_schedule": q_recrawl_schedule,
+    "inverted_index": q_inverted_index,
+    "boilerplate_strip": q_boilerplate_strip,
+    "cms_counts": q_cms_counts,
+    "hll_distinct": q_hll_distinct,
+    "bpe_train": q_bpe_train,
+    "bpe_vocab": q_bpe_vocab,
+    "bpe_encode": q_bpe_encode,
+    "bm25_topk": q_bm25_topk,
+    "tfidf_terms": q_tfidf_terms,
+    "lm_bigrams": q_lm_bigrams,
+    "lm_perplexity": q_lm_perplexity,
+    "hashed_classifier": q_hashed_classifier,
+    "kmeans_assign": q_kmeans_assign,
+    "semdedup": q_semdedup,
+    "length_quantiles": q_length_quantiles,
+    "adaptive_budget": q_adaptive_budget,
+    "doc_embed": q_doc_embed,
+    "decontaminate_embed": q_decontaminate_embed,
+    "dup_span_fraction": q_dup_span_fraction,
+    "media_neardup": q_media_neardup,
+    "sample_stratified": q_sample_stratified,
+    "sample_balanced": q_sample_balanced,
+    "shuffle_shards": q_shuffle_shards,
+    "search_sweep": q_search_sweep,
+    "stream_metrics": q_stream_metrics,
+    "stream_sessionize": q_stream_sessionize,
     "url_canonicalize": q_url_canonicalize,
     "frontier_dedup": q_frontier_dedup,
     "seen_antijoin": q_seen_antijoin,
@@ -3292,35 +3321,6 @@ _RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "kind_prioritize": q_kind_prioritize,
     "corpus_report": q_corpus_report,
     "rank_prioritize": q_rank_prioritize,
-    "anchor_stats": q_anchor_stats,
-    "trap_detect": q_trap_detect,
-    "recrawl_schedule": q_recrawl_schedule,
-    "inverted_index": q_inverted_index,
-    "boilerplate_strip": q_boilerplate_strip,
-    "cms_counts": q_cms_counts,
-    "hll_distinct": q_hll_distinct,
-    "bpe_train": q_bpe_train,
-    "bpe_vocab": q_bpe_vocab,
-    "bpe_encode": q_bpe_encode,
-    "bm25_topk": q_bm25_topk,
-    "tfidf_terms": q_tfidf_terms,
-    "lm_bigrams": q_lm_bigrams,
-    "lm_perplexity": q_lm_perplexity,
-    "hashed_classifier": q_hashed_classifier,
-    "kmeans_assign": q_kmeans_assign,
-    "semdedup": q_semdedup,
-    "length_quantiles": q_length_quantiles,
-    "adaptive_budget": q_adaptive_budget,
-    "doc_embed": q_doc_embed,
-    "decontaminate_embed": q_decontaminate_embed,
-    "dup_span_fraction": q_dup_span_fraction,
-    "media_neardup": q_media_neardup,
-    "sample_stratified": q_sample_stratified,
-    "sample_balanced": q_sample_balanced,
-    "shuffle_shards": q_shuffle_shards,
-    "search_sweep": q_search_sweep,
-    "stream_metrics": q_stream_metrics,
-    "stream_sessionize": q_stream_sessionize,
 }
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

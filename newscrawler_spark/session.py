@@ -41,20 +41,45 @@ def _cgroup_memory_limit() -> int | None:
     return None
 
 
+def _mem_available() -> int | None:
+    """MemAvailable in bytes, or None without /proc/meminfo."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
+def _mem_bytes(size: str) -> int:
+    """Bytes in a heap size such as "4g" or "6000m"; a bare number is
+    MiB, as spark.driver.memory reads it."""
+    size = size.strip().lower()
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if size[-1:] in units:
+        return int(size[:-1]) * units[size[-1]]
+    return int(size) << 20
+
+
+def pretouch_heap(driver_mem: str, available: int | None) -> bool:
+    """Pre-touch the pinned heap only when it fits in ``available``
+    bytes (None: unknown, pre-touch).  An oversized heap then fails
+    only when the program fills it, instead of the pre-touching JVM
+    dying at start-up (JAVA_GATEWAY_EXITED)."""
+    return available is None or _mem_bytes(driver_mem) <= available
+
+
 def _default_driver_mem(cores: int) -> str:
     """3 GB per core, capped at 48 GB, at 40 % of MemAvailable and at
     40 % of the cgroup memory limit when one is set: the heap is pinned
     and pre-touched at JVM start (see get_spark), so it must fit in the
     memory the machine — and the container — has free."""
     mb = min(3 * 1024 * cores, 48 * 1024)
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    mb = min(mb, int(line.split()[1]) * 4 // 10 // 1024)
-                    break
-    except OSError:
-        pass  # no /proc: the per-core rule alone
+    available = _mem_available()
+    if available is not None:  # else the per-core rule alone
+        mb = min(mb, available * 4 // 10 // (1 << 20))
     limit = _cgroup_memory_limit()
     if limit is not None:
         mb = min(mb, limit * 4 // 10 // (1 << 20))
@@ -135,8 +160,10 @@ def get_spark(
                 # Alternatives measured WORSE on the same matrix:
                 # -Xmn8g 231 s (young too small at this alloc rate),
                 # G1+pretouch 192 s (pause-target GC taxes throughput).
-                "-XX:+AlwaysPreTouch"
-            ),
+                # Only for a heap that fits (pretouch_heap).
+                + ("-XX:+AlwaysPreTouch"
+                   if pretouch_heap(driver_mem, _mem_available()) else "")
+            ).strip(),
         )
         .config("spark.ui.enabled", "false")
         # floor on file-scan splits: CPU-heavy expressions fused into a

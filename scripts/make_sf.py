@@ -3,11 +3,12 @@ tables (TESTDATA.md): builds an sfX directory that is an exact K-fold
 replication of a source sf dir, with per-replica perturbations chosen
 so that every query's OUTPUT scales linearly (each replica is a
 self-contained shard that never matches another replica) — the shape a
-real larger sf would have.  This lets the scale sweep distinguish
-"wall grows because input grew" from "wall grows because output
-exploded", which pure row duplication cannot (10 identical copies of a
-doc turn every near-dup cluster of size c into 10c and pair counts grow
-~100x, a data artifact, not an engine property).
+real larger sf would have.  This lets a scale sweep (run
+``tools/compare_oracle.py`` at both dirs: it reports each query's
+seconds) distinguish "wall grows because input grew" from "wall grows
+because output exploded", which pure row duplication cannot (10
+identical copies of a doc turn every near-dup cluster of size c into 10c
+and pair counts grow ~100x, a data artifact, not an engine property).
 
 Per-table scheme (replica k = 0 keeps the source rows verbatim):
   documents   doc_id += k*N; every word gets suffix str(k) for k>0, so

@@ -36,3 +36,25 @@ def test_default_heap_capped_by_cgroup_limit(monkeypatch, tmp_path, v2, v1, want
             path.write_text(text)
     want = uncapped if want_mb is None else f"{want_mb}m"
     assert session._default_driver_mem(1) == want
+
+
+@pytest.mark.parametrize(
+    "driver_mem, available, want",
+    [
+        ("4g", 8 << 30, True),  # perfbench's heap on a box it runs on
+        ("4g", 4 << 30, True),  # exactly fits
+        ("4097m", 4 << 30, False),
+        ("16g", 15 << 30, False),  # an oversized SPARK_DRIVER_MEM
+        ("6000", 6000 << 20, True),  # a bare number is MiB
+        ("64g", None, True),  # no /proc/meminfo: pre-touch as before
+    ],
+)
+def test_pretouch_only_a_heap_that_fits(driver_mem, available, want):
+    assert session.pretouch_heap(driver_mem, available) is want
+
+
+def test_default_heap_is_pretouched():
+    """The default heap is at most 40 % of MemAvailable, so it always
+    keeps the pre-touch."""
+    heap = session._default_driver_mem(session.default_cores())
+    assert session.pretouch_heap(heap, session._mem_available())

@@ -154,6 +154,27 @@ def test_batched_job_count_reduction(spark):
     assert stats["rounds"] <= 512 // 10, f"rounds={stats['rounds']}"
 
 
+def test_batched_checkpoints_count_merges(spark, monkeypatch):
+    """Lineage is cut by merges, not rounds: between two checkpoints a
+    batch-8 run stacks fewer than CHECKPOINT_EVERY + 8 nested replaces,
+    and never checkpoints before CHECKPOINT_EVERY merges."""
+    words = [f"w{i:04d}end{i % 7}" for i in range(3000)]
+    docs = _docs(spark, [" ".join(words[i::8]) for i in range(8)])
+    calls = []
+    real = type(docs).localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(docs), "localCheckpoint", counted)
+    merges, _ = BPE.train_bpe(docs, n_merges=64, batch_size=8)
+    in_loop = len(calls) - 1  # the first materializes the word table
+    every = BPE.CHECKPOINT_EVERY
+    assert len(merges) == 64
+    assert len(merges) // (every + 8 - 1) <= in_loop <= len(merges) // every
+
+
 def test_batched_merges_commute_with_sequential_application(spark):
     """Within one batched round the selected pairs share no symbols, so
     applying the batch in one pass must equal replaying the same merges
