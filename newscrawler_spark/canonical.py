@@ -214,24 +214,13 @@ def domain_of_py(url: str) -> str:
     return m.group(1).rsplit("@", 1)[-1].split(":", 1)[0]
 
 
-def canonical_url(url: Column | str) -> Column:
-    """Seen-set identity.
-
-    Known platform → 'platform:article_id' (exactly the reference's
-    filesystem key, base.py:99-107 saves data/{article_id}.json — we prefix
-    the platform to avoid cross-platform id collisions).
-    Unknown platform → url minus query/fragment, one trailing '/' chopped.
-    """
-    c = F.col(url) if isinstance(url, str) else url
-    p = detect_platform(c)
-    aid = article_id(c, p)
-    fallback = F.regexp_replace(F.substring_index(F.substring_index(c, "#", 1), "?", 1), "/+$", "")
-    return F.when(
-        p.isNotNull() & aid.isNotNull() & (aid != ""), F.concat_ws(":", p, aid)
-    ).otherwise(fallback)
-
-
 def canonical_url_py(url: str) -> str:
+    """Seen-set identity (twin of with_url_identity's canonical_url).
+
+    Known platform → 'platform:article_id' (the reference's filesystem
+    key, base.py:99-107, prefixed with the platform against cross-platform
+    id collisions); otherwise the url minus query/fragment and trailing '/'.
+    """
     p = detect_platform_py(url)
     if p is not None:
         aid = article_id_py(url, p)

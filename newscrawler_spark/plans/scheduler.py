@@ -16,10 +16,13 @@ resume reads the latest sidecar instead of rescanning 10^10 seen rows.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from .. import schema
 from ..operators.seen import SEEN_KINDS, fold_sidecar
 from ..sources.catalog import Catalog
 from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, run_round
@@ -48,8 +51,6 @@ def bootstrap_hosts_for_round(
         driver sees at most K rows however wide the frontier is.  The
         long tail keeps static platform config until it carries weight.
     """
-    from pyspark.sql import functions as F
-
     mass = (
         frontier.filter(F.col("domain").isNotNull())
         .groupBy("domain")
@@ -160,8 +161,14 @@ def _crawl_rounds(
     totals: dict = {}
     robots_done: set[str] = set()
 
+    # budgeted hosts to bootstrap alongside each round's own frontier
+    # hosts, bounded like them: the first max_hosts_per_round by domain
     boot_hosts = (
-        [r.domain for r in budgets.select("domain").distinct().collect()]
+        [
+            r.domain
+            for r in budgets.select("domain").distinct().orderBy("domain")
+            .limit(header_bootstrap.max_hosts_per_round).collect()
+        ]
         if header_bootstrap is not None
         else None
     )
@@ -174,13 +181,9 @@ def _crawl_rounds(
     # each AIMD update.
     budgets_round = budgets
     if conf.adaptive_budgets and catalog.last_round >= 0:
-        import os as _os_ab
-
-        from .. import schema as _schema_ab
-
         bpath = catalog.delta_path("budgets", catalog.last_round)
-        if _os_ab.path.isdir(bpath):
-            budgets_round = spark.read.schema(_schema_ab.BUDGETS).parquet(bpath)
+        if os.path.isdir(bpath):
+            budgets_round = spark.read.schema(schema.BUDGETS).parquet(bpath)
     budget_rows = _budget_rows(budgets_round)
     seen_kind = SEEN_KINDS[conf.seen_filter]
 
@@ -227,9 +230,7 @@ def _crawl_rounds(
         # explicit schemas on the per-round reads: schema inference costs
         # a driver-side footer scan per round (pure fixed cost), and at
         # scale a delta's schema is table metadata, never file footers
-        from .. import schema as _schema
-
-        frontier = spark.read.schema(_schema.FRONTIER).parquet(frontier_path)
+        frontier = spark.read.schema(schema.FRONTIER).parquet(frontier_path)
         if prev is not None:
             if prev.get("frontier_next", 0) == 0:
                 break
@@ -281,7 +282,7 @@ def _crawl_rounds(
                 # (its backgrounded docs write reads a checkpoint)
                 prior, robots = robots, _hold(
                     robots.unionByName(
-                        spark.createDataFrame(new_rules, _schema.ROBOTS)
+                        spark.createDataFrame(new_rules, schema.ROBOTS)
                     ),
                     held,
                 )
@@ -311,8 +312,6 @@ def _crawl_rounds(
         # big writes as Observations.
         log_counts = catalog.write_round_log(result.round_log, round_no)
         n_next = catalog.write_delta(result.frontier_next, "frontier", round_no + 1)
-
-        from pyspark.sql import functions as F
 
         # sidecar + budget accounting both re-read the just-written
         # (small) round_log delta — partition-pruned by kind,
@@ -357,7 +356,7 @@ def _crawl_rounds(
             # cores).  One narrow shuffle of the batch text buys full
             # parallelism for the 16x-md5-per-shingle hot loop.
             batch = (
-                spark.read.schema(_schema.DOCS)
+                spark.read.schema(schema.DOCS)
                 .parquet(catalog.delta_path("docs", round_no))
                 .select("doc_id", doc_text().alias("text"))
                 .repartition(conf.n_partitions)
@@ -442,7 +441,7 @@ def _crawl_rounds(
             # read the delta back (truncates lineage — identical to what
             # a resume at round_no+1 would read) and re-collect the
             # bounded row cache
-            budgets_round = spark.read.schema(_schema.BUDGETS).parquet(
+            budgets_round = spark.read.schema(schema.BUDGETS).parquet(
                 catalog.delta_path("budgets", round_no)
             )
             budget_rows = _budget_rows(budgets_round)
@@ -451,11 +450,9 @@ def _crawl_rounds(
             )
 
         if n_docs is not None:
-            # docs already on disk (dedup mode) — commit inline
-            catalog.write_metrics_row(round_no, counters)
-            catalog.commit_round(round_no, counters)
-            result.unpersist()
-            totals[round_no] = counters
+            # docs already on disk (dedup mode): the join only reports it
+            def _join(n=n_docs) -> int:
+                return n
         else:
             # spawn the docs write LAST (all foreground writes done) so
             # it overlaps only the next round's serial driver compile.
@@ -483,13 +480,15 @@ def _crawl_rounds(
                     raise out["exc"]
                 return out["n"]
 
-            pending = {
-                "round_no": round_no,
-                "counters": counters,
-                "join": _join,
-                "result": result,
-                "t_round": t_round,
-            }
+        pending = {
+            "round_no": round_no,
+            "counters": counters,
+            "join": _join,
+            "result": result,
+            "t_round": t_round,
+        }
+        if n_docs is not None:
+            _finalize_pending()  # commit inline: nothing to overlap
 
         if stop_after_round is not None and round_no >= stop_after_round:
             break

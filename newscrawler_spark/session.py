@@ -86,6 +86,45 @@ def _default_driver_mem(cores: int) -> str:
     return f"{mb}m"
 
 
+def _sql_confs(cores: int, shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's runtime-mutable SQL confs, one list for get_spark
+    and tune().  None of them changes results.
+
+    shuffle.partitions/AQE: 2x total cores + AQE coalesce — small enough
+    to avoid tiny-task overhead at sandbox scale (Spark's 200 default is
+    200 near-empty tasks per Exchange, and 200 state-store instances per
+    stateful streaming query); on a cluster it sizes to executor count.
+    """
+    return {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or max(8, 2 * cores)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # floor on file-scan splits: CPU-heavy expressions fused into a
+        # parquet scan (simhash's 60-bit fold, curation regexes) are
+        # otherwise bound by file split count — a 35 MB table is 1-2
+        # splits under the 128 MB default, serializing the compute on a
+        # 32-core box.  A FLOOR (not a smaller maxPartitionBytes) is
+        # the scale-safe form: at 100 TB the natural split count dwarfs
+        # it and the knob is inert
+        "spark.sql.files.minPartitionNum": str(2 * cores),
+        # the floor is computed as max(openCostInBytes, bytes/minPartitionNum),
+        # so the 4 MB default open-cost re-serializes any table under
+        # 4 MB x minPartitionNum; 64 KB keeps the floor effective while
+        # still packing genuinely tiny files together
+        "spark.sql.files.openCostInBytes": "65536",
+        # constraint propagation explodes exponentially on our aliased
+        # 11-branch CASE identity expressions when they become join keys
+        # (3.2 MB optimized plans, minutes of janino time); disabling it
+        # keeps plans ~KB-sized with no semantic change (tune() has the
+        # measurements)
+        "spark.sql.constraintPropagation.enabled": "false",
+        # deterministic outputs: never let timezone/locale leak into results
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+
+
 def get_spark(
     app_name: str = "newscrawler_spark",
     cores: int | None = None,
@@ -95,30 +134,22 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``cores`` defaults to default_cores().
-    ``shuffle_partitions`` defaults to 2x cores — small enough to avoid
-    tiny-task overhead at sandbox scale, and AQE coalesces further; on a
-    real cluster this would be sized to total cores.
+    ``shuffle_partitions`` defaults to 2x cores (see _sql_confs).
+    ``SPARK_GRAFT_EXTRA_CONF`` and then ``extra_conf`` override any conf.
     """
     if cores is None:
         cores = default_cores()
-    if shuffle_partitions is None:
-        shuffle_partitions = max(8, 2 * cores)
     # resolved once so -Xms below always equals -Xmx, even when the
     # caller overrides the heap via SPARK_DRIVER_MEM or extra_conf
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem(cores)
     if extra_conf and "spark.driver.memory" in extra_conf:
         driver_mem = extra_conf["spark.driver.memory"]
 
+    builder = SparkSession.builder.master(f"local[{cores}]").appName(app_name)
+    for k, v in _sql_confs(cores, shuffle_partitions).items():
+        builder = builder.config(k, v)
     builder = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        builder.config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Heap scales WITH the core budget (3 GB/core, capped at 48g —
         # the cluster model: an executor's spark.executor.memory is
         # provisioned per its cores, so a 4x-bigger cluster brings 4x
@@ -166,27 +197,7 @@ def get_spark(
             ).strip(),
         )
         .config("spark.ui.enabled", "false")
-        # floor on file-scan splits: CPU-heavy expressions fused into a
-        # parquet scan (simhash's 60-bit fold, curation regexes) are
-        # otherwise bound by file split count — a 35 MB table is 1-2
-        # splits under the 128 MB default, serializing the compute on a
-        # 32-core box.  A FLOOR (not a smaller maxPartitionBytes) is
-        # the scale-safe form: at 100 TB the natural split count dwarfs
-        # it and the knob is inert
-        .config("spark.sql.files.minPartitionNum", str(2 * cores))
-        # the floor is computed as max(openCostInBytes, bytes/minPartitionNum),
-        # so the 4 MB default open-cost re-serializes any table under
-        # 4 MB x minPartitionNum; 64 KB keeps the floor effective while
-        # still packing genuinely tiny files together
-        .config("spark.sql.files.openCostInBytes", "65536")
-        # deterministic outputs: never let timezone/locale leak into results
         .config("spark.sql.datetime.java8API.enabled", "true")
-        # constraint propagation explodes exponentially on our aliased
-        # 11-branch CASE identity expressions when they become join keys
-        # (3.2 MB optimized plans, minutes of janino time); disabling it
-        # keeps plans ~KB-sized with no semantic change (tune() below has
-        # the measurements)
-        .config("spark.sql.constraintPropagation.enabled", "false")
         # lz4 serialized-RDD blocks: consulted only by serialized
         # storage levels — FixtureFetcher persists its page corpus at
         # Python's MEMORY_AND_DISK, which is serialized; shuffle and
@@ -222,23 +233,9 @@ def tune(spark: SparkSession) -> SparkSession:
     inline aliases into inferred constraints multiplicatively — a 6.7 KB
     plan became 3.2 MB and one 500-row anti-join took 100+ s of janino
     compile time.  Off: 14 KB plan, 3.6 s.  No result change (it only
-    prunes an optional inference rule).
-
-    shuffle.partitions/AQE: an untuned external session keeps Spark's
-    200 default — at verification scale that is 200 near-empty tasks
-    per Exchange (and 200 state-store instances per stateful streaming
-    query).  2x total cores + AQE coalesce is the engine's sizing; both
-    confs are runtime-mutable, and on a real cluster the same call
-    sizes them to executor count.  None of these change results.
+    prunes an optional inference rule).  An untuned external session
+    would also keep Spark's 200 shuffle partitions (see _sql_confs).
     """
-    cores = spark.sparkContext.defaultParallelism
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(8, 2 * cores)))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.files.minPartitionNum", str(2 * cores))
-    spark.conf.set("spark.sql.files.openCostInBytes", "65536")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    for k, v in _sql_confs(spark.sparkContext.defaultParallelism).items():
+        spark.conf.set(k, v)
     return spark

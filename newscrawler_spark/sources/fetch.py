@@ -4,8 +4,11 @@ Two implementations behind one seam:
 
   * FixtureFetcher — joins the eligible frontier against an offline
     ``pages`` table (url, status, html, out_links).  This is the test /
-    bench path: deterministic, no network.  Retry semantics collapse
-    (a fixture status is stable across attempts), so attempts is
+    bench path: deterministic, no network.  The S3 iframe hop is
+    resolved once, when the corpus is cached: one cached corpus maps
+    each URL straight to the page a fetch returns, and a cached URL
+    list recovers misses, so a round is one lookup.  Retry semantics
+    collapse (a fixture status is stable across attempts), so attempts is
     reported as 1 for 200s and `max_attempts` for failures — exactly
     what tenacity's stop_after_attempt(3) would have produced for a
     deterministic failure (/root/reference/news_crawler/core/base.py:73-78).
@@ -127,6 +130,15 @@ def iframe_target_col(html_col, url_col):
     return F.when(src == "", F.lit(None).cast("string")).otherwise(resolved)
 
 
+def _miss_page() -> dict:
+    """The page a fetch of a URL absent from the corpus returns."""
+    return {
+        "status": F.lit(0),
+        "html": F.lit(None).cast("string"),
+        "out_links": F.array().cast("array<string>"),
+    }
+
+
 class FixtureFetcher:
     # Above this many request rows the broadcast hint is withheld and the
     # join falls back to a plain shuffle join: broadcasting an unbounded
@@ -147,11 +159,11 @@ class FixtureFetcher:
         self.broadcast_max_rows = (
             self.BROADCAST_MAX_ROWS if broadcast_max_rows is None else broadcast_max_rows
         )
-        # The page corpus is probed every round (main lookup + iframe
-        # hop): persist the projection once so rounds read the columnar
-        # cache instead of re-scanning/decompressing the parquet corpus
-        # each time (event-log audit: repeated pages scans were ~40% of
-        # all crawl task time).  MEMORY_AND_DISK: spills, never OOMs.
+        # The page corpus is probed every round: persist it once so
+        # rounds read the columnar cache instead of re-scanning and
+        # decompressing the parquet corpus each time (event-log audit:
+        # repeated pages scans were ~40% of all crawl task time).
+        # MEMORY_AND_DISK: spills, never OOMs.
         #
         # HASH-repartition (url) to corpus_partitions, not coalesce: the
         # fetch-join output inherits the corpus partitioning, so the
@@ -173,53 +185,57 @@ class FixtureFetcher:
         src = pages.select("url", "status", "html", "out_links")
         if corpus_partitions is not None:
             src = src.repartition(corpus_partitions, "url")
-        self.pages = src.persist(StorageLevel.MEMORY_AND_DISK)
-        # URL-only projection, cached across rounds: the miss-recovery
-        # anti-join probes this instead of rescanning page HTML
-        self._urls = pages.select(F.col("url").alias("p_url"))
-        if corpus_partitions is not None:
-            self._urls = self._urls.coalesce(corpus_partitions)
-        self._urls = self._urls.cache()
-        # S3 hop prepass, ONCE at init (amortized over rounds): which
-        # corpus pages are iframe HOLDERS (url → resolved target), and
-        # the sub-corpus their targets can reach.  fetch() previously
-        # detected holders per round by regexing every fetched page's
-        # html AND resolved them by streaming the full HTML cache a
-        # second (and, via the nonhop/hop filter-split re-executing the
-        # main join, a third) time — measured as the crawl's dominant
-        # memory-bandwidth term.  With the mapping precomputed, a round
-        # streams the corpus exactly once: hop requests split off by a
-        # broadcast join against the (tiny, html-free) holder mapping
-        # and resolve against the (small) target sub-corpus.  A target
-        # can only be a URL some 200-status corpus page references, so
-        # the sub-corpus is exhaustive by construction; misses still
-        # recover against the full URL list.
+        # S3 two-phase hop, resolved ONCE here (the simulator's rule): a
+        # 200 iframe HOLDER's row carries its target's page — status 0,
+        # null html and no links when the target is not in the corpus —
+        # and keeps the holder's url; every other row is as fetched.
+        # Holders resolve against the small target sub-corpus (a
+        # semi-join on the distinct targets), and the resolved rows
+        # attach to the corpus by a join that streams it.  `src` is
+        # cached only while the resolved corpus is built, so its three
+        # readers scan the source and shuffle its HTML once.
+        src = src.persist(StorageLevel.MEMORY_AND_DISK)
         holders = (
-            self.pages.filter(F.col("status") == 200)
+            src.filter(F.col("status") == 200)
             .select(
                 F.col("url").alias("h_url"),
                 iframe_target_col(F.col("html"), F.col("url")).alias("h_target"),
             )
             .filter(F.col("h_target").isNotNull())
         )
-        self._holders = holders.persist(StorageLevel.MEMORY_AND_DISK)
-        targets = self._holders.select(F.col("h_target").alias("t_url")).distinct()
-        hop_pages = self.pages.join(
-            targets, self.pages["url"] == targets["t_url"], "left_semi"
+        targets = src.join(
+            holders.select(F.col("h_target").alias("t")).distinct(),
+            F.col("url") == F.col("t"),
+            "left_semi",
+        ).select(*[F.col(c).alias(f"t_{c}") for c in src.columns])
+        hops = holders.join(targets, F.col("h_target") == F.col("t_url"), "left")
+        resolved = src.join(hops, F.col("url") == F.col("h_url"), "left").select(
+            F.col("url").alias("p_url"),
+            *[
+                F.when(F.col("h_url").isNull(), F.col(c))
+                .when(F.col("t_url").isNotNull(), F.col(f"t_{c}"))
+                .otherwise(miss)
+                .alias(c)
+                for c, miss in _miss_page().items()
+            ],
         )
+        self.pages = resolved.persist(StorageLevel.MEMORY_AND_DISK)
+        self.pages.count()  # fill the cache before its input is released
+        src.unpersist()
+        # URL-only projection, cached across rounds: the miss-recovery
+        # anti-join probes this instead of rescanning page HTML
+        self._urls = pages.select(F.col("url").alias("p_url"))
         if corpus_partitions is not None:
-            hop_pages = hop_pages.coalesce(corpus_partitions)
-        self._hop_pages = hop_pages.persist(StorageLevel.MEMORY_AND_DISK)
+            self._urls = self._urls.coalesce(corpus_partitions)
+        self._urls = self._urls.cache()
 
     def close(self) -> None:
-        """Release the cached corpus projections.  Callers that outlive
+        """Release the cached corpus and URL list.  Callers that outlive
         a crawl (bench, long-lived sessions) must call this — otherwise
         the persisted blocks live for the JVM lifetime; context-manager
         use (``with FixtureFetcher(pages) as f:``) does it for you."""
         self.pages.unpersist()
         self._urls.unpersist()
-        self._holders.unpersist()
-        self._hop_pages.unpersist()
 
     def __enter__(self) -> "FixtureFetcher":
         return self
@@ -228,11 +244,7 @@ class FixtureFetcher:
         self.close()
 
     def _lookup(
-        self,
-        requests: DataFrame,
-        url_col: str,
-        hint_broadcast: bool = True,
-        pages_src: DataFrame | None = None,
+        self, requests: DataFrame, url_col: str, hint_broadcast: bool = True
     ) -> DataFrame:
         """Left-join `requests` against the page table WITHOUT ever
         shuffling page HTML: the request side (a round's eligible rows,
@@ -241,60 +253,25 @@ class FixtureFetcher:
         (The naive left join sort-merge-shuffled the full HTML corpus —
         GBs — every round.)  With hint_broadcast=False the explicit
         hints are withheld and AQE/planner statistics pick the strategy
-        (the oversized-request fallback).  pages_src narrows the streamed
-        table (the iframe-target sub-corpus for S3 hops); miss recovery
-        always probes the FULL url list, so a request absent from a
-        narrowed pages_src but present in the corpus would surface as a
-        found-vs-missing contradiction rather than silently misses —
-        callers must pass a pages_src exhaustive for their request set."""
-        pages = (pages_src if pages_src is not None else self.pages).select(
-            F.col("url").alias("p_url"), "status", "html", "out_links"
-        )
+        (the oversized-request fallback)."""
         req = F.broadcast(requests) if hint_broadcast else requests
-        found = pages.join(
-            req, pages["p_url"] == requests[url_col], "inner"
+        found = self.pages.join(
+            req, self.pages["p_url"] == requests[url_col], "inner"
         ).drop("p_url")
         missing = requests.join(
             self._urls, requests[url_col] == self._urls["p_url"], "left_anti"
-        )
-        missing = (
-            missing.withColumn("status", F.lit(0))
-            .withColumn("html", F.lit(None).cast("string"))
-            .withColumn("out_links", F.array().cast("array<string>"))
-        )
+        ).select("*", *[v.alias(c) for c, v in _miss_page().items()])
         return found.unionByName(missing)
 
     def fetch(self, eligible: DataFrame, size_hint_rows: int | None = None) -> DataFrame:
         """size_hint_rows: a free upper bound on the request row count
         (the scheduler passes the previous round's committed
         frontier_next counter — no extra job); None means "unknown,
-        assume broadcastable" (tests / first round over seed lists)."""
+        assume broadcastable" (tests / first round over seed lists).
+        Iframe holders need no second lookup: the cached corpus already
+        holds their hop targets' pages (see __init__)."""
         bc = size_hint_rows is None or size_hint_rows <= self.broadcast_max_rows
-
-        # S3 two-phase hop: rows whose page is an iframe holder fetch the
-        # target within the same stage; the document keeps the original
-        # URL identity.  The hop/nonhop split happens BEFORE the main
-        # join, against the init-time holder mapping (broadcast, html-
-        # free): nonhop requests stream the full corpus exactly once,
-        # hop requests resolve against the small target sub-corpus.
-        # (Splitting AFTER the join — the previous shape — re-executed
-        # the corpus-streaming join once per filter branch and regexed
-        # every page's html every round.)
-        holders = F.broadcast(self._holders)
-        hop = eligible.join(
-            holders, eligible["url"] == holders["h_url"], "inner"
-        ).drop("h_url")
-        nonhop = eligible.join(
-            holders, eligible["url"] == holders["h_url"], "left_anti"
-        )
-        out = self._lookup(nonhop, "url", hint_broadcast=bc)
-        # hop rows are the (few) iframe-holder pages — always broadcast
-        resolved = self._lookup(
-            hop, "h_target", pages_src=self._hop_pages
-        ).drop("h_target")
-        out = out.unionByName(resolved)
-
-        return out.withColumn(
+        return self._lookup(eligible, "url", hint_broadcast=bc).withColumn(
             "attempts",
             F.when(F.col("status") == 200, F.lit(1)).otherwise(
                 F.lit(self.max_attempts)

@@ -4,14 +4,11 @@ the reference's documented get_article_id examples."""
 from pyspark.sql import functions as F
 
 from newscrawler_spark.canonical import (
-    article_id,
     article_id_py,
-    canonical_url,
     canonical_url_py,
-    detect_platform,
     detect_platform_py,
-    domain_of,
     domain_of_py,
+    with_url_identity,
 )
 
 # (url, expected_platform, expected_article_id) — ids from the reference
@@ -49,20 +46,16 @@ def test_python_twins():
 
 
 def test_spark_matches_python(spark):
+    """The four identity columns the crawl computes == the _py twins."""
     df = spark.createDataFrame([(u,) for u, _, _ in CASES], ["url"])
-    rows = df.select(
-        "url",
-        detect_platform("url").alias("p"),
-        article_id("url", detect_platform("url")).alias("aid"),
-        canonical_url("url").alias("canon"),
-        domain_of("url").alias("dom"),
-    ).collect()
+    rows = with_url_identity(df).collect()
+    assert len(rows) == len(CASES)
     for r in rows:
-        assert r["p"] == detect_platform_py(r["url"]), r["url"]
-        if r["p"]:
-            assert r["aid"] == article_id_py(r["url"], r["p"]), r["url"]
-        assert r["canon"] == canonical_url_py(r["url"]), r["url"]
-        assert r["dom"] == domain_of_py(r["url"]), r["url"]
+        assert r["platform"] == detect_platform_py(r["url"]), r["url"]
+        if r["platform"]:
+            assert r["article_id"] == article_id_py(r["url"], r["platform"]), r["url"]
+        assert r["canonical_url"] == canonical_url_py(r["url"]), r["url"]
+        assert r["domain"] == domain_of_py(r["url"]), r["url"]
 
 
 def test_canonical_dedups_query_noise():

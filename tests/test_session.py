@@ -58,3 +58,68 @@ def test_default_heap_is_pretouched():
     keeps the pre-touch."""
     heap = session._default_driver_mem(session.default_cores())
     assert session.pretouch_heap(heap, session._mem_available())
+
+
+class _Recorder:
+    """Stands in for SparkSession.builder and for spark.conf: records
+    every conf set, last write wins."""
+
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def master(self, _):
+        return self
+
+    appName = master
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def set(self, k, v):
+        self.conf[k] = v
+
+    def getOrCreate(self):
+        class _Spark:
+            class sparkContext:
+                @staticmethod
+                def setLogLevel(_):
+                    pass
+
+        return _Spark()
+
+
+def test_get_spark_and_tune_set_one_conf_list(monkeypatch):
+    """get_spark and tune() set the same runtime SQL confs, and
+    SPARK_GRAFT_EXTRA_CONF then extra_conf still override them."""
+    builder = _Recorder()
+    monkeypatch.setattr(session.SparkSession, "builder", builder)
+    monkeypatch.delenv("SPARK_GRAFT_EXTRA_CONF", raising=False)
+    session.get_spark("t", cores=3, shuffle_partitions=5)
+    want = session._sql_confs(3, 5)
+    assert len(want) == 9
+    assert {k: builder.conf[k] for k in want} == want
+
+    tuned = _Recorder()
+
+    class _Session:
+        conf = tuned
+
+        class sparkContext:
+            defaultParallelism = 3
+
+    session.tune(_Session())
+    assert tuned.conf == session._sql_confs(3)
+
+    builder.conf.clear()
+    monkeypatch.setenv(
+        "SPARK_GRAFT_EXTRA_CONF",
+        '{"spark.sql.shuffle.partitions": 7, "spark.sql.adaptive.enabled": "false"}',
+    )
+    session.get_spark(
+        "t", cores=3, extra_conf={"spark.sql.adaptive.enabled": "true",
+                                  "spark.sql.session.timeZone": "Asia/Seoul"},
+    )
+    assert builder.conf["spark.sql.shuffle.partitions"] == "7"
+    assert builder.conf["spark.sql.adaptive.enabled"] == "true"
+    assert builder.conf["spark.sql.session.timeZone"] == "Asia/Seoul"

@@ -537,6 +537,53 @@ def test_header_bootstrap_covers_mid_crawl_hosts(spark, tmp_path):
     assert "www.bbc.com" in seen_hosts          # discovered mid-crawl
 
 
+def test_header_bootstrap_bounds_budget_hosts(spark, tmp_path):
+    """The budgeted hosts the driver collects for bootstrapping are
+    bounded by max_hosts_per_round (first by domain), like the round's
+    own frontier hosts."""
+    from newscrawler_spark import schema
+    from newscrawler_spark.operators.projections import HeaderBootstrap
+    from newscrawler_spark.plans.crawl_round import RoundConfig
+    from newscrawler_spark.plans.scheduler import crawl, seed_frontier
+    from newscrawler_spark.sources.catalog import Catalog
+    from newscrawler_spark.sources.fetch import FixtureFetcher
+
+    seed = "https://www.toutiao.com/article/7100000000000000001/"
+    pages = spark.createDataFrame(
+        [(seed, 200, "<html></html>", [])],
+        "url string, status int, html string, out_links array<string>",
+    )
+    frontier = spark.createDataFrame(
+        [(seed, "www.toutiao.com", 0, 0, 0, 0, 0, seed)], schema.FRONTIER
+    )
+    budget_hosts = [f"b{i:02d}.example" for i in range(50)]
+    budgets = spark.createDataFrame(
+        [(h, 10, 60, None) for h in reversed(budget_hosts)], schema.BUDGETS
+    )
+    robots = spark.createDataFrame([], schema.ROBOTS)
+
+    refreshed: list[list[str]] = []
+
+    class Recording(HeaderBootstrap):
+        def refresh(self, hosts, round_no):
+            refreshed.append(list(hosts))
+            super().refresh(hosts, round_no)
+
+    cat = Catalog(str(tmp_path / "cat"))
+    seed_frontier(cat, frontier)
+    with FixtureFetcher(pages, corpus_partitions=2) as f:
+        crawl(
+            spark, cat, f, budgets, robots, max_rounds=1,
+            conf=RoundConfig(n_partitions=2, n_buckets=4, m_bits=1 << 12),
+            header_bootstrap=Recording(
+                lambda h: {"Cookie": h}, ttl_rounds=10, max_hosts_per_round=5
+            ),
+        )
+    assert refreshed, "crawl never refreshed the bootstrap"
+    extra = set(refreshed[0]) - {"www.toutiao.com"}
+    assert extra == set(budget_hosts[:5])
+
+
 def test_phash_and_generic_hamming_pairs(spark):
     """Media near-dup plumbing: sign-quantized phash bits come out in
     position, and the generic pigeonhole join finds exactly the pairs
