@@ -17,7 +17,6 @@ Design notes (SURVEY.md §2.10):
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -101,8 +100,3 @@ def extract_udf(html: pd.Series, url: pd.Series, platform: pd.Series) -> pd.Data
     rows = [extract_one(h, u, p) for h, u, p in zip(html, url, platform)]
     return pd.DataFrame(rows)
 
-
-def with_extraction(df, html_col: str = "html", url_col: str = "url",
-                    platform_col: str = "platform") -> Column:
-    """Convenience: the extraction struct column for a fetched frame."""
-    return extract_udf(F.col(html_col), F.col(url_col), F.col(platform_col))

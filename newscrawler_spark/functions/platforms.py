@@ -44,13 +44,6 @@ def _find_exact(root: Node, tag: str, class_attr: str) -> Node | None:
     return None
 
 
-def _find_all_exact(root: Node, tag: str, class_attr: str) -> list[Node]:
-    return [
-        n for n in root.iter()
-        if n.tag == tag and n.attrs.get("class") == class_attr
-    ]
-
-
 def _find_all_attr(root: Node, attr: str, value: str) -> list[Node]:
     return [n for n in root.iter() if n.attrs.get(attr) == value]
 

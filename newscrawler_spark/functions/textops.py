@@ -60,10 +60,6 @@ def token_count_bpe(col: Column | str) -> Column:
     return F.size(F.regexp_extract_all(_c(col), F.lit(TOKEN_REGEX), F.lit(0)))
 
 
-def char_count(col: Column | str) -> Column:
-    return F.length(_c(col))
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Fraction of non-space chars that are not alphanumeric."""
     c = _c(col)
@@ -119,11 +115,6 @@ def langid(col: Column | str) -> Column:
         cond = (s == best_score) & (best_score > 0)
         expr = F.when(cond, F.lit(lang)) if expr is None else expr.when(cond, F.lit(lang))
     return expr.otherwise(F.lit("und"))
-
-
-def fingerprint_md5(col: Column | str) -> Column:
-    """Whole-document fingerprint: md5 of lowercased, space-normalized text."""
-    return F.md5(F.regexp_replace(F.lower(F.trim(_c(col))), r"\s+", " "))
 
 
 def shingles(col: Column | str, k: int = 3) -> Column:

@@ -5,11 +5,13 @@ holds the cuckoo kind's per-bucket kernels — ``fold_bucket`` and
 ``probe_bucket``, registered in ``seen.SEEN_KINDS`` — plus the
 cuckoo-only ``delete_cuckoo``; the probe plan and the two folds that
 run the kernels are shared with bloom (``seen.filter_unseen``,
-``seen.fold_sidecar``, ``Catalog.write_cuckoo_local``).  Same contract
-as bloom: the filter is *prune-only* — a negative is definitive (no
-false negatives), a positive goes to the exact anti-join — so swapping
-it for the bloom sidecar cannot change any result, only the pruned
-fraction.  What the cuckoo variant adds over bloom:
+``seen.fold_sidecar``, ``Catalog.write_cuckoo_local``).  The crawl
+itself runs bloom; this kind serves the registry's ``seen_cuckoo``
+query and un-see maintenance.  Same contract as bloom: the filter is
+*prune-only* — a negative is definitive (no false negatives), a
+positive goes to the exact anti-join — so it cannot change a probe's
+result, only the pruned fraction.  What the cuckoo variant adds over
+bloom:
 
   * **deletion** — a fingerprint can be removed, so "un-seeing" a URL
     (forced re-crawl of a quarantined/stale page, the reference's
@@ -23,8 +25,8 @@ Layout (mirrors the bloom sidecar): one row per hash-partition bucket
 ``(bucket, table, n_rows, stash, n_items)`` where ``table`` is an
 ``n_rows x CUCKOO_SLOTS`` array of 16-bit fingerprints (0 = empty
 slot) and ``stash`` is the exact overflow list.  Buckets partition by
-``pmod(xxhash64(canonical_url), n_buckets)`` — identical to url_seen's
-layout, so fold, probe and delete are all co-partitioned cogroups.
+``seen.seen_key`` — identical to url_seen's layout, so fold, probe
+and delete are all co-partitioned cogroups.
 
 Insertion is BULK-VECTORIZED (no per-row Python): each round bin-sorts
 the pending fingerprints by target bucket-row, ranks them within equal

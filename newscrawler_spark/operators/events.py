@@ -1,41 +1,20 @@
-"""Event-stream operators in their batch form: tumbling-window
-aggregation and gap-based sessionization.
+"""Event-stream operators in their batch form: gap-based sessionization
+(the registry's tumbling-window count is a plain groupBy inline in
+queries.q_events_tumbling).
 
-The reference is pure batch (SURVEY.md §2.9) — these are the engine's
+The reference is pure batch (SURVEY.md §2.9) — this is the engine's
 stream-shaped surface, written so the identical expressions run under
-Structured Streaming (`F.window` + watermark for the tumbling agg,
-`session_window` for sessions) when fed a readStream source; in batch
-they are ordinary shuffles on (key, window).
+Structured Streaming (`session_window`) when fed a readStream source;
+in batch it is an ordinary shuffle on the user key.
 
-Scale notes: tumbling agg is one shuffle on (window, key) with map-side
-partial aggregation; sessionization shuffles once on user_id and sorts
-within partitions (window lag) — both AQE-coalesced.
+Scale notes: sessionization shuffles once on user_id and sorts within
+partitions (window lag) — AQE-coalesced.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def tumbling_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    minutes: int = 60,
-) -> DataFrame:
-    """Events per (tumbling window, key): (window_start, key, n, total_value)."""
-    bucket = F.to_timestamp(
-        F.from_unixtime(
-            (F.unix_timestamp(ts_col) / (minutes * 60)).cast("bigint") * (minutes * 60)
-        )
-    )
-    return (
-        events.groupBy(
-            bucket.alias("window_start"), F.col(key_col).alias("key")
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
-    )
 
 
 def sessionize(

@@ -34,6 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# budget window (seconds) for a budget row whose window_s is NULL
+DEFAULT_WINDOW_S = 60
+
+
 def RANK_ORDER():
     """Deterministic within-domain order: (priority, depth, seq)."""
     return [F.col("priority").asc(), F.col("depth").asc(), F.col("seq").asc()]
@@ -142,7 +146,7 @@ def budget_gate(
         delay > 0,
         F.least(
             F.coalesce(F.col("capacity"), F.lit(2**31 - 1)),
-            F.floor(F.coalesce(F.col("window_s"), F.lit(60)) / delay).cast("int"),
+            F.floor(F.coalesce(F.col("window_s"), F.lit(DEFAULT_WINDOW_S)) / delay).cast("int"),
         ),
     ).otherwise(F.coalesce(F.col("capacity"), F.lit(2**31 - 1)))
 
@@ -185,7 +189,7 @@ def budget_gate(
 
 
 def budget_accounting(
-    budgets: DataFrame, scheduled: DataFrame, round_no: int, window_s_default: int = 60
+    budgets: DataFrame, scheduled: DataFrame, round_no: int
 ) -> DataFrame:
     """A4 — fold the round's consumption back into the budget table
     (the reference mutates APIKeyPool state per response,
@@ -220,7 +224,7 @@ def budget_accounting(
         ).alias("remaining"),
         (
             (F.lit(round_no + 1))
-            * F.coalesce(F.col("window_s"), F.lit(window_s_default)).cast("double")
+            * F.coalesce(F.col("window_s"), F.lit(DEFAULT_WINDOW_S)).cast("double")
         ).alias("reset_ts"),
     )
 

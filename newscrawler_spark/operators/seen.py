@@ -19,13 +19,15 @@ is one ``SEEN_KINDS`` entry: a schema, a per-bucket fold kernel
 probe kernel ``(hashes, row) -> maybe-seen mask``.  The probe plan
 (``filter_unseen``), the distributed fold (``fold_sidecar``) and the
 driver-local fold (``Catalog._write_sidecar_local``) are written once,
-over that table.
+over that table.  The crawl runs bloom; cuckoo serves the registry's
+``seen_cuckoo`` query (deletes: un-see for a forced re-crawl).
 
 Scale design:
-  * url_seen is hash-partitioned by ``bucket = pmod(xxhash64(canonical),
-    n_buckets)``; the bloom sidecar has one row (bucket, bitset) per
-    bucket, folded with Arrow-vectorized numpy inside applyInPandas —
-    never per-row Python;
+  * url_seen is hash-partitioned by ``seen_key`` (``url_hash =
+    xxhash64(canonical_url)``, ``bucket = pmod(url_hash, n_buckets)``),
+    the one place the key is spelled; the bloom sidecar has one row
+    (bucket, bitset) per bucket, folded with Arrow-vectorized numpy
+    inside applyInPandas — never per-row Python;
   * the anti-join joins on (bucket, url_hash) so partition pruning +
     co-located shuffles apply;
   * at 10^10 URLs: n_buckets ~4k, bitset ~64-256 MB/bucket → the probe
@@ -40,7 +42,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -83,24 +85,26 @@ def _bloom_probe(hashes: np.ndarray, row) -> np.ndarray:
     return hit.all(axis=1)  # all k bits set → maybe seen
 
 
+def seen_key(n_buckets: int) -> tuple[Column, Column]:
+    """The seen-set key over ``canonical_url``: ``(url_hash, bucket)``,
+    unaliased.  url_seen, both sidecars and every probe of them are laid
+    out on this key, so every writer and reader takes it from here."""
+    url_hash = F.xxhash64("canonical_url")
+    return url_hash, F.pmod(url_hash, F.lit(n_buckets)).cast("int")
+
+
 @dataclass(frozen=True)
 class SeenKind:
     schema: StructType  # one sidecar row per bucket
     probe_cols: tuple[str, ...]  # the sidecar columns the probe reads
     fold: Callable[..., dict]  # (prior row | None, sorted hashes, size) -> row
     probe: Callable[..., np.ndarray]  # (hashes, row) -> maybe-seen mask
-    size_field: str  # RoundConfig field sizing a bucket with no prior row
-    local_fold: str  # Catalog method folding a small round on the driver
 
 
 SEEN_KINDS = {
-    "bloom": SeenKind(
-        BLOOM, ("bitset",), _bloom_fold, _bloom_probe,
-        "m_bits", "write_bloom_local",
-    ),
+    "bloom": SeenKind(BLOOM, ("bitset",), _bloom_fold, _bloom_probe),
     "cuckoo": SeenKind(
-        CUCKOO, ("table", "n_rows", "stash"), _cuckoo_fold, _cuckoo_probe,
-        "cuckoo_capacity", "write_cuckoo_local",
+        CUCKOO, ("table", "n_rows", "stash"), _cuckoo_fold, _cuckoo_probe
     ),
 }
 
@@ -147,9 +151,8 @@ def filter_unseen(
     (url_hash, bucket).  The ``kind`` sidecar prunes, the exact
     anti-join confirms; with no sidecar the anti-join runs alone.
     """
-    cand = candidates.withColumn("url_hash", F.xxhash64("canonical_url")).withColumn(
-        "bucket", F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int")
-    )
+    url_hash, bucket = seen_key(n_buckets)
+    cand = candidates.withColumns({"url_hash": url_hash, "bucket": bucket})
     if sidecar is None:
         out = cand.join(
             url_seen.select("bucket", "url_hash"), ["bucket", "url_hash"], "left_anti"

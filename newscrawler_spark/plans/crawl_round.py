@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..canonical import with_url_identity
 from ..operators.scheduling import apply_robots, budget_gate, dedup_within_round
-from ..operators.seen import SEEN_KINDS, filter_unseen
+from ..operators.seen import filter_unseen, seen_key
 from ..xhash import md5_64
 
 FRONTIER_COLS = [
@@ -48,23 +48,10 @@ class RoundConfig:
     m_bits: int = 1 << 20
     n_partitions: int = 32
     max_depth: int = 10
-    # URL-seen sidecar kind, a key of operators.seen.SEEN_KINDS: "bloom"
-    # (OR-mergeable bitsets) or "cuckoo" (deletable fingerprint tables,
-    # operators/cuckoo.py).  Prune-only either way — crawl results are
-    # identical by construction (tested).
-    seen_filter: str = "bloom"
-    # cuckoo sizing: fingerprint slots reserved per hash bucket
-    cuckoo_capacity: int = 1 << 16
     # per-round incremental dedup: check each round's new docs against
     # the accumulated corpus LSH index (dedup.incremental_neardup) and
     # write neardup/dedup_index/dedup_sigs deltas
     dedup_docs: bool = False
-    dedup_min_common: int = 3
-    # hot-bucket cutoff for the per-round probe (see
-    # dedup.incremental_neardup) — boilerplate band keys shared by more
-    # docs than this are skipped, keeping the probe O(batch) even on
-    # template-heavy corpora
-    dedup_bucket_cap: int = 128
     # opt-in crawl-trap guard (operators/webgraph.py::trap_detect):
     # domains whose PRE-dedup URL shape this round matches the
     # explosion signature are quarantined wholesale as `trap_denied`
@@ -75,15 +62,6 @@ class RoundConfig:
     # STATE, so a killed run resumes with the evolved capacities and
     # reproduces the uninterrupted run bit-identically
     adaptive_budgets: bool = False
-    trap_min_urls: int = 100
-
-    def __post_init__(self) -> None:
-        # seen_filter doubles as the sidecar's catalog table name
-        if self.seen_filter not in SEEN_KINDS:
-            raise ValueError(
-                f"seen_filter must be one of {sorted(SEEN_KINDS)}, "
-                f"got {self.seen_filter!r}"
-            )
 
 
 @dataclass
@@ -137,7 +115,7 @@ class RoundResult:
 def run_round(
     frontier: DataFrame,
     url_seen: DataFrame | None,
-    sidecar: DataFrame | None,  # bloom or cuckoo frame, per conf.seen_filter
+    sidecar: DataFrame | None,  # the previous round's bloom sidecar
     budgets: DataFrame,
     robots: DataFrame,
     fetcher,
@@ -208,7 +186,7 @@ def run_round(
         from ..operators.webgraph import trap_detect
 
         trap_domains = (
-            trap_detect(cand.select("url", "domain"), min_urls=conf.trap_min_urls)
+            trap_detect(cand.select("url", "domain"))
             .filter(F.col("flagged"))
             .select("domain")
         )
@@ -218,9 +196,7 @@ def run_round(
     # one probe pass; the supported/unsupported split happens after
     # (splitting first would run the cogroup probe twice)
     if url_seen is not None:
-        cand = filter_unseen(
-            cand, url_seen, sidecar, conf.n_buckets, conf.seen_filter
-        )
+        cand = filter_unseen(cand, url_seen, sidecar, conf.n_buckets)
     cand = _p(cand)
 
     # unsupported-platform rows are terminal (extractor has no dialect —
@@ -348,22 +324,16 @@ def run_round(
     # filter-union re-scanned the persisted parents once per branch —
     # hundreds of near-empty map tasks per round at sandbox scale, and
     # 6x the cache-read bandwidth at any scale.
+    url_hash, bucket = seen_key(conf.n_buckets)
+
     def _entry(kind, url=False, canonical=False, hash_bucket=False,
                domain_rank=False, error=None, attempt=None):
         return F.struct(
             F.lit(kind).alias("kind"),
             (F.col("url") if url else F.lit(None).cast("string")).alias("url"),
             (F.col("canonical_url") if canonical else F.lit(None).cast("string")).alias("canonical_url"),
-            (
-                F.xxhash64("canonical_url")
-                if hash_bucket
-                else F.lit(None).cast("long")
-            ).alias("url_hash"),
-            (
-                F.pmod(F.xxhash64("canonical_url"), F.lit(conf.n_buckets)).cast("int")
-                if hash_bucket
-                else F.lit(None).cast("int")
-            ).alias("bucket"),
+            (url_hash if hash_bucket else F.lit(None).cast("long")).alias("url_hash"),
+            (bucket if hash_bucket else F.lit(None).cast("int")).alias("bucket"),
             (F.col("domain") if domain_rank else F.lit(None).cast("string")).alias("domain"),
             (F.col("rank") if domain_rank else F.lit(None).cast("int")).alias("rank"),
             (error if error is not None else F.lit(None).cast("string")).alias("error"),

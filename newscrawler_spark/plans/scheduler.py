@@ -9,9 +9,9 @@ function of (url, round, config), reproduces the uninterrupted run
 bit-identically (tested in tests/test_crawl.py).
 
 Seen-filter lifecycle: each round folds its new seen rows into the
-previous round's sidecar (bloom or cuckoo, per conf.seen_filter — one
-operators.seen.SEEN_KINDS entry) and persists it as its own delta, so a
-resume reads the latest sidecar instead of rescanning 10^10 seen rows.
+previous round's bloom sidecar and persists it as its own `bloom`
+delta, so a resume reads the latest sidecar instead of rescanning 10^10
+seen rows.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema
-from ..operators.seen import SEEN_KINDS, fold_sidecar
+from ..operators.seen import fold_sidecar
 from ..sources.catalog import Catalog
 from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, run_round
 
@@ -31,6 +31,11 @@ from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, run_round
 # back to distributed jobs (driver-side DuckDB over the round_log
 # partition would otherwise read GBs on one node).
 LOCAL_FOLD_MAX_ROWS = 5_000_000
+
+# Per-round near-dup probe's hot-bucket cutoff (dedup.incremental_neardup's
+# bucket_cap): band keys shared by more indexed docs than this are
+# skipped, keeping the probe O(batch) on template-heavy corpora.
+CRAWL_DEDUP_BUCKET_CAP = 128
 
 
 def bootstrap_hosts_for_round(
@@ -185,7 +190,6 @@ def _crawl_rounds(
         if os.path.isdir(bpath):
             budgets_round = spark.read.schema(schema.BUDGETS).parquet(bpath)
     budget_rows = _budget_rows(budgets_round)
-    seen_kind = SEEN_KINDS[conf.seen_filter]
 
     # Deferred-commit pipeline: round N's docs write (its biggest delta,
     # needed by nothing round N+1 compiles against) runs on a background
@@ -238,11 +242,10 @@ def _crawl_rounds(
             break
 
         url_seen = catalog.read_table(spark, "url_seen", upto_round=round_no - 1)
-        # seen-filter sidecar (bloom bitsets or cuckoo fingerprint
-        # tables — same per-bucket delta lifecycle either way)
+        # the previous round's bloom sidecar (one bitset per bucket)
         sidecar = (
-            spark.read.schema(seen_kind.schema).parquet(
-                catalog.delta_path(conf.seen_filter, round_no - 1)
+            spark.read.schema(schema.BLOOM).parquet(
+                catalog.delta_path("bloom", round_no - 1)
             )
             if round_no > 0
             else None
@@ -320,16 +323,15 @@ def _crawl_rounds(
         # the same per-bucket kernels, zero Spark jobs); big rounds use
         # the distributed path.
         log_round = catalog.read_round_log_delta(spark, round_no)
-        size = getattr(conf, seen_kind.size_field)
         if log_counts["seen"] <= LOCAL_FOLD_MAX_ROWS:
-            getattr(catalog, seen_kind.local_fold)(
-                round_no, round_no - 1 if round_no > 0 else None, size
+            catalog.write_bloom_local(
+                round_no, round_no - 1 if round_no > 0 else None, conf.m_bits
             )
         else:
             seen_round = log_round.filter(F.col("kind") == "seen")
             catalog.write_delta(
-                fold_sidecar(seen_round, sidecar, conf.seen_filter, size),
-                conf.seen_filter,
+                fold_sidecar(seen_round, sidecar, "bloom", conf.m_bits),
+                "bloom",
                 round_no,
             )
 
@@ -365,8 +367,7 @@ def _crawl_rounds(
                 batch,
                 catalog.read_table(spark, "dedup_index", upto_round=round_no - 1),
                 catalog.read_table(spark, "dedup_sigs", upto_round=round_no - 1),
-                min_common=conf.dedup_min_common,
-                bucket_cap=conf.dedup_bucket_cap,
+                bucket_cap=CRAWL_DEDUP_BUCKET_CAP,
                 persist_fn=lambda df: df.localCheckpoint(eager=False),
             )
             n_neardup = catalog.write_delta(dd["matches"], "neardup", round_no)

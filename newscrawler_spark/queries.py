@@ -46,7 +46,7 @@ from .operators import tokenizer as BPE
 from .operators import webgraph as WG
 from .operators.multimodal import decode_media
 from .operators.scheduling import apply_robots, budget_gate, dedup_within_round
-from .operators.seen import filter_unseen, fold_sidecar
+from .operators.seen import filter_unseen, fold_sidecar, seen_key
 from .synth import URL_SHAPES
 from .xhash import md5_64, md5_64_sql
 
@@ -233,13 +233,14 @@ SELECT canonical_url, url, seq FROM d WHERE rn = 1
 
 def _seen_table(spark: SparkSession, sf_dir: str, n_buckets: int = 16) -> DataFrame:
     fr = _identity_frontier(spark, sf_dir)
+    url_hash, bucket = seen_key(n_buckets)
     return (
         fr.filter(F.col("art") % 2 == 0)
         .select("canonical_url")
         .distinct()
         .select(
-            F.xxhash64("canonical_url").alias("url_hash"),
-            F.pmod(F.xxhash64("canonical_url"), F.lit(n_buckets)).cast("int").alias("bucket"),
+            url_hash.alias("url_hash"),
+            bucket.alias("bucket"),
             "canonical_url",
             F.lit(0).alias("round_seen"),
         )
@@ -274,16 +275,12 @@ def q_seen_cuckoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     seen = _seen_table(spark, sf_dir, n_buckets)
     # un-see every fourth article id (art%2=0 built the seen set, so
     # art%4=0 deletes half of it; survivors are art%4=2)
+    url_hash, bucket = seen_key(n_buckets)
     removals = (
         fr.filter(F.col("art") % 4 == 0)
         .select("canonical_url")
         .distinct()
-        .select(
-            F.xxhash64("canonical_url").alias("url_hash"),
-            F.pmod(F.xxhash64("canonical_url"), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
-        )
+        .select(url_hash.alias("url_hash"), bucket.alias("bucket"))
     )
     filt = delete_cuckoo(fold_sidecar(seen, None, "cuckoo", 1024), removals)
     remaining_seen = seen.join(
@@ -708,7 +705,7 @@ def q_incremental_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """incremental_neardup with the production hot-bucket cutoff live
     (bucket_cap — boilerplate band keys shared by more docs than the
     cap are skipped, keeping the probe O(batch) on template-heavy
-    corpora; the crawl loop runs with RoundConfig.dedup_bucket_cap).
+    corpora; the crawl loop runs with plans.scheduler.CRAWL_DEDUP_BUCKET_CAP).
     Oracle mirrors the identical rule: (band, key) groups with more
     than NEARDUP_BUCKET_CAP historical members are anti-joined out of
     the candidate join."""

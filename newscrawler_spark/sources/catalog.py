@@ -153,12 +153,7 @@ class Catalog:
         )
         pq.write_table(table, path / "part-00000.parquet")
 
-    def write_budget_state_row_local(
-        self,
-        round_no: int,
-        budget_rows,
-        window_s_default: int = 60,
-    ) -> None:
+    def write_budget_state_row_local(self, round_no: int, budget_rows) -> None:
         """A4 driver-side: fold the round's per-domain consumption (read
         straight from the just-written round_log order partition with
         in-process DuckDB) into the budget table and write the delta
@@ -170,6 +165,8 @@ class Catalog:
         import duckdb
         import pyarrow as pa
         import pyarrow.parquet as pq
+
+        from ..operators.scheduling import DEFAULT_WINDOW_S
 
         order_glob = f"{self.delta_path('round_log', round_no)}/kind=order/*.parquet"
         used: dict[str, int] = {}
@@ -196,7 +193,7 @@ class Catalog:
             resets.append(
                 float(
                     (round_no + 1)
-                    * (r["window_s"] if r["window_s"] is not None else window_s_default)
+                    * (r["window_s"] if r["window_s"] is not None else DEFAULT_WINDOW_S)
                 )
             )
         table = pa.table(

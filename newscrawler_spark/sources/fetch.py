@@ -9,7 +9,7 @@ Two implementations behind one seam:
     each URL straight to the page a fetch returns, and a cached URL
     list recovers misses, so a round is one lookup.  Retry semantics
     collapse (a fixture status is stable across attempts), so attempts is
-    reported as 1 for 200s and `max_attempts` for failures — exactly
+    reported as 1 for 200s and FETCH_ATTEMPTS for failures — exactly
     what tenacity's stop_after_attempt(3) would have produced for a
     deterministic failure (/root/reference/news_crawler/core/base.py:73-78).
 
@@ -41,6 +41,8 @@ FETCH_TIMEOUT_S = 15.0 # base.py:28
 # keeps the ORIGINAL url/canonical identity; re-enqueueing the iframe
 # URL would key the seen-set on the wrong URL).
 IFRAME_SRC_RE = r'<iframe[^>]*id="mainFrame"[^>]*src="([^"]+)"'
+# scheme://host[:port] of the holder, the base a host-relative src resolves on
+ORIGIN_RE = r"^(https?://[^/?#\s]+)"
 
 
 def iframe_target_py(html: str | None, base_url: str) -> str | None:
@@ -56,7 +58,7 @@ def iframe_target_py(html: str | None, base_url: str) -> str | None:
     if src.startswith("//"):
         return "https:" + src
     if src.startswith("/"):
-        m2 = re.match(r"^(https?://[^/?#\s]+)", base_url)
+        m2 = re.match(ORIGIN_RE, base_url)
         return (m2.group(1) if m2 else "") + src
     return src
 
@@ -121,7 +123,7 @@ def extract_links_py(
 def iframe_target_col(html_col, url_col):
     """Column twin of iframe_target_py (NULL when no iframe)."""
     src = F.regexp_extract(html_col, IFRAME_SRC_RE, 1)
-    base = F.concat(F.lit("https://"), F.parse_url(url_col, F.lit("HOST")))
+    base = F.regexp_extract(url_col, ORIGIN_RE, 1)
     resolved = (
         F.when(src.startswith("//"), F.concat(F.lit("https:"), src))
         .when(src.startswith("/"), F.concat(base, src))
@@ -146,19 +148,9 @@ class FixtureFetcher:
     # autoBroadcastJoinThreshold) risks driver OOM.
     BROADCAST_MAX_ROWS = 4_000_000
 
-    def __init__(
-        self,
-        pages: DataFrame,
-        max_attempts: int = FETCH_ATTEMPTS,
-        broadcast_max_rows: int | None = None,
-        corpus_partitions: int | None = 64,
-    ):
+    def __init__(self, pages: DataFrame, corpus_partitions: int | None = 64):
         from pyspark.storagelevel import StorageLevel
 
-        self.max_attempts = max_attempts
-        self.broadcast_max_rows = (
-            self.BROADCAST_MAX_ROWS if broadcast_max_rows is None else broadcast_max_rows
-        )
         # The page corpus is probed every round: persist it once so
         # rounds read the columnar cache instead of re-scanning and
         # decompressing the parquet corpus each time (event-log audit:
@@ -270,12 +262,10 @@ class FixtureFetcher:
         assume broadcastable" (tests / first round over seed lists).
         Iframe holders need no second lookup: the cached corpus already
         holds their hop targets' pages (see __init__)."""
-        bc = size_hint_rows is None or size_hint_rows <= self.broadcast_max_rows
+        bc = size_hint_rows is None or size_hint_rows <= self.BROADCAST_MAX_ROWS
         return self._lookup(eligible, "url", hint_broadcast=bc).withColumn(
             "attempts",
-            F.when(F.col("status") == 200, F.lit(1)).otherwise(
-                F.lit(self.max_attempts)
-            ),
+            F.when(F.col("status") == 200, F.lit(1)).otherwise(F.lit(FETCH_ATTEMPTS)),
         )
 
 

@@ -14,8 +14,9 @@ hex chars of md5 (60 bits, always non-negative, fits int64):
 
 Verified identical across all three (see tests/test_xhash.py).
 
-Engine-internal hashes that never need the oracle (bloom keys, bucket/salt
-assignment) use the native ``xxhash64``/``hash`` — faster, codegen'd.
+Engine-internal hashes that never need the oracle (the seen-set key,
+``operators.seen.seen_key``; bucket/salt assignment) use the native
+``xxhash64``/``hash`` — faster, codegen'd.
 """
 
 from __future__ import annotations
@@ -71,15 +72,3 @@ def minhash_consts(n_hashes: int = 16) -> list[tuple[int, int]]:
 def minhash_perm_py(x: int, a: int, b: int) -> int:
     """Pure-Python twin of the permutation applied to a 32-bit base."""
     return (a * (x & MINHASH_MASK) + b) % MINHASH_P
-
-
-def bucket_of(col: Column | str, n_buckets: int) -> Column:
-    """Engine-internal bucket assignment: murmur3 via F.hash, non-negative."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.pmod(F.hash(c), F.lit(n_buckets)).cast("int")
-
-
-def url_hash(col: Column | str) -> Column:
-    """Engine-internal 64-bit URL hash for the seen-set: xxhash64."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(c)

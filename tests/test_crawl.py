@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from newscrawler_spark import schema
 from newscrawler_spark.oracle.simulator import simulate_crawl
-from newscrawler_spark.operators.seen import SEEN_KINDS
 from newscrawler_spark.plans import scheduler
 from newscrawler_spark.plans.crawl_round import RoundConfig
 from newscrawler_spark.plans.scheduler import crawl, seed_frontier
@@ -20,8 +19,6 @@ N_SEEDS = 120
 N_PAGES = 800
 MAX_ROUNDS = 4
 CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8)
-CUCKOO_CONF = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                          seen_filter="cuckoo", cuckoo_capacity=2048)
 AIMD_CONF = dataclasses.replace(CONF, adaptive_budgets=True)
 
 
@@ -63,16 +60,6 @@ def engine_result(spark, world, tmp_path_factory):
     return cat
 
 
-@pytest.fixture(scope="module")
-def cuckoo_result(spark, world, tmp_path_factory):
-    seeds, pages, budgets, robots = world
-    cat = Catalog(tmp_path_factory.mktemp("crawl_cuckoo"))
-    seed_frontier(cat, seeds)
-    crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=CUCKOO_CONF)
-    return cat
-
-
 def _assert_same_crawl(spark, a_cat, b_cat):
     """Fetch order, seen set, quarantine and docs (incl. spans) equal."""
     for table, key in [
@@ -104,6 +91,11 @@ def test_seen_set_matches_simulator(spark, engine_result, sim_result):
     assert got == sim_result["seen"]
     # seen rows are unique per canonical
     assert seen.count() == seen.select("canonical_url").distinct().count()
+    # the last round's bloom sidecar accounted for every seen row
+    side = spark.read.schema(schema.BLOOM).parquet(
+        engine_result.delta_path("bloom", engine_result.last_round)
+    )
+    assert side.agg(F.sum("n_items")).first()[0] == seen.count()
 
 
 def test_docs_and_spans_match_simulator(spark, engine_result, sim_result):
@@ -173,69 +165,41 @@ def test_crash_with_uncommitted_deltas_redoes_round(spark, world, engine_result,
     _assert_same_crawl(spark, engine_result, cat2)
 
 
-def test_crawl_with_cuckoo_filter_identical(spark, engine_result, cuckoo_result):
-    """Swapping the bloom sidecar for the cuckoo filter
-    (conf.seen_filter='cuckoo') must leave every crawl output
-    bit-identical — both filters are prune-only; the exact anti-join
-    decides."""
-    _assert_same_crawl(spark, engine_result, cuckoo_result)
-    # the cuckoo sidecar accounted for every seen row
-    side = spark.read.schema(schema.CUCKOO).parquet(
-        cuckoo_result.delta_path("cuckoo", cuckoo_result.last_round)
-    )
-    assert (
-        side.agg(F.sum("n_items")).first()[0]
-        == cuckoo_result.read_table(spark, "url_seen").count()
-    )
-
-
-@pytest.mark.parametrize("kind", sorted(SEEN_KINDS))
-def test_distributed_folds_match_local(spark, world, engine_result, cuckoo_result,
-                                       kind, monkeypatch, tmp_path_factory):
+def test_distributed_folds_match_local(spark, world, engine_result,
+                                       monkeypatch, tmp_path_factory):
     """With the local-fold gate at 0, every round with seen rows folds its
-    sidecar and its budget_state delta as distributed Spark jobs.  The
-    crawl's outputs must not change — and because the sidecar only
+    bloom sidecar and its budget_state delta as distributed Spark jobs.
+    The crawl's outputs must not change — and because the sidecar only
     prunes, those checks cannot see a wrong one, so the last round's
     sidecar rows must also equal, per bucket, the local-fold run's, and
     so must every budget_state delta."""
     seeds, pages, budgets, robots = world
-    local, conf = {
-        "bloom": (engine_result, CONF),
-        "cuckoo": (cuckoo_result, CUCKOO_CONF),
-    }[kind]
     monkeypatch.setattr(scheduler, "LOCAL_FOLD_MAX_ROWS", 0)
-    cat = Catalog(tmp_path_factory.mktemp(f"crawl_distributed_{kind}"))
+    cat = Catalog(tmp_path_factory.mktemp("crawl_distributed"))
     seed_frontier(cat, seeds)
     crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=conf)
+          max_rounds=MAX_ROUNDS, conf=CONF)
 
     _assert_same_crawl(spark, engine_result, cat)
-    assert cat.last_round == local.last_round
+    assert cat.last_round == engine_result.last_round
 
     def sidecar_rows(c):
-        rows = spark.read.schema(SEEN_KINDS[kind].schema).parquet(
-            c.delta_path(kind, c.last_round)
+        rows = spark.read.schema(schema.BLOOM).parquet(
+            c.delta_path("bloom", c.last_round)
         ).collect()
         return {r["bucket"]: r for r in rows}
 
-    got, want = sidecar_rows(cat), sidecar_rows(local)
+    got, want = sidecar_rows(cat), sidecar_rows(engine_result)
     assert got.keys() == want.keys() and got
     for bucket, row in want.items():
-        assert got[bucket] == row, f"{kind} sidecar differs for bucket {bucket}"
+        assert got[bucket] == row, f"bloom sidecar differs for bucket {bucket}"
 
     def budget_state(c, round_no):
         rows = spark.read.parquet(c.delta_path("budget_state", round_no)).collect()
         return sorted((r.asDict() for r in rows), key=lambda d: d["domain"])
 
     for round_no in range(cat.last_round + 1):
-        assert budget_state(cat, round_no) == budget_state(local, round_no), round_no
-
-
-def test_unknown_seen_filter_rejected():
-    """A seen_filter outside {bloom, cuckoo} fails at construction, not
-    at round 1 on a missing sidecar path."""
-    with pytest.raises(ValueError, match="seen_filter"):
-        RoundConfig(seen_filter="cukoo")
+        assert budget_state(cat, round_no) == budget_state(engine_result, round_no), round_no
 
 
 def test_per_round_incremental_dedup(spark, world, tmp_path_factory):
@@ -249,7 +213,7 @@ def test_per_round_incremental_dedup(spark, world, tmp_path_factory):
     cat = Catalog(tmp_path_factory.mktemp("crawl_dedup"))
     seed_frontier(cat, seeds)
     conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                       dedup_docs=True, dedup_min_common=3)
+                       dedup_docs=True)
     totals = crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
                    max_rounds=MAX_ROUNDS, conf=conf)
     assert any("neardup_matches" in c for c in totals.values())
@@ -294,13 +258,13 @@ def test_per_round_incremental_dedup(spark, world, tmp_path_factory):
         .collect()
     }
 
-    # mirror the production hot-bucket cutoff (conf.dedup_bucket_cap):
+    # mirror the production hot-bucket cutoff (CRAWL_DEDUP_BUCKET_CAP):
     # a round-n batch probes the index of rounds < n MINUS buckets that
     # hold more than cap docs at that point, so the recompute drops a
     # pair iff every bucket it shares was hot when the newer doc's
     # round ran.  The hot set is time-varying → fold it round by round
     # driver-side (the fixture corpus is collectable).
-    cap = conf.dedup_bucket_cap
+    cap = scheduler.CRAWL_DEDUP_BUCKET_CAP
     band_rows = bands.select("doc_id", "round", "band", "key").collect()
     buckets_by_doc: dict = {}
     round_of: dict = {}

@@ -12,6 +12,8 @@ from newscrawler_spark.sources.fetch import (
 )
 
 HOST = "https://blog.naver.com"
+# a plain-http holder on a non-default port (a loopback corpus)
+LOCAL = "http://127.0.0.1:8080"
 
 
 def _holder(src: str) -> str:
@@ -35,6 +37,10 @@ PAGES = [
     (f"{HOST}/e500", 500, None, []),
     # a plain 200 page
     (f"{HOST}/plain", 200, "<p>plain</p>", [f"{HOST}/e"]),
+    # host-relative src on an http holder with a port: the target keeps
+    # the holder's scheme and port
+    (f"{LOCAL}/h", 200, _holder("/PostView?id=1"), []),
+    (f"{LOCAL}/PostView?id=1", 200, "<p>local target</p>", [f"{LOCAL}/f"]),
 ]
 ABSENT = f"{HOST}/absent"
 
@@ -57,8 +63,12 @@ def _model(url: str) -> tuple:
     ids=["broadcast", "no_broadcast_hint"],
 )
 def test_fixture_fetch_matches_simulator_rule(
-    spark, broadcast_max_rows, size_hint_rows, corpus_partitions
+    spark, monkeypatch, broadcast_max_rows, size_hint_rows, corpus_partitions
 ):
+    if broadcast_max_rows is not None:
+        monkeypatch.setattr(
+            FixtureFetcher, "BROADCAST_MAX_ROWS", broadcast_max_rows
+        )
     pages = spark.createDataFrame(
         PAGES, "url string, status int, html string, out_links array<string>"
     )
@@ -66,10 +76,7 @@ def test_fixture_fetch_matches_simulator_rule(
     eligible = spark.createDataFrame(
         [(u, i) for i, u in enumerate(urls)], "url string, rank int"
     )
-    with FixtureFetcher(
-        pages, broadcast_max_rows=broadcast_max_rows,
-        corpus_partitions=corpus_partitions,
-    ) as fetcher:
+    with FixtureFetcher(pages, corpus_partitions=corpus_partitions) as fetcher:
         out = fetcher.fetch(eligible, size_hint_rows=size_hint_rows)
         assert sorted(out.columns) == sorted(
             ["url", "rank", "status", "html", "out_links", "attempts"]
@@ -95,3 +102,4 @@ def test_fixture_fetch_matches_simulator_rule(
     assert got[f"{HOST}/e404"]["status"] == 404
     assert got[f"{HOST}/e404"]["html"] == PAGES[7][2]
     assert got[ABSENT]["status"] == 0
+    assert got[f"{LOCAL}/h"]["html"] == "<p>local target</p>"

@@ -187,7 +187,7 @@ def test_trap_guard_quarantines_in_crawl_round(spark):
 
     def run(trap_guard):
         conf = RoundConfig(n_buckets=16, m_bits=1 << 16, n_partitions=8,
-                           trap_guard=trap_guard, trap_min_urls=100)
+                           trap_guard=trap_guard)
         res = run_round(frontier, None, None, budgets, robots,
                         FixtureFetcher(pages), 0, conf)
         log = res.round_log
