@@ -19,8 +19,6 @@ Reference semantics encoded here (studied, not ported):
     naver    /root/reference/news_crawler/naver_news/naver_news.py:173-177
     lenny    /root/reference/news_crawler/lennysnewsletter/lennysnewsletter.py:260-273
     quora    /root/reference/news_crawler/quora/quora_answer.py:57-66
-  url validation     /root/reference/news_extractor_mcp/server.py:48-55
-  scheme fixes       sohu_news.py:192-194,206-208; bbc_news.py:145-149
 """
 
 from __future__ import annotations
@@ -70,27 +68,6 @@ def detect_platform_py(url: str) -> str | None:
         if re.match(pattern[1:], url):  # strip our ^ anchor; re.match anchors
             return platform
     return None
-
-
-# ---------------------------------------------------------------------------
-# URL validation (F2) + scheme normalization (F6)
-# ---------------------------------------------------------------------------
-
-def is_valid_url(url: Column | str) -> Column:
-    """http(s) scheme + non-empty host (mcp server.py:48-55 semantics)."""
-    c = F.col(url) if isinstance(url, str) else url
-    stripped = F.trim(c)
-    return stripped.rlike(r"^https?://[^/\s]+")
-
-
-def normalize_scheme(url: Column | str, base: Column | str | None = None) -> Column:
-    """`//x` -> `https://x`; `/x` -> base + `/x` (sohu/bbc/cnn semantics)."""
-    c = F.col(url) if isinstance(url, str) else url
-    out = F.when(c.startswith("//"), F.concat(F.lit("https:"), c))
-    if base is not None:
-        b = F.col(base) if isinstance(base, str) else base
-        out = out.when(c.startswith("/"), F.concat(b, c))
-    return out.otherwise(c)
 
 
 # ---------------------------------------------------------------------------

@@ -49,14 +49,6 @@ def decode_fake(payload: bytes) -> dict:
     }
 
 
-def real_decode_stub(payload: bytes) -> dict:
-    """The production decode seam — libs not present in this container."""
-    raise NotImplementedError(
-        "image/audio codecs are not installed in this environment; "
-        "swap decode_fake for a PIL/ffmpeg-backed decoder on a cluster"
-    )
-
-
 def decode_media(
     media: DataFrame, id_col: str = "media_id", bytes_col: str = "payload"
 ) -> DataFrame:

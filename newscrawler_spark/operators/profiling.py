@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..xhash import md5_64
+
 QUANTILES = (50, 90, 99)  # percent
 
 # AIMD defaults
@@ -72,6 +74,25 @@ def length_quantiles(
             F.max(F.when(F.col("rn") == pos, F.col("v"))).cast("long").alias(f"p{q}")
         )
     return ranked.groupBy("stratum").agg(*exprs)
+
+
+def synthetic_fetch_log(fetches: DataFrame) -> DataFrame:
+    """``adaptive_budget``'s fetch log for fetches whose outcome was not
+    measured: (domain, url) rows get a latency in [50, 2050) ms and an
+    ok flag (~15 % errors), each a pure function of the url via md5_64,
+    so a re-run of the same fetches reproduces the same budgets."""
+    return fetches.select(
+        "domain",
+        "url",
+        (
+            F.lit(50)
+            + F.pmod(md5_64(F.concat(F.lit("lat:"), F.col("url"))), F.lit(2000))
+        ).cast("long").alias("latency_ms"),
+        (
+            F.pmod(md5_64(F.concat(F.lit("ok:"), F.col("url"))), F.lit(100))
+            >= F.lit(15)
+        ).alias("ok"),
+    )
 
 
 def adaptive_budget(

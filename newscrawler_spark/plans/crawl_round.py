@@ -31,15 +31,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import schema
 from ..canonical import with_url_identity
 from ..operators.scheduling import apply_robots, budget_gate, dedup_within_round
 from ..operators.seen import filter_unseen, seen_key
 from ..xhash import md5_64
 
-FRONTIER_COLS = [
-    "url", "domain", "priority", "depth", "seq", "round_added", "attempt",
-    "source_seed",
-]
+FRONTIER_COLS = schema.FRONTIER.fieldNames()
 
 
 @dataclass
@@ -326,25 +324,22 @@ def run_round(
     # 6x the cache-read bandwidth at any scale.
     url_hash, bucket = seen_key(conf.n_buckets)
 
-    def _entry(kind, url=False, canonical=False, hash_bucket=False,
-               domain_rank=False, error=None, attempt=None):
-        return F.struct(
-            F.lit(kind).alias("kind"),
-            (F.col("url") if url else F.lit(None).cast("string")).alias("url"),
-            (F.col("canonical_url") if canonical else F.lit(None).cast("string")).alias("canonical_url"),
-            (url_hash if hash_bucket else F.lit(None).cast("long")).alias("url_hash"),
-            (bucket if hash_bucket else F.lit(None).cast("int")).alias("bucket"),
-            (F.col("domain") if domain_rank else F.lit(None).cast("string")).alias("domain"),
-            (F.col("rank") if domain_rank else F.lit(None).cast("int")).alias("rank"),
-            (error if error is not None else F.lit(None).cast("string")).alias("error"),
-            (attempt if attempt is not None else F.lit(None).cast("int")).alias("attempt"),
-        )
+    def _entry(kind, **cols):
+        """One log entry of `kind`: every schema.ROUND_LOG column not
+        passed is a NULL of the column's type."""
+        cols["kind"] = F.lit(kind)
+        return F.struct(*[
+            cols.get(f.name, F.lit(None).cast(f.dataType)).alias(f.name)
+            for f in schema.ROUND_LOG
+        ])
 
     def _log_rows(df, *entries):
         return df.select(
             F.explode(F.array_compact(F.array(*entries))).alias("e")
         ).select("e.*")
 
+    seen_entry = _entry("seen", canonical_url=F.col("canonical_url"),
+                        url_hash=url_hash, bucket=bucket)
     # quarantine reason for a fetched row, NULL when the row is a valid
     # doc (same predicates as the failed/invalid splits above)
     fetch_quarantine_error = F.when(
@@ -353,46 +348,25 @@ def run_round(
         F.col("ex_error").isNotNull() | (F.col("n_spans") <= 0),
         F.coalesce(F.col("ex_error"), F.lit("empty content")),
     )
-    round_log = (
-        _log_rows(
-            slim,
-            _entry("seen", canonical=True, hash_bucket=True),
-            _entry("order", url=True, canonical=True, domain_rank=True),
-            F.when(
-                fetch_quarantine_error.isNotNull(),
-                _entry(
-                    "quarantine",
-                    url=True,
-                    error=fetch_quarantine_error,
-                    attempt=F.col("attempts"),
-                ),
-            ),
-        )
-        .unionByName(
-            _log_rows(
-                denied,
-                _entry("seen", canonical=True, hash_bucket=True),
-                _entry("quarantine", url=True,
-                       error=F.lit("robots_denied"), attempt=F.lit(0)),
-            )
-        )
-        .unionByName(
-            _log_rows(
-                unsupported,
-                _entry("seen", canonical=True, hash_bucket=True),
-                _entry("quarantine", url=True,
-                       error=F.lit("unsupported_platform"), attempt=F.lit(0)),
-            )
-        )
+    round_log = _log_rows(
+        slim,
+        seen_entry,
+        _entry("order", url=F.col("url"), canonical_url=F.col("canonical_url"),
+               domain=F.col("domain"), rank=F.col("rank")),
+        F.when(
+            fetch_quarantine_error.isNotNull(),
+            _entry("quarantine", url=F.col("url"),
+                   error=fetch_quarantine_error, attempt=F.col("attempts")),
+        ),
     )
+    # rows that are terminal without a fetch: seen, and quarantined
+    terminal = [(denied, "robots_denied"), (unsupported, "unsupported_platform")]
     if trap_denied is not None:
+        terminal.append((trap_denied, "trap_denied"))
+    for df, reason in terminal:
         round_log = round_log.unionByName(
-            _log_rows(
-                trap_denied,
-                _entry("seen", canonical=True, hash_bucket=True),
-                _entry("quarantine", url=True,
-                       error=F.lit("trap_denied"), attempt=F.lit(0)),
-            )
+            _log_rows(df, seen_entry, _entry("quarantine", url=F.col("url"),
+                                       error=F.lit(reason), attempt=F.lit(0)))
         )
 
     # 10. next frontier = deferred ∪ discovered out-links

@@ -406,28 +406,15 @@ def _crawl_rounds(
             # AIMD update: this round's fetch outcomes → next round's
             # capacities, written as the round's `budgets` delta (KB —
             # one row per domain) so the evolved table is crawl state a
-            # resume picks up.  Outcomes are a deterministic pure
-            # function of the url (md5-derived latency draw in
-            # [50, 2050), ~15 % error rate — the live-fetch path would
-            # feed measured latency/status through the same log shape),
-            # so re-running a crashed round reproduces the identical
-            # next-capacity table.
-            from ..operators.profiling import adaptive_budget
-            from ..xhash import md5_64
+            # resume picks up.  Outcomes are synthetic, a deterministic
+            # pure function of the url (profiling.synthetic_fetch_log —
+            # the live-fetch path would feed measured latency/status
+            # through the same log shape), so re-running a crashed round
+            # reproduces the identical next-capacity table.
+            from ..operators.profiling import adaptive_budget, synthetic_fetch_log
 
-            fetch_log = log_round.filter(F.col("kind") == "order").select(
-                "domain",
-                "url",
-                (
-                    F.lit(50)
-                    + F.pmod(
-                        md5_64(F.concat(F.lit("lat:"), F.col("url"))), F.lit(2000)
-                    )
-                ).cast("long").alias("latency_ms"),
-                (
-                    F.pmod(md5_64(F.concat(F.lit("ok:"), F.col("url"))), F.lit(100))
-                    >= F.lit(15)
-                ).alias("ok"),
+            fetch_log = synthetic_fetch_log(
+                log_round.filter(F.col("kind") == "order")
             )
             upd = adaptive_budget(fetch_log, budgets_round)
             nxt = (

@@ -30,7 +30,7 @@ final rank window shuffles once on keyword (cap bounds each group).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 

@@ -3011,22 +3011,10 @@ FROM r GROUP BY stratum
 
 
 def q_adaptive_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic fetch outcomes derived per-URL from md5 (latency in
-    [50, 2050), ~15 % errors) feed the AIMD budget update against the
-    standard per-platform budget table."""
-    fr = _identity_frontier(spark, sf_dir)
-    log = fr.select(
-        "domain",
-        "url",
-        (
-            F.lit(50)
-            + F.pmod(md5_64(F.concat(F.lit("lat:"), F.col("url"))), F.lit(2000))
-        ).cast("long").alias("latency_ms"),
-        (
-            F.pmod(md5_64(F.concat(F.lit("ok:"), F.col("url"))), F.lit(100))
-            >= F.lit(15)
-        ).alias("ok"),
-    )
+    """Synthetic fetch outcomes (profiling.synthetic_fetch_log: md5-derived
+    latency in [50, 2050), ~15 % errors) feed the AIMD budget update
+    against the standard per-platform budget table."""
+    log = PF.synthetic_fetch_log(_identity_frontier(spark, sf_dir))
     budgets, _ = _budget_tables(spark)
     return PF.adaptive_budget(log, budgets)
 

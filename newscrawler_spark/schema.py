@@ -88,15 +88,24 @@ PAGES = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# URL-seen state + bloom sidecar
+# Round log + bloom sidecar
 # ---------------------------------------------------------------------------
 
-URL_SEEN = T.StructType(
+# The crawl's per-round log: seen, order and quarantine rows in one delta,
+# partitioned by `kind` (catalog.ROUND_LOG_VIEWS names the three views).
+# A row of one kind leaves the other kinds' columns NULL.  `kind` is last:
+# it is the partition column, so its values come from the directory names.
+ROUND_LOG = T.StructType(
     [
-        T.StructField("url_hash", T.LongType(), False),     # xxhash64(canonical)
-        T.StructField("bucket", T.IntegerType(), False),    # pmod(hash, n_buckets)
-        T.StructField("canonical_url", T.StringType(), False),
-        T.StructField("round_seen", T.IntegerType(), False),
+        T.StructField("url", T.StringType(), True),
+        T.StructField("canonical_url", T.StringType(), True),
+        T.StructField("url_hash", T.LongType(), True),      # xxhash64(canonical)
+        T.StructField("bucket", T.IntegerType(), True),     # pmod(hash, n_buckets)
+        T.StructField("domain", T.StringType(), True),
+        T.StructField("rank", T.IntegerType(), True),
+        T.StructField("error", T.StringType(), True),
+        T.StructField("attempt", T.IntegerType(), True),
+        T.StructField("kind", T.StringType(), True),        # seen | order | quarantine
     ]
 )
 
@@ -143,27 +152,31 @@ ROBOTS = T.StructType(
 )
 
 # ---------------------------------------------------------------------------
-# Quarantine + metrics (per-row failure isolation, round counters — §3.3)
+# Per-round counters and budget accounting (§3.3, A3-A4)
 # ---------------------------------------------------------------------------
 
-QUARANTINE = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("attempt", T.IntegerType(), True),
-    ]
-)
-
+# The driver writes these two deltas with pyarrow (budget_state falls back
+# to a Spark write in big rounds), and their files declare every column
+# optional: budget_state's capacity and remaining are NULL for an
+# unbounded domain.
 METRICS = T.StructType(
     [
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("scheduled", T.LongType(), False),
-        T.StructField("docs", T.LongType(), False),
-        T.StructField("quarantined", T.LongType(), False),
-        T.StructField("new_seen", T.LongType(), False),
-        T.StructField("frontier_next", T.LongType(), False),
+        T.StructField("round", T.IntegerType(), True),
+        T.StructField("scheduled", T.LongType(), True),
+        T.StructField("docs", T.LongType(), True),
+        T.StructField("quarantined", T.LongType(), True),
+        T.StructField("new_seen", T.LongType(), True),
+        T.StructField("frontier_next", T.LongType(), True),
     ]
 )
 
-SPAN_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+BUDGET_STATE = T.StructType(
+    [
+        T.StructField("domain", T.StringType(), True),
+        T.StructField("capacity", T.IntegerType(), True),   # NULL = unbounded
+        T.StructField("window_s", T.IntegerType(), True),
+        T.StructField("used", T.LongType(), True),
+        T.StructField("remaining", T.LongType(), True),     # NULL when capacity is
+        T.StructField("reset_ts", T.DoubleType(), True),
+    ]
+)

@@ -11,15 +11,20 @@ so a real Iceberg catalog can be dropped in on a cluster:
 
 Semantics matched to Iceberg:
   * snapshot isolation per round — a round's deltas become visible only
-    when the manifest is atomically replaced (os.replace) after all
-    writes succeed; a kill mid-round leaves the previous manifest intact;
+    when the manifest is atomically replaced (os.replace, in
+    _write_manifest) after all writes succeed; a kill mid-round leaves
+    the previous manifest intact;
   * reads union the delta files up to `last_round` (like snapshot
     time-travel `VERSION AS OF`);
+  * one schema per table — schema.py declares each crawl table's
+    columns, the DDL an Iceberg catalog would carry; the round log is
+    read and the driver-side deltas are written with it;
   * lineage — every delta row carries its `round`; docs rows also carry
     (domain_bucket, source_seed);
   * at scale, per-round full rewrites are forbidden: url_seen/docs are
-    append-only deltas; compaction would be an Iceberg maintenance
-    action (rewrite_data_files) and is out of scope here.
+    append-only deltas; compact_table and expire_rounds are the Iceberg
+    maintenance actions (rewrite_data_files, expire_snapshots), run
+    outside the crawl.
 """
 
 from __future__ import annotations
@@ -29,6 +34,9 @@ import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+from .. import schema
 
 # The three small per-round outputs (seen delta, fetch order, quarantine)
 # are written as ONE partitioned `round_log` delta —
@@ -38,22 +46,17 @@ from pyspark.sql import DataFrame, SparkSession
 # kind partition column means a view's read prunes at the FILE level
 # (partition pruning, not row-group statistics).  On Iceberg this is an
 # append to a log table with PARTITIONED BY (round, kind).
+#
+# The log is read with schema.ROUND_LOG, never by schema inference: a
+# round with zero log rows writes no partition files at all (partitionBy
+# of an empty frame), and at 10^10 scale schema-on-read should never scan
+# footers anyway.  `kind` (and `round` for multi-delta reads) are
+# partition columns whose values come from the directory names.
 ROUND_LOG_VIEWS: dict[str, tuple[str, list[str]]] = {
     "url_seen": ("seen", ["url_hash", "bucket", "canonical_url", "round AS round_seen"]),
     "fetch_order": ("order", ["round", "domain", "rank", "canonical_url", "url"]),
     "quarantine": ("quarantine", ["url", "round", "error", "attempt"]),
 }
-
-# Explicit read schemas: a round with zero log rows writes no partition
-# files at all (partitionBy of an empty frame), so inference would fail —
-# and at 10^10 scale schema-on-read should never scan footers anyway.
-# `kind` (and `round` for multi-delta reads) are partition columns whose
-# values come from the directory names.
-ROUND_LOG_SCHEMA = (
-    "url string, canonical_url string, url_hash bigint, bucket int, "
-    "domain string, rank int, error string, attempt int, kind string"
-)
-ROUND_LOG_SCHEMA_MULTI = ROUND_LOG_SCHEMA + ", round int"
 
 
 class Catalog:
@@ -77,6 +80,11 @@ class Catalog:
         manifest = self.read_manifest()
         manifest["last_round"] = round_no
         manifest.setdefault("rounds", {})[str(round_no)] = tables
+        self._write_manifest(manifest)
+
+    def _write_manifest(self, manifest: dict) -> None:
+        """Replace the manifest atomically: a kill leaves either the old
+        file or the new one, never a partial write."""
         tmp = self._manifest_path.with_suffix(".tmp")
         tmp.write_text(json.dumps(manifest, indent=2))
         os.replace(tmp, self._manifest_path)  # atomic on POSIX
@@ -133,25 +141,13 @@ class Catalog:
         return {k: int(got[k]) for k in ("seen", "order", "quarantine")}
 
     def write_metrics_row(self, round_no: int, counters: dict[str, int]) -> None:
-        """Driver-side metrics delta via pyarrow — the row is a handful
-        of already-known longs, so spinning a Spark job for it would be
-        pure fixed cost."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        path = Path(self.delta_path("metrics", round_no))
-        path.mkdir(parents=True, exist_ok=True)
-        table = pa.table(
-            {
-                "round": pa.array([round_no], type=pa.int32()),
-                "scheduled": pa.array([counters["scheduled"]], type=pa.int64()),
-                "docs": pa.array([counters["docs"]], type=pa.int64()),
-                "quarantined": pa.array([counters["quarantined"]], type=pa.int64()),
-                "new_seen": pa.array([counters["new_seen"]], type=pa.int64()),
-                "frontier_next": pa.array([counters["frontier_next"]], type=pa.int64()),
-            }
+        """Driver-side metrics delta — the row is a handful of
+        already-known longs, so spinning a Spark job for it would be
+        pure fixed cost.  Counters outside schema.METRICS (wall time,
+        near-dup matches, capacity total) stay in the manifest only."""
+        self._write_local(
+            "metrics", round_no, schema.METRICS, [{"round": round_no, **counters}]
         )
-        pq.write_table(table, path / "part-00000.parquet")
 
     def write_budget_state_row_local(self, round_no: int, budget_rows) -> None:
         """A4 driver-side: fold the round's per-domain consumption (read
@@ -163,8 +159,6 @@ class Catalog:
         import glob as _glob
 
         import duckdb
-        import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from ..operators.scheduling import DEFAULT_WINDOW_S
 
@@ -175,40 +169,21 @@ class Catalog:
                 f"SELECT domain, count(*) FROM '{order_glob}' GROUP BY domain"
             ).fetchall():
                 used[dom] = int(n)
-        doms, caps, wins, useds, rems, resets = [], [], [], [], [], []
+        rows = []
         for r in budget_rows:
+            cap, win = r["capacity"], r["window_s"]
             u = used.get(r["domain"], 0)
-            doms.append(r["domain"])
-            caps.append(r["capacity"])
-            wins.append(r["window_s"])
-            useds.append(u)
-            # NULL capacity = unbounded budget (budget_gate semantics):
-            # remaining stays NULL, matching the distributed path's
-            # null-propagating arithmetic
-            rems.append(
-                max(0, int(r["capacity"]) - u)
-                if r["capacity"] is not None
-                else None
-            )
-            resets.append(
-                float(
-                    (round_no + 1)
-                    * (r["window_s"] if r["window_s"] is not None else DEFAULT_WINDOW_S)
-                )
-            )
-        table = pa.table(
-            {
-                "domain": pa.array(doms, type=pa.string()),
-                "capacity": pa.array(caps, type=pa.int32()),
-                "window_s": pa.array(wins, type=pa.int32()),
-                "used": pa.array(useds, type=pa.int64()),
-                "remaining": pa.array(rems, type=pa.int64()),
-                "reset_ts": pa.array(resets, type=pa.float64()),
-            }
-        )
-        path = Path(self.delta_path("budget_state", round_no))
-        path.mkdir(parents=True, exist_ok=True)
-        pq.write_table(table, path / "part-00000.parquet")
+            rows.append({
+                "domain": r["domain"], "capacity": cap, "window_s": win, "used": u,
+                # NULL capacity = unbounded budget (budget_gate semantics):
+                # remaining stays NULL, matching the distributed path's
+                # null-propagating arithmetic
+                "remaining": max(0, int(cap) - u) if cap is not None else None,
+                "reset_ts": float(
+                    (round_no + 1) * (win if win is not None else DEFAULT_WINDOW_S)
+                ),
+            })
+        self._write_local("budget_state", round_no, schema.BUDGET_STATE, rows)
 
     def write_bloom_local(
         self,
@@ -251,9 +226,6 @@ class Catalog:
 
         import duckdb
         import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         from ..operators.seen import SEEN_KINDS
 
@@ -280,16 +252,28 @@ class Catalog:
             {"bucket": b, **spec.fold(prior.get(b), new.get(b, no_hashes), size)}
             for b in sorted(prior.keys() | new.keys())
         ]
-        # column by column: Table.from_pylist is several times slower
-        # on large binary values such as the bloom bitsets
-        schema = to_arrow_schema(spec.schema)
-        table = pa.table(
-            {f.name: pa.array([r[f.name] for r in rows], f.type) for f in schema},
-            schema=schema,
+        self._write_local(kind, round_no, spec.schema, rows)
+
+    def _write_local(
+        self, table: str, round_no: int, table_schema: T.StructType, rows: list[dict]
+    ) -> None:
+        """Write one round's delta of ``table`` from the driver with
+        pyarrow: ``rows`` (dicts keyed by column; other keys are ignored)
+        typed by ``table_schema``, nullability included.  Built column by
+        column: Table.from_pylist is several times slower on large
+        binary values such as the bloom bitsets."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow = to_arrow_schema(table_schema)
+        table_data = pa.table(
+            {f.name: pa.array([r[f.name] for r in rows], f.type) for f in arrow},
+            schema=arrow,
         )
-        path = Path(self.delta_path(kind, round_no))
+        path = Path(self.delta_path(table, round_no))
         path.mkdir(parents=True, exist_ok=True)
-        pq.write_table(table, path / "part-00000.parquet")
+        pq.write_table(table_data, path / "part-00000.parquet")
 
     # -- maintenance (Iceberg rewrite_data_files / expire_snapshots) ---------
 
@@ -334,9 +318,7 @@ class Catalog:
         os.replace(tmp, final)
         manifest = self.read_manifest()
         manifest.setdefault("compacted", {})[table] = last
-        mtmp = self._manifest_path.with_suffix(".tmp")
-        mtmp.write_text(json.dumps(manifest, indent=2))
-        os.replace(mtmp, self._manifest_path)
+        self._write_manifest(manifest)
         # superseded compaction snapshots are unreachable once the
         # manifest points past them
         for d in (self.root / table).glob("compact_upto=*"):
@@ -364,9 +346,7 @@ class Catalog:
         if removed:
             expired = set(manifest.setdefault("expired", {}).get(table, []))
             manifest["expired"][table] = sorted(expired.union(removed))
-            mtmp = self._manifest_path.with_suffix(".tmp")
-            mtmp.write_text(json.dumps(manifest, indent=2))
-            os.replace(mtmp, self._manifest_path)
+            self._write_manifest(manifest)
         return len(removed)
 
     def _delta_paths(self, table: str, last: int) -> list[str]:
@@ -422,8 +402,11 @@ class Catalog:
                 return None
             from pyspark.sql import functions as F
 
+            with_round = schema.ROUND_LOG.fields + [
+                T.StructField("round", T.IntegerType(), True)
+            ]
             return (
-                spark.read.schema(ROUND_LOG_SCHEMA_MULTI)
+                spark.read.schema(T.StructType(with_round))
                 .option("basePath", str(self.root / "round_log"))
                 .parquet(*paths)
                 .filter(F.col("kind") == kind)
@@ -438,6 +421,6 @@ class Catalog:
     def read_round_log_delta(self, spark: SparkSession, round_no: int) -> DataFrame:
         """One round's log delta (kind partition column from the dirs;
         schema explicit so an empty delta still reads)."""
-        return spark.read.schema(ROUND_LOG_SCHEMA).parquet(
+        return spark.read.schema(schema.ROUND_LOG).parquet(
             self.delta_path("round_log", round_no)
         )

@@ -43,24 +43,21 @@ FETCH_TIMEOUT_S = 15.0 # base.py:28
 IFRAME_SRC_RE = r'<iframe[^>]*id="mainFrame"[^>]*src="([^"]+)"'
 # scheme://host[:port] of the holder, the base a host-relative src resolves on
 ORIGIN_RE = r"^(https?://[^/?#\s]+)"
+# the scheme of an absolute URL
+SCHEME_RE = r"^([a-zA-Z][a-zA-Z0-9+.-]*):"
 
 
 def iframe_target_py(html: str | None, base_url: str) -> str | None:
-    """Pure-python twin (drives HttpFetcher and the simulator oracle)."""
+    """Pure-python twin (drives HttpFetcher and the simulator oracle):
+    the ``mainFrame`` src resolved against the holder URL as a browser
+    resolves it (``urljoin``, as extract_links_py does for hrefs)."""
     import re
+    from urllib.parse import urljoin
 
     if not html:
         return None
     m = re.search(IFRAME_SRC_RE, html)
-    if not m:
-        return None
-    src = m.group(1)
-    if src.startswith("//"):
-        return "https:" + src
-    if src.startswith("/"):
-        m2 = re.match(ORIGIN_RE, base_url)
-        return (m2.group(1) if m2 else "") + src
-    return src
+    return urljoin(base_url, m.group(1)) if m else None
 
 
 # Link discovery (the engine's frontier-expansion loop).  The reference
@@ -121,13 +118,25 @@ def extract_links_py(
 
 
 def iframe_target_col(html_col, url_col):
-    """Column twin of iframe_target_py (NULL when no iframe)."""
+    """Column twin of iframe_target_py (NULL when no iframe).  An
+    absolute, protocol-relative, host-relative, query-only or
+    path-relative src resolves as ``urljoin`` resolves it; dot segments
+    (``./``, ``../``) and fragment-only srcs are not resolved."""
     src = F.regexp_extract(html_col, IFRAME_SRC_RE, 1)
-    base = F.regexp_extract(url_col, ORIGIN_RE, 1)
+    origin = F.regexp_extract(url_col, ORIGIN_RE, 1)
+    path = F.regexp_extract(url_col, ORIGIN_RE + r"([^?#]*)", 2)
     resolved = (
-        F.when(src.startswith("//"), F.concat(F.lit("https:"), src))
-        .when(src.startswith("/"), F.concat(base, src))
-        .otherwise(src)
+        F.when(
+            src.startswith("//"),
+            F.concat(F.regexp_extract(url_col, SCHEME_RE, 1), F.lit(":"), src),
+        )
+        .when(src.startswith("/"), F.concat(origin, src))
+        .when(src.startswith("?"), F.concat(origin, path, src))
+        .when(src.rlike(SCHEME_RE), src)
+        # path-relative: replaces the last segment of the holder's path
+        .otherwise(
+            F.concat(origin, F.lit("/"), F.regexp_extract(path, r"^/?(.*/)?", 1), src)
+        )
     )
     return F.when(src == "", F.lit(None).cast("string")).otherwise(resolved)
 

@@ -375,6 +375,32 @@ def aimd_result(spark, world, tmp_path_factory):
     return cat, totals
 
 
+def test_every_delta_reads_back_with_its_schema(spark, aimd_result):
+    """schema.py is the one spelling of each crawl table: every delta an
+    AIMD crawl writes reads back, by plain schema inference, with the
+    column names, order and types declared for its table (a file read
+    makes every column nullable, so nullability is not compared)."""
+    cat, totals = aimd_result
+    declared = {
+        "frontier": schema.FRONTIER,
+        "round_log": schema.ROUND_LOG,
+        "docs": schema.DOCS,
+        "bloom": schema.BLOOM,
+        "metrics": schema.METRICS,
+        "budget_state": schema.BUDGET_STATE,
+        "budgets": schema.BUDGETS,
+    }
+
+    def columns(struct):
+        return [(f.name, f.dataType.simpleString()) for f in struct]
+
+    assert len(totals) >= 2
+    for round_no in sorted(totals):
+        for table, table_schema in declared.items():
+            df = spark.read.parquet(cat.delta_path(table, round_no))
+            assert columns(df.schema) == columns(table_schema), (table, round_no)
+
+
 @pytest.mark.parametrize("gate", [None, 0], ids=["default_gate", "gate_0"])
 def test_adaptive_budgets_are_resumable_state(spark, world, aimd_result, gate,
                                               monkeypatch, tmp_path_factory):

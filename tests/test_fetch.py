@@ -3,11 +3,15 @@ simulator's rule: fetch the URL; a 200 iframe holder is replaced by its
 ``mainFrame`` target's page (one hop, the row keeps the holder's URL);
 a URL absent from the corpus reads status 0, null html and no links."""
 
+from urllib.parse import urljoin
+
 import pytest
+from pyspark.sql import functions as F
 
 from newscrawler_spark.sources.fetch import (
     FETCH_ATTEMPTS,
     FixtureFetcher,
+    iframe_target_col,
     iframe_target_py,
 )
 
@@ -41,6 +45,12 @@ PAGES = [
     # the holder's scheme and port
     (f"{LOCAL}/h", 200, _holder("/PostView?id=1"), []),
     (f"{LOCAL}/PostView?id=1", 200, "<p>local target</p>", [f"{LOCAL}/f"]),
+    # protocol-relative src on an http holder: the target keeps http
+    (f"{LOCAL}/h2", 200, _holder("//127.0.0.1:8080/PostView?id=2"), []),
+    (f"{LOCAL}/PostView?id=2", 200, "<p>local target two</p>", []),
+    # path-relative src: resolves against the holder's directory
+    (f"{HOST}/a/h", 200, _holder("PostView?id=7"), []),
+    (f"{HOST}/a/PostView?id=7", 200, "<p>relative target</p>", [f"{HOST}/g"]),
 ]
 ABSENT = f"{HOST}/absent"
 
@@ -103,3 +113,35 @@ def test_fixture_fetch_matches_simulator_rule(
     assert got[f"{HOST}/e404"]["html"] == PAGES[7][2]
     assert got[ABSENT]["status"] == 0
     assert got[f"{LOCAL}/h"]["html"] == "<p>local target</p>"
+    assert got[f"{LOCAL}/h2"]["html"] == "<p>local target two</p>"
+    assert got[f"{HOST}/a/h"]["html"] == "<p>relative target</p>"
+
+
+# (holder url, iframe src): every src shape the twins resolve
+IFRAME_CASES = [
+    (f"{HOST}/h", "https://other.example/x"),
+    (f"{HOST}/h", "//blog.naver.com/PostView?id=1"),
+    (f"{LOCAL}/h", "//127.0.0.1:8080/PostView?id=1"),
+    (f"{HOST}/a/h", "/PostView?id=1"),
+    (f"{LOCAL}/a/h", "/PostView?id=1"),
+    (f"{HOST}/a/h", "PostView?id=1"),
+    (f"{HOST}/a/b/h?x=1#f", "PostView?id=1"),
+    (f"{HOST}/a/", "PostView"),
+    (f"{HOST}/h", "PostView"),
+    (HOST, "PostView"),
+    (f"{HOST}?q=/a/b", "PostView"),
+    (f"{HOST}/a/h?x=1", "?id=3"),
+]
+
+
+def test_iframe_twins_match_urljoin(spark):
+    """Both twins resolve an iframe src against its holder as
+    urllib.parse.urljoin does."""
+    want = [urljoin(url, src) for url, src in IFRAME_CASES]
+    assert [iframe_target_py(_holder(src), url) for url, src in IFRAME_CASES] == want
+    df = spark.createDataFrame(
+        [(i, url, _holder(src)) for i, (url, src) in enumerate(IFRAME_CASES)],
+        "i int, url string, html string",
+    )
+    got = df.select("i", iframe_target_col(F.col("html"), F.col("url")).alias("t"))
+    assert [r["t"] for r in got.orderBy("i").collect()] == want
