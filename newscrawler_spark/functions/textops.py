@@ -46,7 +46,9 @@ def _c(col: Column | str) -> Column:
 
 
 def words(col: Column | str) -> Column:
-    """Whitespace tokens of a trimmed text column (array<string>)."""
+    """Whitespace tokens of a trimmed text column (array<string>): the
+    one whitespace tokenizer, split exactly like the DuckDB oracles'
+    string_split_regex(trim(text), '\\s+')."""
     return F.split(F.trim(_c(col)), r"\s+")
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
 from ..xhash import md5_64
 
 N_BUCKETS = 4096      # hashed feature space (fastText default 2M; demo small)
@@ -68,7 +69,7 @@ def classify_docs(
     """
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(words(text_col)).alias("token"),
     ).filter(F.col("token") != "")
     bucket = F.pmod(
         md5_64(F.concat(F.lit("f:"), F.col("token"))), F.lit(n_buckets)
@@ -115,7 +116,7 @@ def hashed_doc_embedding(
     """
     toks = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(words(text_col)).alias("token"),
     ).filter(F.col("token") != "")
     w_cols = [
         (

@@ -26,10 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
 from ..xhash import md5_64
-
-# Split exactly like the oracle's string_split_regex(trim(text), '\s+')
-_WS = r"\s+"
 
 SEG_TOKENS = 8          # segment width for corpus-level segment dedup
 SEQ_LEN = 2048          # tokens per training shard for pack_sequences
@@ -38,10 +36,6 @@ MIX_SCALE = 1_000_000   # keep-probability resolution for domain_mix
 REP_DISTINCT_MIN = 0.25  # Gopher-style repetition thresholds
 REP_TOP_TOKEN_MAX = 0.20
 REP_TOP_BIGRAM_MAX = 0.18
-
-
-def _words(col: str = "text") -> F.Column:
-    return F.split(F.trim(F.col(col)), _WS)
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +65,7 @@ def segment_dedup(docs: DataFrame, seg_tokens: int = SEG_TOKENS) -> DataFrame:
         downstream per-doc stage, so AQE coalesces it with the join.
       * output text never exceeds input text; no driver collects.
     """
-    ws = _words()
+    ws = words("text")
     n_seg = F.ceil(F.size(ws) / F.lit(seg_tokens)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - 1),
@@ -173,7 +167,7 @@ def pack_sequences(
     """
     t = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(_words()).cast("long").alias("n_tokens"),
+        F.size(words("text")).cast("long").alias("n_tokens"),
     )
     hi = t.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
     n = int(hi) + 1
@@ -231,7 +225,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     the exchanges).  No Python in the hot path — the bigram zip is a
     codegen'd SQL transform.
     """
-    base = docs.select("doc_id", _words().alias("ws"))
+    base = docs.select("doc_id", words("text").alias("ws"))
     uni = base.select(
         "doc_id", F.lit("u").alias("k"), F.explode("ws").alias("g")
     )
@@ -349,7 +343,7 @@ def strip_boilerplate(
     Output: (doc_id, source, n_segments, n_boiler, text_clean) with
     surviving segments rejoined in document order.
     """
-    ws = _words()
+    ws = words("text")
     n_seg = F.ceil(F.size(ws) / F.lit(seg_tokens)).cast("int")
     segs = F.transform(
         F.sequence(F.lit(0), n_seg - 1),

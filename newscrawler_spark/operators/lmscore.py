@@ -36,6 +36,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
+
 ALPHA = 0.4          # stupid-backoff weight
 LOGP_SCALE = 1_000_000  # micro-nats fixed point
 
@@ -44,7 +46,7 @@ def _positioned_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, pos, token) with document-order positions."""
     return docs.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "token"),
+        F.posexplode(words(text_col)).alias("pos", "token"),
     ).filter(F.col("token") != "")
 
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
+
 TOP_K = 5        # posting-list head kept per token
 PRE_CAP_SALT = 8  # stage-1 shards per token
 
@@ -43,7 +45,7 @@ def inverted_index(
 ) -> DataFrame:
     w = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(words(text_col)).alias("token"),
     ).filter(F.col("token") != "")
     tf = w.groupBy("token", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
     totals = tf.groupBy("token").agg(

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
 from ..xhash import md5_64
 
 K1 = 1.2
@@ -46,7 +47,7 @@ SCORE_SCALE = 1_000_000  # 6-dp fixed point for the exact integer sum
 def _tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(words(text_col)).alias("token"),
     ).filter(F.col("token") != "")
 
 

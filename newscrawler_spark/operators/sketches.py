@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
 from ..xhash import md5_64
 
 # Count-min sketch geometry
@@ -45,7 +46,7 @@ def _tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select(
         "doc_id",
         "source",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token"),
+        F.explode(words(text_col)).alias("token"),
     ).filter(F.col("token") != "")
 
 

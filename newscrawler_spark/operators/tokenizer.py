@@ -45,6 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+from ..functions.textops import words
+
 # Words eligible for tokenizer training: printable ASCII, no '|'
 # (the sentinel).  Same predicate in the DuckDB oracles.
 WORD_RE = "^[!-~]+$"
@@ -60,7 +62,7 @@ def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     aggregation is skew-immune.
     """
     w = docs.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word")
+        F.explode(words(text_col)).alias("word")
     )
     return (
         w.filter((F.col("word") != "") & F.col("word").rlike(WORD_RE)
@@ -235,16 +237,16 @@ def encode_docs(
     broadcast-joins it when small.  Output: (doc_id, n_words,
     n_bpe_tokens).
     """
-    words = docs.select(
+    doc_words = docs.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("word"),
+        F.explode(words(text_col)).alias("word"),
     ).filter(
         (F.col("word") != "") & F.col("word").rlike(WORD_RE)
         & ~F.col("word").contains("|")
     )
     enc = word_state.select("word", F.size(_symbols()).alias("n_syms"))
     return (
-        words.join(enc, "word")
+        doc_words.join(enc, "word")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_words"),

@@ -79,35 +79,37 @@ class RoundResult:
     # measured as a 25%-of-runtime GC storm at 32 threads)
     persisted_heavy: list = None
 
-    @staticmethod
-    def _release(frames: list) -> None:
-        for df in frames or []:
-            df.unpersist()
-            try:
-                plan = df._jdf.queryExecution().analyzed()
-                if plan.getClass().getSimpleName() == "LogicalRDD":
-                    plan.rdd().unpersist(False)
-            except Exception:
-                pass  # cleanup is best-effort; the ContextCleaner backstops
-
     def unpersist_light(self) -> None:
-        """Release every materialized frame EXCEPT the extracted one.
-
-        ``Dataset.unpersist`` only clears CacheManager entries — the
-        RDD behind a localCheckpoint is invisible to it and otherwise
-        waits for the ContextCleaner (driver GC + async queue), so
-        blocks from every completed round pile up in executor memory
-        and push later rounds into eviction/spill thrash.  Reach into
-        the LogicalRDD leaf and unpersist the checkpoint RDD directly
-        (verified: getPersistentRDDs drops to zero immediately)."""
+        """Release every materialized frame EXCEPT the extracted one."""
         frames, self.persisted = self.persisted, None
-        self._release(frames)
+        release(frames)
 
     def unpersist(self) -> None:
         """Release ALL the round's materialized frames (idempotent)."""
         self.unpersist_light()
         frames, self.persisted_heavy = self.persisted_heavy, None
-        self._release(frames)
+        release(frames)
+
+
+def release(frames: list | None) -> None:
+    """Free materialized frames now: the cache entry of a persisted
+    frame and the RDD behind a localCheckpoint.
+
+    ``Dataset.unpersist`` only clears CacheManager entries — the RDD
+    behind a localCheckpoint is invisible to it and otherwise waits for
+    the ContextCleaner (driver GC + async queue), so blocks from every
+    completed round pile up in executor memory and push later rounds
+    into eviction/spill thrash.  Reach into the LogicalRDD leaf and
+    unpersist the checkpoint RDD directly (verified: getPersistentRDDs
+    drops to zero immediately).  Every crawl-path frame is freed here."""
+    for df in frames or []:
+        df.unpersist()
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+        except Exception:
+            pass  # cleanup is best-effort; the ContextCleaner backstops
 
 
 def run_round(

@@ -8,6 +8,12 @@ last committed manifest and, because every derived value is a pure
 function of (url, round, config), reproduces the uninterrupted run
 bit-identically (tested in tests/test_crawl.py).
 
+One path per mechanism: every delta the loop reads back comes through
+Catalog.read_delta (typed by schema.TABLES); the docs delta is always
+written on a background thread, and its round commits when that thread
+is joined; every frame the crawl materializes is freed by
+crawl_round.release, so a finished crawl() holds no checkpoint.
+
 Seen-filter lifecycle: each round folds its new seen rows into the
 previous round's bloom sidecar and persists it as its own `bloom`
 delta, so a resume reads the latest sidecar instead of rescanning 10^10
@@ -16,7 +22,6 @@ seen rows.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,7 +30,7 @@ from pyspark.sql import functions as F
 from .. import schema
 from ..operators.seen import fold_sidecar
 from ..sources.catalog import Catalog
-from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, run_round
+from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, release, run_round
 
 # Above this many rows a round's seen-sidecar and budget-state folds go
 # back to distributed jobs (driver-side DuckDB over the round_log
@@ -91,20 +96,16 @@ def crawl(
     robots: DataFrame,
     max_rounds: int = 10,
     conf: RoundConfig | None = None,
-    stop_after_round: int | None = None,
     header_bootstrap=None,
     robots_fetcher=None,
-    robots_agent: str = "newscrawler",
 ) -> dict:
     """Run crawl rounds until the frontier drains or max_rounds.
 
     `budgets` and `robots` are materialized once per call (an eager
     localCheckpoint, released when crawl() returns or raises), so
     callers need not cache them: every round reads the checkpoint
-    instead of re-running their lineage in each of its gates.
-    `stop_after_round` simulates a kill for resumability tests: the run
-    stops *after committing* that round, and a later crawl() call picks
-    up from the manifest.
+    instead of re-running their lineage in each of its gates.  A later
+    crawl() call on the same catalog resumes from its manifest.
     `header_bootstrap` (operators.projections.HeaderBootstrap) is the S4
     seam: refreshed at every round boundary (TTL-gated), its host→headers
     table is broadcast onto the round's eligible rows.
@@ -121,11 +122,11 @@ def crawl(
     try:
         return _crawl_rounds(
             spark, catalog, fetcher, _hold(budgets, held), _hold(robots, held),
-            held, max_rounds, conf or RoundConfig(), stop_after_round,
-            header_bootstrap, robots_fetcher, robots_agent,
+            held, max_rounds, conf or RoundConfig(), header_bootstrap,
+            robots_fetcher,
         )
     finally:
-        RoundResult._release(held)
+        release(held)
 
 
 def _hold(df: DataFrame, held: list[DataFrame]) -> DataFrame:
@@ -158,10 +159,8 @@ def _crawl_rounds(
     held: list[DataFrame],
     max_rounds: int,
     conf: RoundConfig,
-    stop_after_round: int | None,
     header_bootstrap,
     robots_fetcher,
-    robots_agent: str,
 ) -> dict:
     totals: dict = {}
     robots_done: set[str] = set()
@@ -184,11 +183,13 @@ def _crawl_rounds(
     # is per-round STATE instead: re-read from the last committed
     # `budgets` delta on resume and re-collected (same bound) after
     # each AIMD update.
-    budgets_round = budgets
-    if conf.adaptive_budgets and catalog.last_round >= 0:
-        bpath = catalog.delta_path("budgets", catalog.last_round)
-        if os.path.isdir(bpath):
-            budgets_round = spark.read.schema(schema.BUDGETS).parquet(bpath)
+    budgets_round = (
+        catalog.read_delta(spark, "budgets", catalog.last_round)
+        if conf.adaptive_budgets
+        else None
+    )
+    if budgets_round is None:
+        budgets_round = budgets
     budget_rows = _budget_rows(budgets_round)
 
     # Deferred-commit pipeline: round N's docs write (its biggest delta,
@@ -202,7 +203,9 @@ def _crawl_rounds(
     # happen when the future joins — before any N+1 WRITE — so the
     # manifest never commits a round whose deltas aren't all on disk
     # (crash ⇒ redo the uncommitted round; write_delta overwrites, so
-    # the redo is idempotent — unchanged from today's crash story).
+    # the redo is idempotent).  Incremental dedup joins the write early,
+    # because it reads the delta back; the commit still waits for the
+    # next round's compile.
     pending: dict | None = None
 
     def _finalize_pending(final: bool = False) -> None:
@@ -230,11 +233,13 @@ def _crawl_rounds(
             if pending is not None and pending["round_no"] == round_no - 1
             else catalog.read_manifest().get("rounds", {}).get(str(round_no - 1))
         )
-        frontier_path = catalog.delta_path("frontier", round_no)
-        # explicit schemas on the per-round reads: schema inference costs
-        # a driver-side footer scan per round (pure fixed cost), and at
-        # scale a delta's schema is table metadata, never file footers
-        frontier = spark.read.schema(schema.FRONTIER).parquet(frontier_path)
+        # per-round reads are typed by schema.TABLES (read_delta):
+        # schema inference costs a driver-side footer scan per round
+        # (pure fixed cost), and at scale a delta's schema is table
+        # metadata, never file footers.  No frontier delta = empty.
+        frontier = catalog.read_delta(spark, "frontier", round_no)
+        if frontier is None:
+            break
         if prev is not None:
             if prev.get("frontier_next", 0) == 0:
                 break
@@ -242,14 +247,9 @@ def _crawl_rounds(
             break
 
         url_seen = catalog.read_table(spark, "url_seen", upto_round=round_no - 1)
-        # the previous round's bloom sidecar (one bitset per bucket)
-        sidecar = (
-            spark.read.schema(schema.BLOOM).parquet(
-                catalog.delta_path("bloom", round_no - 1)
-            )
-            if round_no > 0
-            else None
-        )
+        # the previous round's bloom sidecar (one bitset per bucket);
+        # None in round 0
+        sidecar = catalog.read_delta(spark, "bloom", round_no - 1)
 
         boot_cfg = None
         if header_bootstrap is not None:
@@ -274,8 +274,7 @@ def _crawl_rounds(
             from ..sources.robots import fetch_robots
 
             doms, new_rules = fetch_robots(
-                frontier, robots_fetcher, agent=robots_agent,
-                exclude=robots_done,
+                frontier, robots_fetcher, exclude=robots_done,
             )
             robots_done.update(doms)
             if new_rules:
@@ -290,7 +289,7 @@ def _crawl_rounds(
                     held,
                 )
                 held.remove(prior)
-                RoundResult._release([prior])
+                release([prior])
 
         result: RoundResult = run_round(
             frontier, url_seen, sidecar, budgets_round, robots, fetcher,
@@ -322,7 +321,7 @@ def _crawl_rounds(
         # Small rounds fold both on the DRIVER (DuckDB + numpy/pyarrow,
         # the same per-bucket kernels, zero Spark jobs); big rounds use
         # the distributed path.
-        log_round = catalog.read_round_log_delta(spark, round_no)
+        log_round = catalog.read_delta(spark, "round_log", round_no)
         if log_counts["seen"] <= LOCAL_FOLD_MAX_ROWS:
             catalog.write_bloom_local(
                 round_no, round_no - 1 if round_no > 0 else None, conf.m_bits
@@ -335,57 +334,15 @@ def _crawl_rounds(
                 round_no,
             )
 
-        # optional per-round incremental dedup: this round's docs delta
-        # vs the accumulated corpus index (the 100 TB pipeline's
-        # per-ingest dedup shape) — batch = the just-written docs delta
-        # (re-read, so the round lineage isn't re-executed), history =
-        # the committed index/signature deltas of earlier rounds
-        # docs write: foreground when this round must read the delta
-        # straight back (incremental dedup); otherwise backgrounded
-        # under the NEXT round's driver compile (see pipeline note)
-        n_docs = None
-        n_neardup = None
-        if conf.dedup_docs:
-            n_docs = catalog.write_delta(result.docs, "docs", round_no)
-        if conf.dedup_docs and n_docs > 0:
-            from ..operators.dedup import doc_text, incremental_neardup
-
-            # repartition BEFORE the signature aggregation: the docs
-            # delta is a handful of small parquet files, so the scan
-            # comes back as 1-2 input partitions — and minhash's md5
-            # work happens map-side in the partial agg, i.e. on those
-            # few cores (measured: one task grinding 3+ min at 32
-            # cores).  One narrow shuffle of the batch text buys full
-            # parallelism for the 16x-md5-per-shingle hot loop.
-            batch = (
-                spark.read.schema(schema.DOCS)
-                .parquet(catalog.delta_path("docs", round_no))
-                .select("doc_id", doc_text().alias("text"))
-                .repartition(conf.n_partitions)
-            )
-            dd = incremental_neardup(
-                batch,
-                catalog.read_table(spark, "dedup_index", upto_round=round_no - 1),
-                catalog.read_table(spark, "dedup_sigs", upto_round=round_no - 1),
-                bucket_cap=CRAWL_DEDUP_BUCKET_CAP,
-                persist_fn=lambda df: df.localCheckpoint(eager=False),
-            )
-            n_neardup = catalog.write_delta(dd["matches"], "neardup", round_no)
-            catalog.write_delta(dd["index_delta"], "dedup_index", round_no)
-            catalog.write_delta(dd["sigs_delta"], "dedup_sigs", round_no)
-            for df in (dd["index_delta"], dd["sigs_delta"]):
-                df.unpersist()
-
         counters = {
             "scheduled": log_counts["order"],
-            "docs": n_docs,
+            "docs": None,  # set when the docs write joins
             "new_seen": log_counts["seen"],
             "quarantined": log_counts["quarantine"],
             "frontier_next": n_next,
             "wall_sec": round(time.time() - t_round, 3),
         }
-        if n_neardup is not None:
-            counters["neardup_matches"] = n_neardup
+
         # A3/A4: budget accounting delta (the reference's batch
         # success/fail counters and APIKeyPool folds, round-wise — see
         # operators.scheduling.budget_accounting); the metrics row is
@@ -429,44 +386,72 @@ def _crawl_rounds(
             # read the delta back (truncates lineage — identical to what
             # a resume at round_no+1 would read) and re-collect the
             # bounded row cache
-            budgets_round = spark.read.schema(schema.BUDGETS).parquet(
-                catalog.delta_path("budgets", round_no)
-            )
+            budgets_round = catalog.read_delta(spark, "budgets", round_no)
             budget_rows = _budget_rows(budgets_round)
             counters["capacity_total"] = int(
                 budgets_round.agg(F.sum("capacity")).first()[0] or 0
             )
 
-        if n_docs is not None:
-            # docs already on disk (dedup mode): the join only reports it
-            def _join(n=n_docs) -> int:
-                return n
-        else:
-            # spawn the docs write LAST (all foreground writes done) so
-            # it overlaps only the next round's serial driver compile.
-            # Every checkpoint except the docs write's own input is
-            # consumed by now — release them BEFORE the overlap window
-            # so two rounds' block sets never coexist (measured as a
-            # 25%-of-runtime GC storm at 32 threads when they did)
-            result.unpersist_light()
-            from pyspark import InheritableThread
+        # spawn the docs write LAST (all foreground writes done) so it
+        # overlaps only the next round's serial driver compile.  Every
+        # checkpoint except the docs write's own input is consumed by
+        # now — release them BEFORE the overlap window so two rounds'
+        # block sets never coexist (measured as a 25%-of-runtime GC
+        # storm at 32 threads when they did)
+        result.unpersist_light()
+        from pyspark import InheritableThread
 
-            box: dict = {}
+        box: dict = {}
 
-            def _write_docs(res=result, rn=round_no, out=box) -> None:
-                try:
-                    out["n"] = catalog.write_delta(res.docs, "docs", rn)
-                except BaseException as exc:  # noqa: BLE001 — re-raised on join
-                    out["exc"] = exc
+        def _write_docs(res=result, rn=round_no, out=box) -> None:
+            try:
+                out["n"] = catalog.write_delta(res.docs, "docs", rn)
+            except BaseException as exc:  # noqa: BLE001 — re-raised on join
+                out["exc"] = exc
 
-            th = InheritableThread(target=_write_docs, daemon=True)
-            th.start()
+        th = InheritableThread(target=_write_docs, daemon=True)
+        th.start()
 
-            def _join(t=th, out=box) -> int:
-                t.join()
-                if "exc" in out:
-                    raise out["exc"]
-                return out["n"]
+        def _join(t=th, out=box) -> int:
+            t.join()
+            if "exc" in out:
+                raise out["exc"]
+            return out["n"]
+
+        # optional per-round incremental dedup: this round's docs delta
+        # vs the accumulated corpus index (the 100 TB pipeline's
+        # per-ingest dedup shape) — batch = the just-written docs delta
+        # (re-read once the write joins, so the round lineage isn't
+        # re-executed), history = the committed index/signature deltas
+        # of earlier rounds
+        if conf.dedup_docs and _join() > 0:
+            from ..operators.dedup import doc_text, incremental_neardup
+
+            # repartition BEFORE the signature aggregation: the docs
+            # delta is a handful of small parquet files, so the scan
+            # comes back as 1-2 input partitions — and minhash's md5
+            # work happens map-side in the partial agg, i.e. on those
+            # few cores (measured: one task grinding 3+ min at 32
+            # cores).  One narrow shuffle of the batch text buys full
+            # parallelism for the 16x-md5-per-shingle hot loop.
+            batch = (
+                catalog.read_delta(spark, "docs", round_no)
+                .select("doc_id", doc_text().alias("text"))
+                .repartition(conf.n_partitions)
+            )
+            dd = incremental_neardup(
+                batch,
+                catalog.read_table(spark, "dedup_index", upto_round=round_no - 1),
+                catalog.read_table(spark, "dedup_sigs", upto_round=round_no - 1),
+                bucket_cap=CRAWL_DEDUP_BUCKET_CAP,
+                persist_fn=lambda df: df.localCheckpoint(eager=False),
+            )
+            counters["neardup_matches"] = catalog.write_delta(
+                dd["matches"], "neardup", round_no
+            )
+            catalog.write_delta(dd["index_delta"], "dedup_index", round_no)
+            catalog.write_delta(dd["sigs_delta"], "dedup_sigs", round_no)
+            release([dd["index_delta"], dd["sigs_delta"]])
 
         pending = {
             "round_no": round_no,
@@ -475,10 +460,5 @@ def _crawl_rounds(
             "result": result,
             "t_round": t_round,
         }
-        if n_docs is not None:
-            _finalize_pending()  # commit inline: nothing to overlap
-
-        if stop_after_round is not None and round_no >= stop_after_round:
-            break
     _finalize_pending(final=True)
     return totals

@@ -157,7 +157,7 @@ def doc_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     position (image every 7th at %7==3, video at %13==5, else text);
     payload = word for text, derived media URL otherwise."""
     docs = _doc(spark, sf_dir, "documents")
-    ws = F.split(F.trim("text"), r"\s+")
+    ws = TX.words("text")
     df = docs.select("doc_id", F.posexplode(ws).alias("pos", "word"))
     kind = (
         F.when(F.col("pos") % 7 == 3, F.lit("image"))
@@ -2186,7 +2186,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     row is engine- and partitioning-independent."""
     docs = _doc(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
+        F.explode(TX.words("text")).alias("token")
     ).filter(F.col("token") != "")
     keep = CUR.quality_filter(docs).agg(
         F.sum(F.col("keep").cast("long")).alias("n_keep")
@@ -2387,7 +2387,7 @@ def q_anchor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 % _N_HOSTS
             ).cast("string"),
         ).alias("dst_host"),
-        F.array_join(F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 2), " ").alias(
+        F.array_join(F.slice(TX.words("text"), 1, 2), " ").alias(
             "anchor"
         ),
     )

@@ -180,3 +180,14 @@ BUDGET_STATE = T.StructType(
         T.StructField("reset_ts", T.DoubleType(), True),
     ]
 )
+
+# the crawl tables above by name: Catalog.read_delta reads a delta with these
+TABLES: dict[str, T.StructType] = {
+    "frontier": FRONTIER,
+    "round_log": ROUND_LOG,
+    "docs": DOCS,
+    "bloom": BLOOM,
+    "metrics": METRICS,
+    "budget_state": BUDGET_STATE,
+    "budgets": BUDGETS,
+}

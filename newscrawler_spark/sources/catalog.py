@@ -17,8 +17,10 @@ Semantics matched to Iceberg:
   * reads union the delta files up to `last_round` (like snapshot
     time-travel `VERSION AS OF`);
   * one schema per table — schema.py declares each crawl table's
-    columns, the DDL an Iceberg catalog would carry; the round log is
-    read and the driver-side deltas are written with it;
+    columns, the DDL an Iceberg catalog would carry; read_delta, the one
+    typed read of a round's delta (and where an Iceberg table read
+    plugs in), reads with schema.TABLES, and the driver-side deltas are
+    written with it;
   * lineage — every delta row carries its `round`; docs rows also carry
     (domain_bucket, source_seed);
   * at scale, per-round full rewrites are forbidden: url_seen/docs are
@@ -418,9 +420,16 @@ class Catalog:
             return None
         return spark.read.parquet(*paths)
 
-    def read_round_log_delta(self, spark: SparkSession, round_no: int) -> DataFrame:
-        """One round's log delta (kind partition column from the dirs;
-        schema explicit so an empty delta still reads)."""
-        return spark.read.schema(schema.ROUND_LOG).parquet(
-            self.delta_path("round_log", round_no)
-        )
+    def read_delta(
+        self, spark: SparkSession, table: str, round_no: int
+    ) -> DataFrame | None:
+        """One round's delta of a crawl table, read with the table's
+        schema.TABLES schema (no footer scan, and a delta with no rows
+        still reads); None when that round wrote no such delta.  This
+        is the one typed read of a crawl delta — where an Iceberg
+        catalog's table scan (a snapshot's files for one round) would
+        plug in."""
+        path = self.delta_path(table, round_no)
+        if not os.path.isdir(path):
+            return None
+        return spark.read.schema(schema.TABLES[table]).parquet(path)

@@ -5,8 +5,10 @@ Two implementations behind one seam:
   * FixtureFetcher — joins the eligible frontier against an offline
     ``pages`` table (url, status, html, out_links).  This is the test /
     bench path: deterministic, no network.  The S3 iframe hop is
-    resolved once, when the corpus is cached: one cached corpus maps
-    each URL straight to the page a fetch returns, and a cached URL
+    resolved once, when the corpus is cached, by iframe_target_py (the
+    one hop rule, which HttpFetcher and the simulator also call): one
+    cached corpus maps each URL straight to the page a fetch returns,
+    and a cached URL
     list recovers misses, so a round is one lookup.  Retry semantics
     collapse (a fixture status is stable across attempts), so attempts is
     reported as 1 for 200s and FETCH_ATTEMPTS for failures — exactly
@@ -41,16 +43,14 @@ FETCH_TIMEOUT_S = 15.0 # base.py:28
 # keeps the ORIGINAL url/canonical identity; re-enqueueing the iframe
 # URL would key the seen-set on the wrong URL).
 IFRAME_SRC_RE = r'<iframe[^>]*id="mainFrame"[^>]*src="([^"]+)"'
-# scheme://host[:port] of the holder, the base a host-relative src resolves on
-ORIGIN_RE = r"^(https?://[^/?#\s]+)"
-# the scheme of an absolute URL
-SCHEME_RE = r"^([a-zA-Z][a-zA-Z0-9+.-]*):"
 
 
 def iframe_target_py(html: str | None, base_url: str) -> str | None:
-    """Pure-python twin (drives HttpFetcher and the simulator oracle):
-    the ``mainFrame`` src resolved against the holder URL as a browser
-    resolves it (``urljoin``, as extract_links_py does for hrefs)."""
+    """The S3 hop rule, the one implementation (HttpFetcher, the
+    FixtureFetcher corpus and the simulator oracle all call it): the
+    ``mainFrame`` src resolved against the holder URL as a browser
+    resolves it (``urljoin``, as extract_links_py does for hrefs);
+    None when the page has no such iframe."""
     import re
     from urllib.parse import urljoin
 
@@ -117,30 +117,6 @@ def extract_links_py(
     return out
 
 
-def iframe_target_col(html_col, url_col):
-    """Column twin of iframe_target_py (NULL when no iframe).  An
-    absolute, protocol-relative, host-relative, query-only or
-    path-relative src resolves as ``urljoin`` resolves it; dot segments
-    (``./``, ``../``) and fragment-only srcs are not resolved."""
-    src = F.regexp_extract(html_col, IFRAME_SRC_RE, 1)
-    origin = F.regexp_extract(url_col, ORIGIN_RE, 1)
-    path = F.regexp_extract(url_col, ORIGIN_RE + r"([^?#]*)", 2)
-    resolved = (
-        F.when(
-            src.startswith("//"),
-            F.concat(F.regexp_extract(url_col, SCHEME_RE, 1), F.lit(":"), src),
-        )
-        .when(src.startswith("/"), F.concat(origin, src))
-        .when(src.startswith("?"), F.concat(origin, path, src))
-        .when(src.rlike(SCHEME_RE), src)
-        # path-relative: replaces the last segment of the holder's path
-        .otherwise(
-            F.concat(origin, F.lit("/"), F.regexp_extract(path, r"^/?(.*/)?", 1), src)
-        )
-    )
-    return F.when(src == "", F.lit(None).cast("string")).otherwise(resolved)
-
-
 def _miss_page() -> dict:
     """The page a fetch of a URL absent from the corpus returns."""
     return {
@@ -190,19 +166,26 @@ class FixtureFetcher:
         # 200 iframe HOLDER's row carries its target's page — status 0,
         # null html and no links when the target is not in the corpus —
         # and keeps the holder's url; every other row is as fetched.
+        # The target is iframe_target_py itself, a row-at-a-time UDF
+        # over only the 200 rows that contain the iframe's id; a NULL
+        # target (no src) leaves the row as fetched.  Nothing filters on
+        # the UDF's output: that predicate would run the UDF in a second
+        # Python node, with a second Python worker per task.
         # Holders resolve against the small target sub-corpus (a
         # semi-join on the distinct targets), and the resolved rows
         # attach to the corpus by a join that streams it.  `src` is
         # cached only while the resolved corpus is built, so its three
         # readers scan the source and shuffle its HTML once.
         src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        iframe_target = F.udf(iframe_target_py, "string", useArrow=False)
         holders = (
-            src.filter(F.col("status") == 200)
+            src.filter(
+                (F.col("status") == 200) & F.col("html").contains('id="mainFrame"')
+            )
             .select(
                 F.col("url").alias("h_url"),
-                iframe_target_col(F.col("html"), F.col("url")).alias("h_target"),
+                iframe_target(F.col("html"), F.col("url")).alias("h_target"),
             )
-            .filter(F.col("h_target").isNotNull())
         )
         targets = src.join(
             holders.select(F.col("h_target").alias("t")).distinct(),
@@ -213,7 +196,7 @@ class FixtureFetcher:
         resolved = src.join(hops, F.col("url") == F.col("h_url"), "left").select(
             F.col("url").alias("p_url"),
             *[
-                F.when(F.col("h_url").isNull(), F.col(c))
+                F.when(F.col("h_target").isNull(), F.col(c))
                 .when(F.col("t_url").isNotNull(), F.col(f"t_{c}"))
                 .otherwise(miss)
                 .alias(c)

@@ -48,6 +48,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.crawl_round import release
+
 RULE_KEYS = ("user-agent", "allow", "disallow", "crawl-delay")
 
 
@@ -250,17 +252,20 @@ def fetch_robots(
     fetched = fetcher.fetch(reqs).select(
         "domain", "status", "html"
     ).localCheckpoint(eager=False)
-    domains = [r.domain for r in fetched.select("domain").collect()]
-    if not domains:
-        return [], []
-    bodies = fetched.filter(F.col("status") == 200).select(
-        "domain", F.col("html").alias("body")
-    )
-    rules = [
-        (r.domain, r.path_prefix, r.allow, r.crawl_delay_s)
-        for r in parse_robots(bodies, agent=agent).collect()
-    ]
-    return domains, rules
+    try:
+        domains = [r.domain for r in fetched.select("domain").collect()]
+        if not domains:
+            return [], []
+        bodies = fetched.filter(F.col("status") == 200).select(
+            "domain", F.col("html").alias("body")
+        )
+        rules = [
+            (r.domain, r.path_prefix, r.allow, r.crawl_delay_s)
+            for r in parse_robots(bodies, agent=agent).collect()
+        ]
+        return domains, rules
+    finally:
+        release([fetched])
 
 
 def parse_robots_py(body: str, agent: str = "newscrawler") -> list[tuple]:

@@ -102,7 +102,7 @@ def crawl_from_seed_stream(
     batch round loop.  With Trigger.AvailableNow this is exactly the
     batch crawl; with a live source it becomes continuous crawling with
     identical per-round semantics."""
-    from ..plans.crawl_round import FRONTIER_COLS
+    from ..plans.crawl_round import FRONTIER_COLS, release
     from ..plans.scheduler import crawl, seed_frontier
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -118,11 +118,10 @@ def crawl_from_seed_stream(
             # the input files) before the overwrite.  On a cluster the
             # catalog would stage the new delta and swap atomically.
             nxt = catalog.last_round + 1
-            existing = batch_df.sparkSession.read.parquet(
-                catalog.delta_path("frontier", nxt)
-            )
+            existing = catalog.read_delta(batch_df.sparkSession, "frontier", nxt)
             merged = existing.unionByName(seeds).localCheckpoint(eager=True)
             catalog.write_delta(merged, "frontier", nxt)
+            release([merged])
         crawl(
             batch_df.sparkSession,
             catalog,

@@ -116,3 +116,23 @@ def test_run_skipped_when_budget_below_last_wall(bench, monkeypatch, capsys):
         ("crawl_polite@1", 3, 115.0, 30.0),
         ("registry@1", 2, 115.0, -70.0),
         ("registry@1", 3, 115.0, -70.0)]
+
+
+def test_perfbench_patch_targets_exist(monkeypatch):
+    """A traced perfbench run patches engine functions and methods by
+    name; entering its patch contexts here makes renaming or deleting
+    any of them fail Tier-1, not only a traced benchmark run."""
+    monkeypatch.syspath_prepend(str(ROOT / "perfbench"))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_crawl", ROOT / "perfbench" / "crawl.py")
+    crawl = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, spec.name, crawl)  # for its dataclasses
+    spec.loader.exec_module(crawl)
+    from spans import Tracer
+
+    from newscrawler_spark.sources.catalog import Catalog
+
+    real = Catalog.write_delta
+    with crawl.layer_spans(Tracer()), crawl.commit_clock({}):
+        assert Catalog.write_delta is not real
+    assert Catalog.write_delta is real

@@ -129,7 +129,7 @@ def test_kill_and_resume_bit_identical(spark, world, engine_result, tmp_path_fac
     seed_frontier(cat2, seeds)
     # run rounds 0-1, "die", then resume
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=CONF, stop_after_round=1)
+          max_rounds=2, conf=CONF)
     assert cat2.last_round == 1
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
           max_rounds=MAX_ROUNDS, conf=CONF)
@@ -150,7 +150,7 @@ def test_crash_with_uncommitted_deltas_redoes_round(spark, world, engine_result,
     cat2 = Catalog(tmp_path_factory.mktemp("crawl_crash"))
     seed_frontier(cat2, seeds)
     crawl(spark, cat2, FixtureFetcher(pages), budgets, robots,
-          max_rounds=MAX_ROUNDS, conf=CONF, stop_after_round=1)
+          max_rounds=2, conf=CONF)
     assert cat2.last_round == 1
     # simulate the crash state: round 1's deltas exist, manifest says 0
     manifest = cat2.read_manifest()
@@ -376,27 +376,20 @@ def aimd_result(spark, world, tmp_path_factory):
 
 
 def test_every_delta_reads_back_with_its_schema(spark, aimd_result):
-    """schema.py is the one spelling of each crawl table: every delta an
-    AIMD crawl writes reads back, by plain schema inference, with the
-    column names, order and types declared for its table (a file read
-    makes every column nullable, so nullability is not compared)."""
+    """schema.py is the one spelling of each crawl table: schema.TABLES
+    names every table an AIMD crawl writes, and every delta reads back,
+    by plain schema inference, with the column names, order and types
+    declared for its table (a file read makes every column nullable, so
+    nullability is not compared)."""
     cat, totals = aimd_result
-    declared = {
-        "frontier": schema.FRONTIER,
-        "round_log": schema.ROUND_LOG,
-        "docs": schema.DOCS,
-        "bloom": schema.BLOOM,
-        "metrics": schema.METRICS,
-        "budget_state": schema.BUDGET_STATE,
-        "budgets": schema.BUDGETS,
-    }
+    assert set(schema.TABLES) == {p.name for p in cat.root.iterdir() if p.is_dir()}
 
     def columns(struct):
         return [(f.name, f.dataType.simpleString()) for f in struct]
 
     assert len(totals) >= 2
     for round_no in sorted(totals):
-        for table, table_schema in declared.items():
+        for table, table_schema in schema.TABLES.items():
             df = spark.read.parquet(cat.delta_path(table, round_no))
             assert columns(df.schema) == columns(table_schema), (table, round_no)
 
@@ -424,7 +417,7 @@ def test_adaptive_budgets_are_resumable_state(spark, world, aimd_result, gate,
     cat_b = Catalog(tmp_path_factory.mktemp("aimd_resume"))
     seed_frontier(cat_b, seeds)
     tot_b = crawl(spark, cat_b, FixtureFetcher(pages), budgets, robots,
-                  max_rounds=MAX_ROUNDS, conf=AIMD_CONF, stop_after_round=1)
+                  max_rounds=2, conf=AIMD_CONF)
     assert cat_b.last_round == 1
     tot_b.update(crawl(spark, cat_b, FixtureFetcher(pages), budgets, robots,
                        max_rounds=MAX_ROUNDS, conf=AIMD_CONF))
@@ -482,3 +475,29 @@ def test_round_invariant_inputs_evaluated_once(spark, world, engine_result,
     assert all(evaluations[0]), evaluations
     assert evaluations[0] == evaluations[1], evaluations
     _assert_same_crawl(spark, engine_result, cat)
+
+
+@pytest.mark.parametrize("dedup_docs", [False, True], ids=["default", "dedup_docs"])
+def test_crawl_frees_every_checkpoint(spark, dedup_docs, tmp_path):
+    """After crawl() returns, the JVM holds only the RDDs persisted
+    before the call: round checkpoints, held inputs and, in dedup mode,
+    the signature and band checkpoints are all freed (Dataset.unpersist
+    alone frees nothing behind a localCheckpoint)."""
+    sc = spark.sparkContext
+    seeds = synth_frontier(spark, N_SEEDS)
+    fetcher = FixtureFetcher(synth_pages(spark, N_PAGES))
+    # fill the fetcher's own caches, which outlive the crawl
+    fetcher.fetch(seeds.select("url")).write.format("noop").mode("overwrite").save()
+    before = set(sc._jsc.getPersistentRDDs().keys())
+
+    cat = Catalog(tmp_path / "cat")
+    seed_frontier(cat, seeds)
+    totals = crawl(spark, cat, fetcher, synth_budgets(spark, capacity_default=12),
+                   synth_robots(spark), max_rounds=2,
+                   conf=dataclasses.replace(CONF, dedup_docs=dedup_docs))
+    after = set(sc._jsc.getPersistentRDDs().keys())
+    fetcher.close()
+
+    assert sorted(totals) == [0, 1]
+    assert not dedup_docs or any("neardup_matches" in c for c in totals.values())
+    assert after <= before, sorted(after - before)

@@ -6,12 +6,10 @@ a URL absent from the corpus reads status 0, null html and no links."""
 from urllib.parse import urljoin
 
 import pytest
-from pyspark.sql import functions as F
 
 from newscrawler_spark.sources.fetch import (
     FETCH_ATTEMPTS,
     FixtureFetcher,
-    iframe_target_col,
     iframe_target_py,
 )
 
@@ -39,8 +37,9 @@ PAGES = [
     # non-200 pages pass through unchanged, iframe or not
     (f"{HOST}/e404", 404, _holder("//blog.naver.com/PostView?id=1"), [f"{HOST}/d"]),
     (f"{HOST}/e500", 500, None, []),
-    # a plain 200 page
+    # a plain 200 page, and one whose mainFrame iframe has no src
     (f"{HOST}/plain", 200, "<p>plain</p>", [f"{HOST}/e"]),
+    (f"{HOST}/nosrc", 200, '<iframe id="mainFrame"></iframe>', [f"{HOST}/j"]),
     # host-relative src on an http holder with a port: the target keeps
     # the holder's scheme and port
     (f"{LOCAL}/h", 200, _holder("/PostView?id=1"), []),
@@ -51,6 +50,9 @@ PAGES = [
     # path-relative src: resolves against the holder's directory
     (f"{HOST}/a/h", 200, _holder("PostView?id=7"), []),
     (f"{HOST}/a/PostView?id=7", 200, "<p>relative target</p>", [f"{HOST}/g"]),
+    # dot-segment src: `..` climbs out of the holder's directory
+    (f"{HOST}/a/h2", 200, _holder("../PostView?id=8"), []),
+    (f"{HOST}/PostView?id=8", 200, "<p>dot-segment target</p>", [f"{HOST}/i"]),
 ]
 ABSENT = f"{HOST}/absent"
 
@@ -111,13 +113,15 @@ def test_fixture_fetch_matches_simulator_rule(
     assert got[f"{HOST}/h5"]["status"] == 410
     assert got[f"{HOST}/e404"]["status"] == 404
     assert got[f"{HOST}/e404"]["html"] == PAGES[7][2]
+    assert list(got[f"{HOST}/nosrc"]["out_links"]) == [f"{HOST}/j"]
     assert got[ABSENT]["status"] == 0
     assert got[f"{LOCAL}/h"]["html"] == "<p>local target</p>"
     assert got[f"{LOCAL}/h2"]["html"] == "<p>local target two</p>"
     assert got[f"{HOST}/a/h"]["html"] == "<p>relative target</p>"
+    assert got[f"{HOST}/a/h2"]["html"] == "<p>dot-segment target</p>"
 
 
-# (holder url, iframe src): every src shape the twins resolve
+# (holder url, iframe src): every src shape the hop rule resolves
 IFRAME_CASES = [
     (f"{HOST}/h", "https://other.example/x"),
     (f"{HOST}/h", "//blog.naver.com/PostView?id=1"),
@@ -131,17 +135,14 @@ IFRAME_CASES = [
     (HOST, "PostView"),
     (f"{HOST}?q=/a/b", "PostView"),
     (f"{HOST}/a/h?x=1", "?id=3"),
+    (f"{HOST}/a/b/h", "../x"),
+    (f"{HOST}/a/b/h", "./x"),
+    (f"{HOST}/a/h?x=1", "#f"),
 ]
 
 
-def test_iframe_twins_match_urljoin(spark):
-    """Both twins resolve an iframe src against its holder as
+def test_iframe_hop_matches_urljoin():
+    """The hop rule resolves an iframe src against its holder as
     urllib.parse.urljoin does."""
     want = [urljoin(url, src) for url, src in IFRAME_CASES]
     assert [iframe_target_py(_holder(src), url) for url, src in IFRAME_CASES] == want
-    df = spark.createDataFrame(
-        [(i, url, _holder(src)) for i, (url, src) in enumerate(IFRAME_CASES)],
-        "i int, url string, html string",
-    )
-    got = df.select("i", iframe_target_col(F.col("html"), F.col("url")).alias("t"))
-    assert [r["t"] for r in got.orderBy("i").collect()] == want

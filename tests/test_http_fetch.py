@@ -282,7 +282,7 @@ def test_live_robots_loop_end_to_end(spark, tmp_path, monkeypatch):
         )
         totals = crawl(
             spark, cat, fetcher, budgets, static_robots, max_rounds=8,
-            conf=conf, robots_fetcher=fetcher, robots_agent="newscrawler",
+            conf=conf, robots_fetcher=fetcher,
         )
 
         # robots denials, end-to-end

@@ -231,7 +231,7 @@ def test_local_budget_state_matches_distributed(spark, tmp_path):
 
     # distributed fold over the same delta
     scheduled = (
-        cat.read_round_log_delta(spark, round_no)
+        cat.read_delta(spark, "round_log", round_no)
         .filter(F.col("kind") == "order")
         .select("domain")
     )
