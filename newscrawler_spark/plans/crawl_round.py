@@ -28,6 +28,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,25 +71,65 @@ class RoundResult:
     # `round` is carried by the delta path, not a data column)
     round_log: DataFrame
     frontier_next: DataFrame
-    persisted: list = None  # frames to unpersist after the round commits
-    # the extracted frame — the round's heaviest blocks and the ONLY
-    # checkpoint the (backgroundable) docs write still reads after the
-    # foreground writes finish; released separately so the pipelined
-    # scheduler can free everything else before the next round's compile
-    # (holding a whole round's checkpoints across the overlap window was
-    # measured as a 25%-of-runtime GC storm at 32 threads)
-    persisted_heavy: list = None
+    # the round's checkpoints: `docs_input` holds the extracted frame,
+    # the only one the background docs write reads, so the scheduler
+    # frees `checkpoints` before the next round's compile and
+    # `docs_input` at commit (holding a whole round's checkpoints across
+    # the overlap window was measured as a 25%-of-runtime GC storm at
+    # 32 threads)
+    checkpoints: list
+    docs_input: list
 
     def unpersist_light(self) -> None:
-        """Release every materialized frame EXCEPT the extracted one."""
-        frames, self.persisted = self.persisted, None
+        """Release every checkpoint EXCEPT the docs write's input."""
+        frames, self.checkpoints = self.checkpoints, []
         release(frames)
 
     def unpersist(self) -> None:
-        """Release ALL the round's materialized frames (idempotent)."""
+        """Release ALL the round's checkpoints (idempotent)."""
         self.unpersist_light()
-        frames, self.persisted_heavy = self.persisted_heavy, None
+        frames, self.docs_input = self.docs_input, []
         release(frames)
+
+
+def checkpoint(df: DataFrame, owner: list) -> DataFrame:
+    """Materialize `df` once for all of its readers; `owner` records it
+    for `release`.  Every frame the crawl materializes is made here.
+
+    LAZY localCheckpoint, not persist: persist keeps the full logical
+    plan, so every later transformation re-runs CheckAnalysis over the
+    whole round lineage (hundreds of nodes x the 11-platform identity
+    CASE trees) — measured ~4 s of DRIVER time per round just
+    constructing the plan, pure fixed cost that never parallelizes.
+    localCheckpoint truncates the plan to a leaf; construction drops
+    ~35% and every downstream analysis/AQE pass shrinks with it.
+    Blocks are MEMORY_AND_DISK like persist; `release` frees them."""
+    df = df.localCheckpoint(eager=False)
+    owner.append(df)
+    # overlap materialization with downstream plan compiles: each
+    # checkpoint's toRdd costs 2-4 s of serial DRIVER Catalyst time
+    # while the executors sit idle — kick the checkpoint's compute
+    # job in a background thread NOW so it runs underneath the next
+    # sub-plan's compile instead of lazily inside the first reader.
+    # The checkpoint RDD is already compiled and shared, so the
+    # background count materializes the same blocks the readers
+    # would (FIFO-queued; content and AQE decisions are fixed at
+    # compile time — determinism is untouched, and the crawl-swap
+    # bit-identity tests assert it).  Errors are swallowed: the
+    # same lineage re-raises in the foreground reader if real.
+    # Measured at 4 cores (perfbench crawl_polite, 10 alternating
+    # pairs): without the thread, end-to-end throughput, steady
+    # throughput and round time were each worse in 9 of 10 pairs
+    # (medians -6.7 %, -2.9 %, +9.4 %).
+    InheritableThread(target=_materialize, args=(df,), daemon=True).start()
+    return df
+
+
+def _materialize(df: DataFrame) -> None:
+    try:
+        df.count()
+    except Exception:
+        pass  # foreground consumers surface real failures
 
 
 def release(frames: list | None) -> None:
@@ -127,52 +168,14 @@ def run_round(
     spark = frontier.sparkSession
 
     # The round's outputs (docs, seen, quarantine, order, next frontier)
-    # all fan out of a few pivotal frames; without materialization each
-    # delta write re-executes the whole chain (measured 5x fetch+extract
-    # per round).  In the sandbox we materialize those frames; on a
-    # cluster the same seam would checkpoint them as short-lived catalog
-    # tables.
-    #
-    # LAZY localCheckpoint, not persist: persist keeps the full logical
-    # plan, so every later transformation re-runs CheckAnalysis over the
-    # whole round lineage (hundreds of nodes x the 11-platform identity
-    # CASE trees) — measured ~4 s of DRIVER time per round just
-    # constructing the plan, pure fixed cost that never parallelizes.
-    # localCheckpoint truncates the plan to a leaf; construction drops
-    # ~35% and every downstream analysis/AQE pass shrinks with it.
-    # Blocks are MEMORY_AND_DISK like persist and are released by the
-    # ContextCleaner once the round's references are dropped.
-    persisted: list = []
-    persisted_heavy: list = []
-
-    def _p(df: DataFrame, heavy: bool = False) -> DataFrame:
-        df = df.localCheckpoint(eager=False)
-        (persisted_heavy if heavy else persisted).append(df)
-        # overlap materialization with downstream plan compiles: each
-        # checkpoint's toRdd costs 2-4 s of serial DRIVER Catalyst time
-        # while the executors sit idle — kick the checkpoint's compute
-        # job in a background thread NOW so it runs underneath the next
-        # sub-plan's compile instead of lazily inside the first write.
-        # The checkpoint RDD is already compiled and shared, so the
-        # background count materializes the same blocks the write jobs
-        # would (FIFO-queued; content and AQE decisions are fixed at
-        # compile time — determinism is untouched, and the crawl-swap
-        # bit-identity tests assert it).  Errors are swallowed: the
-        # same lineage re-raises in the foreground write if real.
-        # Measured at 4 cores (perfbench crawl_polite, 10 alternating
-        # pairs): without the thread, end-to-end throughput, steady
-        # throughput and round time were each worse in 9 of 10 pairs
-        # (medians -6.7 %, -2.9 %, +9.4 %).
-        from pyspark import InheritableThread
-
-        def _materialize(d: DataFrame = df) -> None:
-            try:
-                d.count()
-            except Exception:
-                pass  # foreground consumers surface real failures
-
-        InheritableThread(target=_materialize, daemon=True).start()
-        return df
+    # all fan out of three pivotal frames: the unseen candidates, the
+    # budget gate's ranked shards and the extracted pages.  Unmaterialized,
+    # each delta write re-executes the whole chain (measured 5x
+    # fetch+extract per round), the seen probe's applyInPandas and
+    # extract_udf included.  On a cluster the same seam would checkpoint
+    # them as short-lived catalog tables.
+    checkpoints: list = []
+    docs_input: list = []
 
     # 1-2. identity + within-round dedup
     cand = with_url_identity(frontier)
@@ -197,7 +200,7 @@ def run_round(
     # (splitting first would run the cogroup probe twice)
     if url_seen is not None:
         cand = filter_unseen(cand, url_seen, sidecar, conf.n_buckets)
-    cand = _p(cand)
+    cand = checkpoint(cand, checkpoints)
 
     # unsupported-platform rows are terminal (extractor has no dialect —
     # mirrors detect_platform → None → error, extractor.py:56-73)
@@ -216,7 +219,9 @@ def run_round(
         allowed = allowed.join(F.broadcast(trap_domains), "domain", "left_anti")
 
     # 5. budget gate → (eligible, deferred); ranked frame materialized
-    eligible, deferred = budget_gate(allowed, budgets, persist_fn=_p)
+    eligible, deferred = budget_gate(
+        allowed, budgets, persist_fn=lambda df: checkpoint(df, checkpoints)
+    )
 
     # 6. fetch + extract.  Partitioning for the fetch is the FETCHER's
     # concern: HttpFetcher salts by (domain, salt) for politeness
@@ -249,40 +254,20 @@ def run_round(
 
     from ..functions.extract import extract_udf
 
-    # coalesce bounds the persisted frame to the round's configured
-    # width: FixtureFetcher's found∪missing (×2 for the iframe hop)
-    # union inflates partition count to ~2×(corpus + request) — every
-    # downstream consumer of the persisted frame then launches one task
+    # coalesce bounds the checkpointed frame to the round's configured
+    # width: FixtureFetcher's found ∪ missing union inflates the
+    # partition count to about corpus + request partitions — every
+    # downstream consumer of the checkpoint would then launch one task
     # per partition per scan.  coalesce is shuffle-free, never raises
     # the count, and n_partitions is the engine's explicit sizing knob
     # (a cluster sizes it to total cores).
-    extracted = _p(
+    extracted = checkpoint(
         fetched.coalesce(conf.n_partitions)
         .withColumn(
             "ex", extract_udf(F.col("html"), F.col("url"), F.col("platform"))
         )
         .drop("html"),
-        heavy=True,  # the docs write's input — released at commit, after
-        # every lighter frame (see RoundResult.unpersist_light)
-    )
-    # SLIM twin of the extracted checkpoint: everything the round_log
-    # and next-frontier consumers need — which is NOT the span text.
-    # localCheckpoint blocks are row-based InternalRows, so a consumer
-    # scan reads every column's bytes regardless of projection; without
-    # the twin, the round_log and discovered scans each re-read the
-    # round's full extracted text (the heaviest frame) for a handful of
-    # skinny columns.  Building slim costs one extra scan of the heavy
-    # blocks; its two consumers then read ~10x fewer bytes — net one
-    # full-text pass saved per round, and the saving grows with page
-    # size.  docs (the only spans consumer) keeps reading the heavy
-    # frame once.
-    slim = _p(
-        extracted.select(
-            "url", "canonical_url", "domain", "rank", "status", "attempts",
-            "depth", "priority", "source_seed", "out_links",
-            F.col("ex.error").alias("ex_error"),
-            F.size("ex.spans").alias("n_spans"),
-        )
+        docs_input,  # released at commit, after every other checkpoint
     )
     ok = extracted.filter(F.col("status") == 200)
     valid = ok.filter(
@@ -347,11 +332,11 @@ def run_round(
     fetch_quarantine_error = F.when(
         F.col("status") != 200, F.concat(F.lit("http_"), F.col("status"))
     ).when(
-        F.col("ex_error").isNotNull() | (F.col("n_spans") <= 0),
-        F.coalesce(F.col("ex_error"), F.lit("empty content")),
+        F.col("ex.error").isNotNull() | (F.size("ex.spans") <= 0),
+        F.coalesce(F.col("ex.error"), F.lit("empty content")),
     )
     round_log = _log_rows(
-        slim,
+        extracted,
         seen_entry,
         _entry("order", url=F.col("url"), canonical_url=F.col("canonical_url"),
                domain=F.col("domain"), rank=F.col("rank")),
@@ -373,7 +358,7 @@ def run_round(
 
     # 10. next frontier = deferred ∪ discovered out-links
     discovered = (
-        slim.filter((F.col("status") == 200) & (F.col("depth") < conf.max_depth))
+        extracted.filter((F.col("status") == 200) & (F.col("depth") < conf.max_depth))
         .select(
             F.col("source_seed"),
             F.col("priority"),
@@ -399,6 +384,6 @@ def run_round(
         docs=docs,
         round_log=round_log,
         frontier_next=frontier_next,
-        persisted=persisted,
-        persisted_heavy=persisted_heavy,
+        checkpoints=checkpoints,
+        docs_input=docs_input,
     )

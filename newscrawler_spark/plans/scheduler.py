@@ -10,9 +10,10 @@ bit-identically (tested in tests/test_crawl.py).
 
 One path per mechanism: every delta the loop reads back comes through
 Catalog.read_delta (typed by schema.TABLES); the docs delta is always
-written on a background thread, and its round commits when that thread
-is joined; every frame the crawl materializes is freed by
-crawl_round.release, so a finished crawl() holds no checkpoint.
+written on a background thread, and its round commits when that write
+is done; every frame the crawl materializes is made by
+crawl_round.checkpoint and freed by crawl_round.release, so a finished
+crawl() holds no checkpoint.
 
 Seen-filter lifecycle: each round folds its new seen rows into the
 previous round's bloom sidecar and persists it as its own `bloom`
@@ -23,14 +24,16 @@ seen rows.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import schema
 from ..operators.seen import fold_sidecar
 from ..sources.catalog import Catalog
-from .crawl_round import FRONTIER_COLS, RoundConfig, RoundResult, release, run_round
+from .crawl_round import RoundConfig, RoundResult, checkpoint, release, run_round
 
 # Above this many rows a round's seen-sidecar and budget-state folds go
 # back to distributed jobs (driver-side DuckDB over the round_log
@@ -85,7 +88,19 @@ def seed_frontier(catalog: Catalog, seeds: DataFrame) -> None:
     the manifest hasn't committed round 0 yet)."""
     if catalog.last_round >= 0:
         return
-    catalog.write_delta(seeds.select(*FRONTIER_COLS), "frontier", 0)
+    catalog.write_delta(_as_table(seeds, "frontier"), "frontier", 0)
+
+
+def _as_table(df: DataFrame, table: str) -> DataFrame:
+    """`df` with its table's schema.TABLES type, so that every delta of
+    the table has one file schema.  `to()` selects, orders and casts the
+    columns but keeps a non-null column non-null; the union with an
+    empty frame of the table's type makes each column as nullable as
+    the type declares (the optimizer drops the empty side)."""
+    table_schema = schema.TABLES[table]
+    return df.to(table_schema).unionByName(
+        df.sparkSession.createDataFrame([], table_schema)
+    )
 
 
 def crawl(
@@ -101,8 +116,8 @@ def crawl(
 ) -> dict:
     """Run crawl rounds until the frontier drains or max_rounds.
 
-    `budgets` and `robots` are materialized once per call (an eager
-    localCheckpoint, released when crawl() returns or raises), so
+    `budgets` and `robots` are materialized once per call
+    (crawl_round.checkpoint, released when crawl() returns or raises), so
     callers need not cache them: every round reads the checkpoint
     instead of re-running their lineage in each of its gates.  A later
     crawl() call on the same catalog resumes from its manifest.
@@ -119,23 +134,17 @@ def crawl(
     Returns the final metrics dict (also persisted per round).
     """
     held: list[DataFrame] = []
+    # one thread: each round's docs write (see _crawl_rounds)
+    docs_writer = ThreadPoolExecutor(max_workers=1)
     try:
         return _crawl_rounds(
-            spark, catalog, fetcher, _hold(budgets, held), _hold(robots, held),
-            held, max_rounds, conf or RoundConfig(), header_bootstrap,
-            robots_fetcher,
+            spark, catalog, fetcher, checkpoint(budgets, held),
+            checkpoint(robots, held), held, docs_writer, max_rounds,
+            conf or RoundConfig(), header_bootstrap, robots_fetcher,
         )
     finally:
+        docs_writer.shutdown()
         release(held)
-
-
-def _hold(df: DataFrame, held: list[DataFrame]) -> DataFrame:
-    """Materialize a round-invariant input once (eager localCheckpoint:
-    truncates its lineage, as run_round's checkpoints do) and record it
-    in `held` for release when the crawl ends."""
-    df = df.localCheckpoint(eager=True)
-    held.append(df)
-    return df
 
 
 def _budget_rows(budgets: DataFrame) -> list | None:
@@ -157,6 +166,7 @@ def _crawl_rounds(
     budgets: DataFrame,
     robots: DataFrame,
     held: list[DataFrame],
+    docs_writer: ThreadPoolExecutor,
     max_rounds: int,
     conf: RoundConfig,
     header_bootstrap,
@@ -203,9 +213,9 @@ def _crawl_rounds(
     # happen when the future joins — before any N+1 WRITE — so the
     # manifest never commits a round whose deltas aren't all on disk
     # (crash ⇒ redo the uncommitted round; write_delta overwrites, so
-    # the redo is idempotent).  Incremental dedup joins the write early,
-    # because it reads the delta back; the commit still waits for the
-    # next round's compile.
+    # the redo is idempotent).  Incremental dedup waits for the write
+    # early, because it reads the delta back; the commit still waits for
+    # the next round's compile.
     pending: dict | None = None
 
     def _finalize_pending(final: bool = False) -> None:
@@ -213,7 +223,7 @@ def _crawl_rounds(
         if pending is None:
             return
         p, pending = pending, None
-        p["counters"]["docs"] = p["join"]()
+        p["counters"]["docs"] = p["docs"].result()
         if final:
             # no later round overlapped the write tail — attribute it
             p["counters"]["wall_sec"] = round(time.time() - p["t_round"], 3)
@@ -278,18 +288,17 @@ def _crawl_rounds(
             )
             robots_done.update(doms)
             if new_rules:
-                # re-materialize the rules only when they changed, and
-                # release the table this replaces: nothing reads it
-                # once the previous round's foreground writes are done
-                # (its backgrounded docs write reads a checkpoint)
-                prior, robots = robots, _hold(
+                # re-materialize the rules only when they changed.  The
+                # table this replaces stays held until the crawl ends:
+                # the lazy checkpoint reads its blocks until it is
+                # computed, and a rules table is KB-scale (the gate
+                # broadcasts it)
+                robots = checkpoint(
                     robots.unionByName(
                         spark.createDataFrame(new_rules, schema.ROBOTS)
                     ),
                     held,
                 )
-                held.remove(prior)
-                release([prior])
 
         result: RoundResult = run_round(
             frontier, url_seen, sidecar, budgets_round, robots, fetcher,
@@ -307,11 +316,12 @@ def _crawl_rounds(
         # scheduler/memory and run 4x slower than back-to-back; the ONLY
         # exception is the docs write, which is spawned LAST and overlaps
         # exclusively with the next round's driver compile).
-        # Per-round Spark jobs: docs, round_log (seen ∪ order ∪
-        # quarantine in ONE partitioned write), frontier, sidecar,
-        # budget_state — 5, down from 8; the metrics row is written
-        # driver-side (pyarrow), and per-table counts ride on the two
-        # big writes as Observations.
+        # Per-round write jobs: round_log (seen ∪ order ∪ quarantine in
+        # ONE partitioned write), frontier and docs — 3.  The sidecar and
+        # budget_state fold on the driver (no Spark job) unless the round
+        # is over LOCAL_FOLD_MAX_ROWS, the metrics row is written
+        # driver-side (pyarrow), and per-table counts ride on the big
+        # writes as Observations.
         log_counts = catalog.write_round_log(result.round_log, round_no)
         n_next = catalog.write_delta(result.frontier_next, "frontier", round_no + 1)
 
@@ -354,7 +364,10 @@ def _crawl_rounds(
         else:
             scheduled = log_round.filter(F.col("kind") == "order").select("domain")
             catalog.write_delta(
-                budget_accounting(budgets_round, scheduled, round_no),
+                _as_table(
+                    budget_accounting(budgets_round, scheduled, round_no),
+                    "budget_state",
+                ),
                 "budget_state",
                 round_no,
             )
@@ -399,32 +412,19 @@ def _crawl_rounds(
         # block sets never coexist (measured as a 25%-of-runtime GC
         # storm at 32 threads when they did)
         result.unpersist_light()
-        from pyspark import InheritableThread
-
-        box: dict = {}
-
-        def _write_docs(res=result, rn=round_no, out=box) -> None:
-            try:
-                out["n"] = catalog.write_delta(res.docs, "docs", rn)
-            except BaseException as exc:  # noqa: BLE001 — re-raised on join
-                out["exc"] = exc
-
-        th = InheritableThread(target=_write_docs, daemon=True)
-        th.start()
-
-        def _join(t=th, out=box) -> int:
-            t.join()
-            if "exc" in out:
-                raise out["exc"]
-            return out["n"]
+        # .result() returns the row count or re-raises the write's error
+        docs = docs_writer.submit(
+            inheritable_thread_target(spark)(catalog.write_delta),
+            result.docs, "docs", round_no,
+        )
 
         # optional per-round incremental dedup: this round's docs delta
         # vs the accumulated corpus index (the 100 TB pipeline's
         # per-ingest dedup shape) — batch = the just-written docs delta
-        # (re-read once the write joins, so the round lineage isn't
+        # (re-read once the write is done, so the round lineage isn't
         # re-executed), history = the committed index/signature deltas
         # of earlier rounds
-        if conf.dedup_docs and _join() > 0:
+        if conf.dedup_docs and docs.result() > 0:
             from ..operators.dedup import doc_text, incremental_neardup
 
             # repartition BEFORE the signature aggregation: the docs
@@ -439,24 +439,25 @@ def _crawl_rounds(
                 .select("doc_id", doc_text().alias("text"))
                 .repartition(conf.n_partitions)
             )
+            dedup_frames: list[DataFrame] = []
             dd = incremental_neardup(
                 batch,
                 catalog.read_table(spark, "dedup_index", upto_round=round_no - 1),
                 catalog.read_table(spark, "dedup_sigs", upto_round=round_no - 1),
                 bucket_cap=CRAWL_DEDUP_BUCKET_CAP,
-                persist_fn=lambda df: df.localCheckpoint(eager=False),
+                persist_fn=lambda df: checkpoint(df, dedup_frames),
             )
             counters["neardup_matches"] = catalog.write_delta(
                 dd["matches"], "neardup", round_no
             )
             catalog.write_delta(dd["index_delta"], "dedup_index", round_no)
             catalog.write_delta(dd["sigs_delta"], "dedup_sigs", round_no)
-            release([dd["index_delta"], dd["sigs_delta"]])
+            release(dedup_frames)
 
         pending = {
             "round_no": round_no,
             "counters": counters,
-            "join": _join,
+            "docs": docs,
             "result": result,
             "t_round": t_round,
         }

@@ -61,15 +61,18 @@ DOCS = T.StructType(
 # Frontier — the scheduler input/output (one row per candidate fetch)
 # ---------------------------------------------------------------------------
 
+# Every column is nullable, as every frontier delta's file declares it:
+# a round's next frontier unions the deferred rows (read back from a
+# file, so nullable) with out-links (an exploded array, so `url` too).
 FRONTIER = T.StructType(
     [
-        T.StructField("url", T.StringType(), False),
+        T.StructField("url", T.StringType(), True),
         T.StructField("domain", T.StringType(), True),
-        T.StructField("priority", T.IntegerType(), False),  # lower = sooner
-        T.StructField("depth", T.IntegerType(), False),     # 0 for seeds
-        T.StructField("seq", T.LongType(), False),          # deterministic tie-break
-        T.StructField("round_added", T.IntegerType(), False),
-        T.StructField("attempt", T.IntegerType(), False),   # retry counter (<=3)
+        T.StructField("priority", T.IntegerType(), True),  # lower = sooner
+        T.StructField("depth", T.IntegerType(), True),     # 0 for seeds
+        T.StructField("seq", T.LongType(), True),          # deterministic tie-break
+        T.StructField("round_added", T.IntegerType(), True),
+        T.StructField("attempt", T.IntegerType(), True),   # retry counter (<=3)
         T.StructField("source_seed", T.StringType(), True),
     ]
 )

@@ -394,6 +394,33 @@ def test_every_delta_reads_back_with_its_schema(spark, aimd_result):
             assert columns(df.schema) == columns(table_schema), (table, round_no)
 
 
+def test_one_file_schema_per_table(spark, world, aimd_result, monkeypatch,
+                                   tmp_path_factory):
+    """Every frontier and budget_state delta of a 4-round AIMD crawl has
+    the same parquet file schema (names, types and nullability), in every
+    round and at both local-fold gates: the seed frontier is written as
+    the later next-frontier deltas are, and the distributed budget_state
+    fold as the driver-side one."""
+    import pyarrow.parquet as pq
+
+    seeds, pages, budgets, robots = world
+    monkeypatch.setattr(scheduler, "LOCAL_FOLD_MAX_ROWS", 0)
+    cat_0 = Catalog(tmp_path_factory.mktemp("aimd_gate_0"))
+    seed_frontier(cat_0, seeds)
+    crawl(spark, cat_0, FixtureFetcher(pages), budgets, robots,
+          max_rounds=MAX_ROUNDS, conf=AIMD_CONF)
+
+    for table in ("frontier", "budget_state"):
+        files = [f for cat in (aimd_result[0], cat_0)
+                 for f in (cat.root / table).glob("round=*/*.parquet")]
+        assert len({f.parent for f in files}) >= 2 * MAX_ROUNDS, (table, files)
+        file_schemas = {
+            tuple((c.name, str(c.type), c.nullable) for c in pq.read_schema(f))
+            for f in files
+        }
+        assert len(file_schemas) == 1, (table, file_schemas)
+
+
 @pytest.mark.parametrize("gate", [None, 0], ids=["default_gate", "gate_0"])
 def test_adaptive_budgets_are_resumable_state(spark, world, aimd_result, gate,
                                               monkeypatch, tmp_path_factory):
@@ -501,3 +528,41 @@ def test_crawl_frees_every_checkpoint(spark, dedup_docs, tmp_path):
     assert sorted(totals) == [0, 1]
     assert not dedup_docs or any("neardup_matches" in c for c in totals.values())
     assert after <= before, sorted(after - before)
+
+
+def test_round_checkpoints_and_held_inputs(spark, world, monkeypatch, tmp_path):
+    """crawl() materializes its two round-invariant inputs, budgets and
+    robots, once, and each round three frames: the unseen candidates,
+    the budget gate's ranked shards and the extracted pages.  Every one
+    is a lazy checkpoint."""
+    seeds, pages, budgets, robots = world
+    frame_class = type(seeds)
+    where = ["crawl"]
+    calls = []  # (caller, eager) of each localCheckpoint
+
+    real_checkpoint = frame_class.localCheckpoint
+
+    def counted_checkpoint(self, eager=True, *args, **kwargs):
+        calls.append((where[0], eager))
+        return real_checkpoint(self, eager, *args, **kwargs)
+
+    real_round = scheduler.run_round
+
+    def tagged_round(*args, **kwargs):
+        where[0] = "round"
+        try:
+            return real_round(*args, **kwargs)
+        finally:
+            where[0] = "crawl"
+
+    monkeypatch.setattr(frame_class, "localCheckpoint", counted_checkpoint)
+    monkeypatch.setattr(scheduler, "run_round", tagged_round)
+    cat = Catalog(tmp_path / "cat")
+    seed_frontier(cat, seeds)
+    totals = crawl(spark, cat, FixtureFetcher(pages), budgets, robots,
+                   max_rounds=2, conf=CONF)
+
+    assert sorted(totals) == [0, 1]
+    assert [c for c, _ in calls].count("crawl") == 2, calls
+    assert [c for c, _ in calls].count("round") == 3 * len(totals), calls
+    assert not any(eager for _, eager in calls), calls

@@ -104,7 +104,7 @@ def test_budget_gate_two_stage_topk_plan_and_equivalence(spark):
 def test_no_persisted_round_frame_carries_html(spark):
     """The raw HTML corpus must never be materialized past extraction:
     run_round drops `html` before the fused fetch+extract frame is
-    checkpointed (crawl_round.py), so the round's persisted frames —
+    checkpointed (crawl_round.py), so the round's three checkpoints —
     the only buffers that hold executor memory across actions — are
     html-free.  At 100 TB the html column IS the dataset; persisting it
     a second time doubles the round's memory-bandwidth cost (the
@@ -120,8 +120,9 @@ def test_no_persisted_round_frame_carries_html(spark):
     with FixtureFetcher(pages) as fetcher:
         result = run_round(frontier, None, None, budgets, robots, fetcher, 0, conf)
         assert result.round_log.count() > 0  # force the pipeline
-        assert result.persisted, "round should materialize pivotal frames"
-        for df in result.persisted:
+        frames = result.checkpoints + result.docs_input
+        assert len(frames) == 3, "round should materialize its pivotal frames"
+        for df in frames:
             assert "html" not in df.columns, (
                 "persisted round frame carries the raw html corpus: "
                 f"{df.columns}"
